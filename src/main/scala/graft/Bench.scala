@@ -20,22 +20,13 @@ import scala.collection.mutable.{ArrayBuffer, LinkedHashSet}
   *    `SPARK_GRAFT_ONLY`, reporting per-query rows as TSV to
   *    `SPARK_GRAFT_OUT` instead of printing the merged JSON line.
   *
-  * SELF-ADJUDICATION (r12 VERDICT #1): chunking fixed session-age
-  * inflation but not CO-TENANCY inflation — r11/r12 each published
-  * several numbers 2.5–25× above what the same jar measures solo
-  * (`filter_cel_time` 13.8 s driver-run vs 0.55 s solo in r12), and a
-  * judge had to hand-A/B them. Now every query records process-CPU
-  * seconds, GC time and system load alongside wall time, and the
-  * coordinator re-runs suspects in a solo child JVM:
-  *   - `wall > 3× prior round's committed wall` (bench_detail_r<k>.json)
-  *     — the cross-round regression the judge would otherwise chase;
-  *   - `wall/cpu > 1.5` with wall ≥ 2 s — the process spent most of the
-  *     interval off-CPU, i.e. waiting on something that isn't our plan.
-  *  Both the published and the solo number land in the detail artifact
-  *  with a `reproduced` (solo confirms the cost is real) or
-  *  `environmental` (solo < published/1.5 — the chunk number was load
-  *  noise) verdict. Retries are capped (and the cap logged) so a noisy
-  *  machine cannot double the bench wall time.
+  * Every query records process-CPU seconds, GC time and system load
+  * alongside wall time, so a reader of the detail artifact can tell a
+  * plan cost (cpu ≈ busy threads × wall) from a wait (wall ≫ cpu). The
+  * published numbers are exactly what the chunks measured, and the bench
+  * reads no earlier artifact. Comparing two runs is
+  * `tools/compare_bench_runs.py`'s job (two detail artifacts) or
+  * `perfbench/compare.py`'s (the gated benchmark).
   *
   * A standalone run with `SPARK_GRAFT_ONLY` set (the documented one-query
   * iteration loop) or `SPARK_GRAFT_CHUNK=0` behaves exactly as before:
@@ -55,20 +46,17 @@ object Bench {
       ratio: Double, sec: Double, base: Double, cpu: Double,
       baseCpu: Double)
 
+  /** One probe histogram bucket: (tag, query, log2_width, n_groups,
+    * max_width, uncapped_pairs, capped_pairs).
+    */
+  private type HistRow = (String, String, Int, Long, Long, Long, Long)
+
   /** Every scale-section tag, in artifact order: 10× fresh-documents, 26×
     * capped ops, 100× headline capped ops, and the 10× FRESH-EVENTS stream
     * tier (r15 VERDICT #2: the duplicate-heavy events corpus only measured
     * one regime).
     */
   private[graft] val ScaleTags = Seq("scale", "scale26", "scale100", "scaleF")
-
-  /** One adjudicated suspect: the number the chunk run published, the
-    * solo-child re-measurement, and the verdict. tag is "base" or the
-    * scale-section tag.
-    */
-  private case class Adj(tag: String, name: String, trigger: String,
-      published: Double, publishedCpu: Double,
-      solo: Double, soloCpu: Double, verdict: String)
 
   private val osBean: Option[com.sun.management.OperatingSystemMXBean] =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
@@ -288,227 +276,6 @@ object Bench {
       if (existing.isEmpty) "0" else (existing.max + 1).toString
     }
 
-  /** The `{...}` block starting at the first `{` at/after `from`, by brace
-    * counting (our detail JSON puts no braces inside strings).
-    */
-  private[graft] def braceBlock(txt: String, from: Int): String = {
-    var j = txt.indexOf('{', from)
-    if (j < 0) return ""
-    val start = j
-    var depth = 0
-    while (j < txt.length) {
-      txt.charAt(j) match {
-        case '{' => depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) return txt.substring(start, j + 1)
-        case _ => ()
-      }
-      j += 1
-    }
-    ""
-  }
-
-  /** Per-query (wall, cpu) seconds from the newest committed
-    * `bench_detail_r<k>.json` with k ≤ the current round — the baseline
-    * the adjudicator compares against. Same-round artifacts are PREFERRED
-    * over the previous round's (r16): the builder commits a full-run
-    * artifact before the driver's official run, and baselining the
-    * driver's run against those same-code numbers makes the wall/cpu
-    * triggers fire on environment inflation alone, instead of mixing it
-    * with a round's worth of code changes. (This run's own artifact is
-    * only written at the very end, so the read never sees itself.) Base
-    * queries key as their name; scale rows as "tag:name". Parses both
-    * the pre-r13 scalar format (`"q":1.234` — cpu recorded as -1) and
-    * the r13+ object format (`"q":{"sec":1.234,"cpu_sec":...}`).
-    */
-  private[graft] def priorDetail(round: Int,
-      dir: java.io.File = new java.io.File(".")): Map[String, (Double, Double)] = try {
-    val pat = "bench_detail_r(\\d+)\\.json".r
-    val files = Option(dir.listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .flatMap(f => pat.findFirstMatchIn(f.getName).map(m => m.group(1).toInt -> f))
-      .filter(_._1 <= round)
-    if (files.isEmpty) Map.empty
-    else {
-      // a real JSON reader, not regex scraping (ADVICE r19: the regexes
-      // assumed key order and nesting depth; a writer-side reordering
-      // silently yielded an empty baseline)
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(files.maxBy(_._1)._2.toPath))
-      val out = scala.collection.mutable.Map.empty[String, (Double, Double)]
-      import scala.jdk.CollectionConverters._
-      val qs = root.path("queries")
-      if (qs.isObject) qs.fields.asScala.foreach { e =>
-        val v = e.getValue
-        if (v.isObject) // r13+ {"sec":…,"cpu_sec":…}
-          out(e.getKey) = (v.path("sec").asDouble(-1.0),
-            v.path("cpu_sec").asDouble(-1.0))
-        else if (v.isNumber) // pre-r13 scalar seconds
-          out(e.getKey) = (v.asDouble, -1.0)
-      }
-      ScaleTags.foreach { tag =>
-        val rows = root.path(tag).path("rows")
-        if (rows.isObject) rows.fields.asScala.foreach { e =>
-          val v = e.getValue
-          if (v.isObject && v.has("sec"))
-            out(s"$tag:${e.getKey}") = (v.path("sec").asDouble(-1.0),
-              v.path("cpu_sec").asDouble(-1.0))
-        }
-      }
-      out.toMap
-    }
-  } catch { case e: Throwable =>
-    System.err.println(s"[bench] prior-detail parse failed: ${e.getMessage}")
-    Map.empty
-  }
-
-  /** Chronically measurement-distorted row families (VERDICT r18 #2):
-    * query names whose adjudication verdict was `cpu-divergent*`,
-    * `chunk-deflated`, or `solo-first` in BOTH of the two newest
-    * committed detail artifacts (consecutive evidence — one bad round is
-    * co-tenancy luck, two is a chunk-placement property of the query
-    * mix). The coordinator measures these families in their own solo
-    * child FROM THE START and publishes the solo number — e.g.
-    * `text_html_extract`'s 10× wall was chunk-DEFLATED three rounds
-    * running (published ~2 s vs solo ~7–8 s), which a reader of the
-    * published rows had no way to see without the adjudication rows.
-    * `solo-first` itself counts as flagged so graduation is sticky: a
-    * graduated family keeps its solo lane rather than oscillating back
-    * into a chunk the next round.
-    */
-  private[graft] def chronicFamilies(round: Int,
-      dir: java.io.File = new java.io.File(".")): Set[String] = try {
-    val pat = "bench_detail_r(\\d+)\\.json".r
-    val byRound = Option(dir.listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .flatMap(f => pat.findFirstMatchIn(f.getName).map(m =>
-        m.group(1).toInt -> f))
-      .filter(_._1 <= round)
-      .groupBy(_._1).view.mapValues(_.head._2).toMap
-    val rounds = byRound.keys.toSeq.sorted.reverse.take(2)
-    if (rounds.size < 2) Set.empty
-    else {
-      // real JSON parse (ADVICE r19: the old regex assumed "query"
-      // preceded "verdict" and that the first ']' closed the array — a
-      // writer-side reordering silently emptied the chronic set)
-      def flagged(f: java.io.File): Set[String] = {
-        import scala.jdk.CollectionConverters._
-        val txt = java.nio.file.Files.readString(f.toPath)
-        val adj = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(txt).path("adjudication")
-        if (!adj.isArray) {
-          if (txt.contains("\"adjudication\""))
-            System.err.println(s"[bench] WARNING: ${f.getName} has an " +
-              "adjudication section that did not parse as an array — " +
-              "chronic detection is blind to it")
-          Set.empty
-        } else adj.elements.asScala
-          .filter { row =>
-            val v = row.path("verdict").asText("")
-            v.startsWith("cpu-divergent") || v == "chunk-deflated" ||
-              v == "solo-first" || v.startsWith("unsettled")
-          }
-          .map(_.path("query").asText(""))
-          .filter(_.nonEmpty).toSet
-      }
-      flagged(byRound(rounds(0))).intersect(flagged(byRound(rounds(1))))
-    }
-  } catch { case e: Throwable =>
-    System.err.println(s"[bench] chronic-family parse failed: ${e.getMessage}")
-    Set.empty
-  }
-
-  /** The chronic-lane sanity gate's divergence rule (r20, VERDICT r19
-    * wrong #1): a chronic solo disagrees with the prior committed solo
-    * when wall differs >2× in either direction at ≥ 2 s magnitude
-    * (either side), or cpu differs >2× at ≥ 5 cpu-s — the same
-    * materiality floors verdictOf uses, so sub-second jitter and
-    * unknown-cpu rows never trigger a re-run. No prior row = no gate
-    * (a new query has nothing to disagree with).
-    */
-  private[graft] def chronicDiverges(p: Option[(Double, Double)],
-      wall: Double, cpu: Double): Boolean = p.exists { case (pw, pc) =>
-    val wallDiv = math.max(wall, pw) >= 2.0 &&
-      (wall > 2 * pw || wall < pw / 2)
-    val cpuDiv = pc > 0 && cpu > 0 && math.max(cpu, pc) >= 5.0 &&
-      (cpu > 2 * pc || cpu < pc / 2)
-    wallDiv || cpuDiv
-  }
-
-  /** Is this measurement a suspect, and why. `prior` is the query's
-    * (wall, cpu) seconds in the newest committed detail artifact (None =
-    * new query). Triggers: wall > 3× prior (regressed — or inflated this
-    * round); wall far BELOW prior (the PRIOR committed number was the
-    * anomaly) — two distinct rules with distinct labels, so the suspects
-    * list names the condition that actually held: `wall<prior/3` (any
-    * prior ≥ 0.75 s) and `wall<prior/2` (prior ≥ 2 s — a large committed
-    * number merely halving is already the contradiction a judge would
-    * otherwise have to chase); cpu > 2× prior cpu at ≥ 5 cpu-sec (r15
-    * VERDICT #2: `dedup_minhash_sig` tripled its CPU on unchanged code and
-    * the wall triggers' 1.5–3× blind spot let it ship unexamined — CPU is
-    * the co-tenancy-resistant signal, so a doubling at real magnitude is
-    * worth one solo child even when wall stayed under 3×); wall/cpu > 1.5
-    * on a ≥ 2 s query (the process spent most of the interval off-CPU —
-    * co-tenancy, not plan cost). Floors keep a noisy machine from
-    * queueing dozens of sub-second retries whose absolute error is
-    * meaningless.
-    */
-  private[graft] def triggerOf(prior: Option[(Double, Double)], wall: Double,
-      cpu: Double): Option[String] = {
-    val priorWall = prior.map(_._1)
-    val priorCpu = prior.map(_._2).filter(_ > 0)
-    val regressed = priorWall.filter(pv => wall >= 0.75 && wall > 3 * pv)
-    // two distinct prior-inflation rules; the label must name the rule that
-    // actually fired (ADVICE r13: a /2-rule hit labeled "wall<prior/3"
-    // records a condition that did not hold)
-    val priorInflated3 = priorWall.filter(pv => pv >= 0.75 && wall < pv / 3)
-    val priorInflated2 = priorWall.filter(pv => pv >= 2.0 && wall < pv / 2)
-    val cpuRegressed = priorCpu.filter(pc => cpu >= 5.0 && cpu > 2 * pc)
-    if (regressed.isDefined) Some(f"wall>3x_prior(${regressed.get}%.2f)")
-    else if (priorInflated3.isDefined)
-      Some(f"wall<prior/3(${priorInflated3.get}%.2f)")
-    else if (priorInflated2.isDefined)
-      Some(f"wall<prior/2(${priorInflated2.get}%.2f)")
-    else if (cpuRegressed.isDefined)
-      Some(f"cpu>2x_prior(${cpuRegressed.get}%.1f)")
-    else if (wall >= 2.0 && cpu > 0 && wall / cpu > 1.5) Some("wall/cpu>1.5")
-    else None
-  }
-
-  /** Three-valued adjudication verdict (r13 VERDICT #1). `environmental`:
-    * solo < published/1.5 — the chunk number was load noise, the query is
-    * cheaper than published. `chunk-deflated`: solo > published×1.5 — the
-    * chunk number was JVM/page-cache warmth, the query is MORE expensive
-    * than published. `reproduced`: solo within 1.5× either way. In every
-    * resolved case the SOLO number is authoritative (see coordinate):
-    * a solo child is a cold JVM with no sibling-query warmth, which is
-    * what a real per-query deployment pays.
-    *
-    * r18 (VERDICT r17 #3): the wall comparison alone can mask a CPU
-    * story — the keep_best 100× row produced three mutually inconsistent
-    * (wall, cpu) profiles on unchanged code, and the adjudicator adopted
-    * solo walls while the cpu said the two runs did 26× different WORK.
-    * When both cpu numbers are known and material (≥ 5 cpu-s on either
-    * side), a >2× cpu disagreement makes the row `cpu-divergent(<wall>)`:
-    * not reproduced — investigate; the solo number is NEVER silently
-    * adopted for such a row (coordinate keeps the published number and
-    * the detail artifact carries both).
-    */
-  private[graft] def verdictOf(published: Double, solo: Double,
-      publishedCpu: Double = -1.0, soloCpu: Double = -1.0): String = {
-    val wall =
-      if (solo < published / 1.5) "environmental"
-      else if (solo > published * 1.5) "chunk-deflated"
-      else "reproduced"
-    val cpuKnown = publishedCpu > 0 && soloCpu > 0
-    val cpuMaterial = math.max(publishedCpu, soloCpu) >= 5.0
-    if (cpuKnown && cpuMaterial &&
-        (soloCpu > 2 * publishedCpu || publishedCpu > 2 * soloCpu))
-      s"cpu-divergent($wall)"
-    else wall
-  }
-
   /** Fork one child JVM running `graft.Bench` with `env` merged in; child
     * stdout (Spark console noise) goes to a temp log so it cannot pollute
     * the coordinator's stdout JSON line, stderr streams through for
@@ -541,23 +308,12 @@ object Bench {
     (rc, rows)
   }
 
-  /** Fork one child JVM per chunk; stream progress; merge TSV results;
-    * adjudicate suspects in solo children.
+  /** Fork one child JVM per chunk; stream progress; merge the chunks' TSV
+    * rows into the detail artifact and the stdout line.
     */
   private def coordinate(sfDir: String, chunkSize: Int): Unit = {
     val loadStart = loadAvg
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    // chronic solo-first lane (VERDICT r18 #2): families flagged
-    // cpu-divergent/chunk-deflated/solo-first in the two newest
-    // committed artifacts never enter a chunk — each is measured in its
-    // own cold child and the solo number IS the published number
-    val chronic = roundNumber.toIntOption
-      .map(chronicFamilies(_)).getOrElse(Set.empty)
-      .intersect(names.toSet)
-    if (chronic.nonEmpty)
-      System.err.println("[bench] chronic solo-first families (flagged in " +
-        s"2 consecutive rounds): ${chronic.toSeq.sorted.mkString(", ")}")
-    val chunks = names.filterNot(chronic).grouped(chunkSize).toSeq
+    val chunks = SparkEntry.queries.keys.toSeq.sorted.grouped(chunkSize).toSeq
     // invalidate factor-corpus markers: each bench run synthesizes fresh
     // (testdata may have changed under the same path between rounds); the
     // FIRST child touching a factor rebuilds it, later children reuse
@@ -568,33 +324,7 @@ object Bench {
     val qMeas = ArrayBuffer.empty[(String, Meas)]
     val failed = LinkedHashSet.empty[String]
     val scaleRows = ArrayBuffer.empty[ScaleRow]
-    val histRows = ArrayBuffer.empty[(String, String, Int, Long, Long, Long, Long)]
-    // `chunkRun` gates the round-artifact side effects: only CHUNK children
-    // contribute to `failed` and `histRows`. A solo adjudication re-run
-    // that dies must not retro-mark a chunk-successful query as failed
-    // (phantom correctness regression in the artifact), and its re-emitted
-    // histogram rows must not duplicate the chunk's.
-    def ingest(rows: Seq[Array[String]],
-        into: (ArrayBuffer[(String, Meas)], ArrayBuffer[ScaleRow]),
-        chunkRun: Boolean,
-        histInto: Option[ArrayBuffer[(String, String, Int, Long, Long, Long, Long)]] = None): Set[String] = {
-      val reported = scala.collection.mutable.Set.empty[String]
-      rows.foreach {
-        case Array("Q", n, w, c, g, l0, l1) =>
-          into._1 += (n -> Meas(w.toDouble, c.toDouble, g.toLong,
-            l0.toDouble, l1.toDouble))
-          reported += n
-        case Array("F", n) => if (chunkRun) failed += n
-        case Array("S", tag, fac, n, r, sec, base, cpu, baseCpu) =>
-          into._2 += ScaleRow(tag, fac.toInt, n, r.toDouble, sec.toDouble,
-            base.toDouble, cpu.toDouble, baseCpu.toDouble)
-        case Array("H", tag, n, lw, ng, mw, up, cp) =>
-          histInto.foreach(_ += ((tag, n, lw.toInt, ng.toLong, mw.toLong,
-            up.toLong, cp.toLong)))
-        case _ => ()
-      }
-      reported.toSet
-    }
+    val histRows = ArrayBuffer.empty[HistRow]
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       System.err.println(
         s"[bench] chunk ${i + 1}/${chunks.size}: ${chunk.head} .. ${chunk.last}")
@@ -603,265 +333,41 @@ object Bench {
       if (rc != 0)
         System.err.println(
           s"[bench] chunk ${i + 1}: unreported queries count as failed")
-      val reported = ingest(rows, (qMeas, scaleRows), chunkRun = true,
-        histInto = Some(histRows))
+      val reported = scala.collection.mutable.Set.empty[String]
+      rows.foreach {
+        case Array("Q", n, w, c, g, l0, l1) =>
+          qMeas += (n -> Meas(w.toDouble, c.toDouble, g.toLong,
+            l0.toDouble, l1.toDouble))
+          reported += n
+        case Array("F", n) => failed += n
+        case Array("S", tag, fac, n, r, sec, base, cpu, baseCpu) =>
+          scaleRows += ScaleRow(tag, fac.toInt, n, r.toDouble, sec.toDouble,
+            base.toDouble, cpu.toDouble, baseCpu.toDouble)
+        case Array("H", tag, n, lw, ng, mw, up, cp) =>
+          histRows += ((tag, n, lw.toInt, ng.toLong, mw.toLong, up.toLong,
+            cp.toLong))
+        case _ => ()
+      }
       // a child that died mid-chunk (OOM, hard JVM crash) reports nothing
       // for its remaining queries — those are failures, not free queries
       chunk.filterNot(reported).foreach(failed += _)
     }
-
-    // the prior-round baseline is needed BEFORE the chronic lane now —
-    // the sanity gate below compares chronic solos against it.
-    // SPARK_GRAFT_ROUND is free-form env input and only becomes an Int
-    // here; a non-numeric value ("r13") must degrade to no-prior-baseline
-    // adjudication, not crash the coordinator AFTER the whole chunk sweep
-    val round = roundNumber
-    val prior = round.toIntOption.map(priorDetail(_)).getOrElse {
-      System.err.println(
-        s"[bench] non-numeric round '$round'; adjudicating on wall/cpu only")
-      Map.empty[String, (Double, Double)]
-    }
-    if (prior.isEmpty)
-      System.err.println("[bench] no prior detail artifact; " +
-        "adjudicating on wall/cpu only")
-
-    // ---- chronic solo-first measurement (VERDICT r18 #2) ----
-    // one cold child per chronic family, base + its default tiers; the
-    // adopted run's rows ingest as THE round's numbers and an Adj row per
-    // measured row records the lane in the artifact.
-    //
-    // SANITY GATE (r20, VERDICT r19 wrong #1): the chronic lane's solo IS
-    // the published number, so a disturbed child published dedup_keep_best
-    // 100× at 58.6 s/1364 cpu-s against nine prior same-code measurements
-    // of 14–18 s/57–67 cpu-s with nothing flagging it. Now every chronic
-    // row is compared against the prior committed artifact: a >2× wall
-    // (at ≥ 2 s magnitude) or >2× cpu (at ≥ 5 cpu-s) disagreement in
-    // either direction triggers ONE re-run in a second cold child, the
-    // lower-total-wall run is adopted WHOLE (base + tiers from one JVM —
-    // never a mixed-regime ratio), and any adopted row still disagreeing
-    // with the prior publishes verdict `unsettled` with both runs' numbers
-    // in the adjudication row instead of silently standing.
-    val chronicAdj = ArrayBuffer.empty[Adj]
-    chronic.toSeq.sorted.foreach { name =>
-      System.err.println(s"[bench] chronic $name: measuring in its own solo child")
-      def soloRun(label: String): (ArrayBuffer[(String, Meas)],
-          ArrayBuffer[ScaleRow],
-          ArrayBuffer[(String, String, Int, Long, Long, Long, Long)],
-          Set[String]) = {
-        val q = ArrayBuffer.empty[(String, Meas)]
-        val s = ArrayBuffer.empty[ScaleRow]
-        val h = ArrayBuffer.empty[(String, String, Int, Long, Long, Long, Long)]
-        val (_, rows) = spawnChild(Map("SPARK_GRAFT_ONLY" -> name), label)
-        val rep = ingest(rows, (q, s), chunkRun = false, histInto = Some(h))
-        (q, s, h, rep)
-      }
-      val (q1, s1, h1, rep1) = soloRun(s"chronic_$name")
-      if (!rep1(name)) { failed += name }
-      else {
-        def priorOf(tag: String) =
-          prior.get(if (tag == "base") name else s"$tag:$name")
-        def rowsOfRun(q: ArrayBuffer[(String, Meas)],
-            s: ArrayBuffer[ScaleRow]): Seq[(String, Double, Double)] =
-          q.filter(_._1 == name).map(m => ("base", m._2.wall, m._2.cpu)).toSeq ++
-            s.filter(_.name == name).map(r => (r.tag, r.sec, r.cpu)).toSeq
-        val anyDiv = rowsOfRun(q1, s1).exists { case (tag, w, c) =>
-          chronicDiverges(priorOf(tag), w, c)
-        }
-        val (aq, as, ah, oq, os, runTag) =
-          if (!anyDiv) (q1, s1, h1, q1, s1, "solo-first")
-          else {
-            System.err.println(s"[bench] chronic $name disagrees >2x with " +
-              "the prior committed solo; re-running once before publishing")
-            val (q2, s2, h2, rep2) = soloRun(s"chronic2_$name")
-            if (!rep2(name)) (q1, s1, h1, q1, s1, "rerun-died")
-            else {
-              val w1 = rowsOfRun(q1, s1).map(_._2).sum
-              val w2 = rowsOfRun(q2, s2).map(_._2).sum
-              if (w2 < w1) (q2, s2, h2, q1, s1, "rerun")
-              else (q1, s1, h1, q2, s2, "rerun")
-            }
-          }
-        qMeas ++= aq; scaleRows ++= as; histRows ++= ah
-        // one Adj row per adopted measurement; when the gate fired, BOTH
-        // runs' numbers ride the row (published = the run NOT adopted,
-        // solo = the adopted number the artifact publishes)
-        def other(tag: String): (Double, Double) =
-          if (runTag == "solo-first") (-1.0, -1.0)
-          else rowsOfRun(oq, os).find(_._1 == tag)
-            .map(r => (r._2, r._3)).getOrElse((-1.0, -1.0))
-        rowsOfRun(aq, as).foreach { case (tag, w, c) =>
-          // verdict stays a closed vocabulary (the stdout line groups by
-          // it); the prior wall the row disagreed with rides the trigger
-          val verdict =
-            if (runTag == "solo-first") "solo-first"
-            else if (chronicDiverges(priorOf(tag), w, c)) "unsettled"
-            else "solo-first"
-          val (pw, pc) = other(tag)
-          chronicAdj += Adj(tag, name,
-            if (runTag == "solo-first") "chronic(2-rounds)"
-            else f"chronic-vs-prior>2x($runTag,prior=${priorOf(tag).map(_._1).getOrElse(-1.0)}%.2f)",
-            pw, pc, w, c, verdict)
-        }
-      }
-    }
-
-    // ---- adjudication (r12 VERDICT #1) ----
-    // a suspect is (tag, name, published wall, published cpu, trigger) —
-    // see triggerOf for the trigger matrix; the cap below bounds total
-    // retry wall time and is LOGGED when it drops suspects
-    val baseSuspects = qMeas.flatMap { case (n, m) =>
-      // a chronic row is ALREADY a solo number — re-adjudicating it
-      // would spawn a second identical child (its prior is a distorted
-      // chunk number by definition, so the triggers would always fire)
-      if (chronic(n)) None
-      else triggerOf(prior.get(n), m.wall, m.cpu)
-        .map(t => (("base", n, m.wall, m.cpu, t)))
-    }
-    val scaleSuspects = scaleRows.flatMap { r =>
-      // the prior-vs check needs no floor on the CURRENT wall (the prior
-      // carries the magnitude); idleHeavy keeps its own ≥2 s floor
-      if (chronic(r.name)) None
-      else triggerOf(prior.get(s"${r.tag}:${r.name}"), r.sec, r.cpu)
-        .map(t => ((r.tag, r.name, r.sec, r.cpu, t)))
-    }
-    // 16 covers every suspect the r13 rehearsal produced (15) with one
-    // spare; a solo child costs ~30-40 s, so the worst case adds ~10 min
-    // — bounded, and far cheaper than a judge session
-    val maxRetries = sys.env.getOrElse("SPARK_GRAFT_MAX_RETRY", "16").toInt
-    // rank by the larger of (published, prior): a 0.5 s query contradicting
-    // a 13 s prior is as important to adjudicate as a 13 s regression
-    def rank(s: (String, String, Double, Double, String)): Double = {
-      val key = if (s._1 == "base") s._2 else s"${s._1}:${s._2}"
-      math.max(s._3, prior.get(key).map(_._1).getOrElse(0.0))
-    }
-    val allSuspects = (baseSuspects ++ scaleSuspects).sortBy(s => -rank(s))
-    if (allSuspects.size > maxRetries)
-      System.err.println(s"[bench] ${allSuspects.size} suspects, retrying " +
-        s"top $maxRetries by published wall; dropped: " +
-        allSuspects.drop(maxRetries).map(s => s"${s._1}:${s._2}").mkString(", "))
-    // one solo child per suspect NAME. The child re-measures the base
-    // query AND every scale tier the name had rows for this run — not
-    // just the suspect tiers (r15 VERDICT #1 / ADVICE r15 #2: adopting a
-    // solo number for one tier while its ratio denominator stays a chunk
-    // number publishes a mixed-regime ratio; re-measuring the whole row
-    // family in ONE child makes every published ratio solo/solo from the
-    // same JVM). Non-suspect rows the child reports are adopted as
-    // `companion` adjudications — visible in the artifact, never silent.
-    val tiersByName: Map[String, Set[String]] =
-      scaleRows.groupBy(_.name).map { case (n, rs) => n -> rs.map(_.tag).toSet }
-    val retained = allSuspects.take(maxRetries)
-    val adjRows = ArrayBuffer.empty[Adj]
-    retained.groupBy(_._2).toSeq.sortBy(_._1).foreach { case (name, sus) =>
-      System.err.println(s"[bench] adjudicating $name solo " +
-        s"(${sus.map(s => s"${s._1}: ${s._5}").mkString("; ")})")
-      val scaleTags = tiersByName.getOrElse(name, Set.empty)
-      val env = Map("SPARK_GRAFT_ONLY" -> name) ++
-        (if (scaleTags.isEmpty) Map("SPARK_GRAFT_SCALE" -> "1")
-        else Map("SPARK_GRAFT_TIERS" -> scaleTags.toSeq.sorted.mkString(",")))
-      val soloQ = ArrayBuffer.empty[(String, Meas)]
-      val soloS = ArrayBuffer.empty[ScaleRow]
-      val (_, rows) = spawnChild(env, s"solo_$name")
-      ingest(rows, (soloQ, soloS), chunkRun = false)
-      val suspectTags = sus.map(_._1).toSet
-      sus.foreach { case (tag, _, pub, pubCpu, trigger) =>
-        val solo: Option[(Double, Double)] =
-          if (tag == "base") soloQ.find(_._1 == name).map(q => (q._2.wall, q._2.cpu))
-          else soloS.find(r => r.tag == tag && r.name == name)
-            .map(r => (r.sec, r.cpu))
-        solo match {
-          case Some((sw, sc)) =>
-            // three-valued (r13 VERDICT #1), cpu-checked (r18): a solo
-            // whose WALL agrees but whose CPU disagrees >2× did different
-            // WORK — flagged cpu-divergent, never silently adopted
-            val verdict = verdictOf(pub, sw, pubCpu, sc)
-            System.err.println(
-              f"[bench] verdict $tag:$name published=$pub%.2f/$pubCpu%.1fcpu " +
-                f"solo=$sw%.2f/$sc%.1fcpu → $verdict" +
-                (if (verdict.startsWith("cpu-divergent"))
-                  " (NOT reproduced — investigate)" else ""))
-            adjRows += Adj(tag, name, trigger, pub, pubCpu, sw, sc, verdict)
-          case None =>
-            System.err.println(s"[bench] solo $tag:$name reported nothing; " +
-              "verdict unresolved")
-            adjRows += Adj(tag, name, trigger, pub, pubCpu, -1.0, -1.0,
-              "unresolved")
-        }
-      }
-      // companion adoptions: the rows the child measured alongside the
-      // suspects (always its base; every tier row it re-ran)
-      if (!suspectTags("base"))
-        for (q <- soloQ.find(_._1 == name); p <- qMeas.find(_._1 == name))
-          adjRows += Adj("base", name, "companion", p._2.wall, p._2.cpu,
-            q._2.wall, q._2.cpu,
-            verdictOf(p._2.wall, q._2.wall, p._2.cpu, q._2.cpu))
-      soloS.filter(r => r.name == name && !suspectTags(r.tag)).foreach { r =>
-        scaleRows.find(p => p.tag == r.tag && p.name == name).foreach { p =>
-          adjRows += Adj(r.tag, name, "companion", p.sec, p.cpu,
-            r.sec, r.cpu, verdictOf(p.sec, r.sec, p.cpu, r.cpu))
-        }
-      }
-    }
-
-    // ---- solo-authoritative rewrite (r13 VERDICT #1/#2) ----
-    // ONE convention, applied everywhere: whenever adjudication resolved a
-    // solo measurement (suspect or companion), the SOLO number is the
-    // round's number — in the detail artifact, on the stdout line, and in
-    // every scale ratio (numerator AND denominator, from the same solo
-    // child). A solo child is a cold JVM with no sibling-query
-    // JIT/page-cache warmth and no chunk co-tenancy, which is what a real
-    // per-query deployment pays in either direction. The published chunk
-    // number stays visible in the adjudication rows. EXCEPTION (r18,
-    // VERDICT r17 #3): a cpu-divergent row measured different WORK, not a
-    // different environment — adopting its solo wall would publish a
-    // number whose cpu story contradicts the artifact; such rows keep
-    // their published numbers and carry the divergence in the verdict.
-    val soloOf: Map[(String, String), (Double, Double)] =
-      adjRows.filter(a => a.solo >= 0 &&
-          !a.verdict.startsWith("cpu-divergent"))
-        .map(a => (a.tag, a.name) -> (a.solo, a.soloCpu)).toMap
-    val qAuth = qMeas.toSeq.map { case (n, m) =>
-      soloOf.get(("base", n))
-        .map { case (sw, sc) => n -> m.copy(wall = sw, cpu = sc) }
-        .getOrElse(n -> m)
-    }
-    val baseAuth = qAuth.toMap
-    val scaleAuth = scaleRows.toSeq.map { r =>
-      soloOf.get((r.tag, r.name)) match {
-        case Some((sec, cpu)) =>
-          // solo-adopted tier: pair with the (solo-adopted) base — the
-          // companion mechanism re-measures a suspect's whole row family
-          // in ONE child, so both ends come from the same JVM
-          val base = baseAuth.get(r.name).map(_.wall).getOrElse(r.base)
-          val baseCpu = baseAuth.get(r.name).map(_.cpu).getOrElse(r.baseCpu)
-          r.copy(sec = sec, cpu = cpu, base = base, baseCpu = baseCpu,
-            ratio = sec / math.max(base, 1e-9))
-        case None =>
-          // unadopted tier (no adjudication, unresolved, or
-          // cpu-divergent): keep the CHUNK pair — pairing a chunk
-          // numerator with a solo-adopted base would publish a
-          // mixed-regime ratio, the class r15 VERDICT #1 eliminated
-          r.copy(ratio = r.sec / math.max(r.base, 1e-9))
-      }
-    }
-    val allAdj = (chronicAdj ++ adjRows).toSeq
-    writeDetail(qAuth, failed, scaleAuth, histRows.toSeq, sfDir,
-      allAdj, loadStart)
-    emitFinal(qAuth, failed, scaleAuth, sfDir, allAdj)
+    writeDetail(qMeas.toSeq, failed, scaleRows.toSeq, histRows.toSeq, sfDir,
+      loadStart)
+    emitFinal(qMeas.toSeq, failed, scaleRows.toSeq, sfDir)
   }
 
   /** The committed per-round artifact the 2000-char stdout tail can't
     * carry: EVERY query's wall + cpu seconds, GC delta and load context,
-    * the full scale rows (ratio + raw seconds + base + cpu), the probe
-    * group-width histograms, and the adjudication verdicts. Written to the
-    * working directory as `bench_detail_r<N>.json`. Cross-round per-query
-    * regression tracking reads these files — the stdout headline line is
-    * unchanged.
+    * the full scale rows (ratio + raw seconds + base + cpu) and the probe
+    * group-width histograms. Written to the working directory as
+    * `bench_detail_r<N>.json`; `tools/compare_bench_runs.py` diffs two of
+    * them.
     */
   private def writeDetail(resultSeq: Seq[(String, Meas)],
       failed: LinkedHashSet[String],
       scaleRows: Seq[ScaleRow],
-      histRows: Seq[(String, String, Int, Long, Long, Long, Long)],
-      sfDir: String, adjRows: Seq[Adj], loadStart: Double): Unit = try {
+      histRows: Seq[HistRow], sfDir: String, loadStart: Double): Unit = try {
     val round = roundNumber
     val sb = new StringBuilder
     // a non-numeric SPARK_GRAFT_ROUND must still yield VALID JSON — bare
@@ -896,13 +402,6 @@ object Bench {
       s""""$tag":{${rows.headOption.map(r => s""""factor":${r.factor},""").getOrElse("")}"rows":${entries.mkString("{", ",", "}")}}"""
     }.mkString(",")
     sb ++= scaleJson
-    val adjJson = adjRows.map { a =>
-      f"""{"tag":"${a.tag}","query":"${a.name}","trigger":"${a.trigger}",""" +
-        f""""published_sec":${a.published}%.3f,"published_cpu_sec":${a.publishedCpu}%.3f,""" +
-        f""""solo_sec":${a.solo}%.3f,"solo_cpu_sec":${a.soloCpu}%.3f,""" +
-        s""""verdict":"${a.verdict}"}"""
-    }
-    sb ++= s""","adjudication":${adjJson.mkString("[", ",", "]")}"""
     val histJson = histRows.groupBy(_._2).toSeq.sortBy(_._1).map {
       case (q, rows) =>
         val byTag = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (tag, hs) =>
@@ -1025,11 +524,6 @@ object Bench {
     // ~0.5 s is overhead-dominated (±0.3 s of scheduler/GC jitter swings
     // it severalfold); judge those by the absolute stderr timings instead.
     val scaleRows = ArrayBuffer.empty[ScaleRow]
-    // solo adjudication children re-measure ONLY the suspect tiers
-    // (SPARK_GRAFT_TIERS, comma list of scale tags); absent = every tier
-    val tiers = sys.env.get("SPARK_GRAFT_TIERS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def tierOn(tag: String): Boolean = tiers.forall(_.contains(tag))
     def scaleSection(tag: String, factor: Int, names: Seq[String],
         tables: Set[String] = ScaleData.AllTables,
         freshEvents: Boolean = false): Unit = {
@@ -1037,7 +531,7 @@ object Bench {
       // aren't in this section must not pay minutes of corpus synthesis
       // for an empty ratios map
       val sel = names.filter(n => only.isEmpty || only(n))
-      if (factor > 1 && sel.nonEmpty && tierOn(tag)) {
+      if (factor > 1 && sel.nonEmpty) {
         val suffix = if (freshEvents) "f" else ""
         val outDir =
           s"${System.getProperty("java.io.tmpdir")}/graft_scale_${factor}x$suffix"
@@ -1193,7 +687,7 @@ object Bench {
     // histograms at base SF and at every scale corpus this run actually
     // synthesized (marker check — a SPARK_GRAFT_ONLY run without the probe
     // queries must not pay corpus synthesis here).
-    val histRows = ArrayBuffer.empty[(String, String, Int, Long, Long, Long, Long)]
+    val histRows = ArrayBuffer.empty[HistRow]
     // a "<query>_exact"/"<query>_altsrc" probe is histogram-only (no
     // timed query of its own), so under a chunk child's SPARK_GRAFT_ONLY
     // it must ride its companion timed query's membership — without the
@@ -1221,16 +715,16 @@ object Bench {
     val freshHistSet = freshSet ++
       Seq("stream_both_horizons_exact", "stream_both_horizons_altsrc")
     histAt("base", sfDir, scaleSet ++ freshHistSet)
-    if (factor > 1 && tierOn("scale") && new java.io.File(s"$tmpDir/graft_scale_${factor}x/_synth.ok").exists)
+    if (factor > 1 && new java.io.File(s"$tmpDir/graft_scale_${factor}x/_synth.ok").exists)
       histAt("scale", s"$tmpDir/graft_scale_${factor}x", scaleSet)
     // the fresh-events regime's state histogram: LINEAR growth in distinct
     // content here vs the flat duplicate-heavy rows above is the tier's
     // whole point
-    if (factorF > 1 && tierOn("scaleF") && new java.io.File(s"$tmpDir/graft_scale_${factorF}xf/_synth.ok").exists)
+    if (factorF > 1 && new java.io.File(s"$tmpDir/graft_scale_${factorF}xf/_synth.ok").exists)
       histAt("scaleF", s"$tmpDir/graft_scale_${factorF}xf", freshHistSet)
-    if (factor26 > 1 && tierOn("scale26") && new java.io.File(s"$tmpDir/graft_scale_${factor26}x/_synth.ok").exists)
+    if (factor26 > 1 && new java.io.File(s"$tmpDir/graft_scale_${factor26}x/_synth.ok").exists)
       histAt("scale26", s"$tmpDir/graft_scale_${factor26}x", cappedSet)
-    if (factor100 > 1 && tierOn("scale100") && new java.io.File(s"$tmpDir/graft_scale_${factor100}x/_synth.ok").exists)
+    if (factor100 > 1 && new java.io.File(s"$tmpDir/graft_scale_${factor100}x/_synth.ok").exists)
       histAt("scale100", s"$tmpDir/graft_scale_${factor100}x", capped100Set)
     resultSeq.foreach { case (n, m) =>
       System.err.println(f"""[bench-detail] "$n":${m.wall}""")
@@ -1255,14 +749,12 @@ object Bench {
         java.nio.file.Files.writeString(java.nio.file.Paths.get(path), sb.toString)
       case None =>
         // standalone full run (SPARK_GRAFT_CHUNK=0, no filter): write the
-        // same detail artifact the chunked coordinator writes (minus
-        // adjudication — there is no solo-vs-chunk distinction in a single
-        // process); a filtered hand-run iteration loop must not clobber
-        // the round's artifact
+        // same detail artifact the chunked coordinator writes; a filtered
+        // hand-run iteration loop must not clobber the round's artifact
         if (only.isEmpty)
           writeDetail(resultSeq, failed, scaleRows.toSeq, histRows.toSeq,
-            sfDir, Seq.empty, loadStart)
-        emitFinal(resultSeq, failed, scaleRows.toSeq, sfDir, Seq.empty)
+            sfDir, loadStart)
+        emitFinal(resultSeq, failed, scaleRows.toSeq, sfDir)
     }
     spark.stop()
   }
@@ -1278,20 +770,20 @@ object Bench {
     *  - "scale"/"scale26": the worst (highest-ratio) entries only, plus
     *    `n` (total rows measured) and `max` so the line is honest about
     *    what it omits — full rows are in the detail artifact;
-    *  - "failed" and the adjudication verdict counts ride the line whole:
-    *    a correctness regression outranks timing detail.
+    *  - "failed": `failed_n` always carries the true count, and the name
+    *    list gets its own budget — a correctness regression outranks
+    *    timing detail.
     */
   private def emitFinal(resultSeq: Seq[(String, Meas)],
-      failed: LinkedHashSet[String], scaleRows: Seq[ScaleRow], sfDir: String,
-      adjRows: Seq[Adj]): Unit = {
+      failed: LinkedHashSet[String], scaleRows: Seq[ScaleRow],
+      sfDir: String): Unit = {
     // the stdout line keeps the 0.5 s base floor: a ratio whose base is
     // overhead-dominated spends line budget saying nothing (VERDICT r8
     // #9) — the full rows, floor included, are in the detail artifact
     val line = buildFinalLine(
       resultSeq.map { case (n, m) => (n, m.wall) }, failed.toSeq,
       scaleRows.filter(_.base >= 0.5)
-        .map(r => (r.tag, r.factor, r.name, r.ratio)), sfDir,
-      adjRows.map(_.verdict))
+        .map(r => (r.tag, r.factor, r.name, r.ratio)), sfDir)
     if (line.length > LineBudget)
       System.err.println(s"[bench] WARNING: stdout line ${line.length} chars " +
         s"exceeds the $LineBudget budget — driver tail may truncate it")
@@ -1309,8 +801,8 @@ object Bench {
     */
   private[graft] def buildFinalLine(walls: Seq[(String, Double)],
       failedNames: Seq[String],
-      scaleRatios: Seq[(String, Int, String, Double)], sfDir: String,
-      verdicts: Seq[String]): String = {
+      scaleRatios: Seq[(String, Int, String, Double)],
+      sfDir: String): String = {
     val total = walls.map(_._2).sum
     // the failed list is budgeted too: a mass-failure round (the moment
     // the artifact matters most) must not overflow the tail window.
@@ -1328,13 +820,6 @@ object Bench {
         val listJson = kept.mkString("[", ",", "]")
         s""","failed_n":${failedNames.size},"failed":$listJson"""
       }
-    val adjJson =
-      if (verdicts.isEmpty) ""
-      else {
-        val counts = verdicts.groupBy(identity).toSeq.sortBy(_._1)
-          .map { case (v, rs) => s""""${v.replace("-", "_")}":${rs.size}""" }
-        s""","adjudicated":{${counts.mkString(",")}}"""
-      }
     // worst-first scale summary, hard-capped per tag; n + max make the
     // truncation explicit
     val scaleJson = ScaleTags.flatMap { tag =>
@@ -1346,7 +831,7 @@ object Bench {
           f""""max":${rows.map(_._4).max}%.2f,"worst":$worst}""")
       }
     }.mkString
-    val fixed = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir"$failedJson$adjJson,"queries":{}$scaleJson}"""
+    val fixed = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir"$failedJson,"queries":{}$scaleJson}"""
     var room = LineBudget - fixed.length - 30 // reserve for "other" entry
     val kept = ArrayBuffer.empty[String]
     var otherSum = 0.0
@@ -1358,6 +843,6 @@ object Bench {
     if (otherSum > 0 || kept.size < walls.size)
       kept += f""""other":$otherSum%.3f"""
     val qsCompact = kept.mkString("{", ",", "}")
-    s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir"$failedJson$adjJson,"queries":$qsCompact$scaleJson}"""
+    s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir"$failedJson,"queries":$qsCompact$scaleJson}"""
   }
 }

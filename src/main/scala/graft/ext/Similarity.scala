@@ -607,7 +607,7 @@ object Similarity {
     * out and each task scores only the probed fraction. The residual
     * path's training-input frame (a corpus-wide residual projection read
     * once per PQ iteration plus the encode pass) is still pinned via
-    * [[graft.GraftCache.pin]] and released once an action over the
+    * [[graft.GraftCache.pinLeaf]] and released once an action over the
     * returned frame completes.
     */
   /** Element-wise residual x − centroid, double subtraction rounded back

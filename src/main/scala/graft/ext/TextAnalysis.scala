@@ -700,10 +700,17 @@ object TextAnalysis {
     * the highest tf·(N/df) weight. The idf is spelled WITHOUT a logarithm
     * (score = tf·N/df as one double division) so independent engines agree
     * bit-for-bit — libm log implementations differ in ULPs, ratios don't.
-    * Shape at 100 TB: one explode + (doc,term) aggregation, one term-keyed
-    * df aggregation (map-side partial, term cardinality ≪ corpus size), a
+    * Shape: one explode + (doc, term) aggregation, df as a count window
+    * over `term` on that tf frame (one term exchange, tf executed once), a
     * broadcast of the single-row N, and a per-doc window whose partitions
-    * are bounded by per-doc vocabulary — no global sort, no funnel.
+    * are bounded by per-doc vocabulary — no global sort. Hot-key
+    * trade-off: a window has no map-side partial, so every (doc, term)
+    * row of one term lands in ONE window partition on one task — a
+    * stopword's partition is as long as the corpus has documents. At
+    * bench scale that is cheaper than the groupBy + join-back spelling
+    * (which ran tf twice); at billions of documents the stopword
+    * partition is a single-task funnel and spill risk that a map-side
+    * partial df aggregation would not have.
     */
   def tfIdfTopTerms(docs: DataFrame, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -26,17 +26,6 @@ class EventBus(val path: String) extends Serializable {
   def readStream(spark: SparkSession): DataFrame =
     spark.readStream.schema(EventView.schema).parquet(path)
 
-  /** Throttled stream — the reference's pull batching + backpressure knobs
-    * (PullBatchSize per pull, trigger.go:569; MaxUACKNumber blocking the
-    * reader, offset/offset.go:56-72) map to bounding what each micro-batch
-    * admits: in-flight work per trigger is capped, and offsets only commit
-    * when the batch completes.
-    */
-  def readStreamThrottled(spark: SparkSession, maxFilesPerTrigger: Int): DataFrame =
-    spark.readStream.schema(EventView.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(path)
-
   /** Append a frame to the bus.
     *
     * PRECONDITION — monotone sequence numbers: every appended row must

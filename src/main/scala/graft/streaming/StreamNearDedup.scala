@@ -191,8 +191,9 @@ object StreamNearDedup {
     // distinct (source, id) — and the general path pays a mutable map, a
     // row sort, an immutable-map copy and the probe scaffolding per GROUP.
     // A single row against empty state probes nothing (no match by
-    // definition), inserts its own fingerprint, and emits not-matched:
-    // exactly what the general fold computes for this case.
+    // definition), inserts its own fingerprint unless the cap is zero, and
+    // emits not-matched: exactly what the general fold computes for this
+    // case.
     if (state.getOption.isEmpty && rows.hasNext) {
       val r = rows.next()
       if (!rows.hasNext) {
@@ -200,7 +201,8 @@ object StreamNearDedup {
         val blk1 = block(r)
         val b21 = (blk1 + 1) % Blocks
         val v = (fp >>> Shifts(b21)) & ((1L << Widths(b21)) - 1)
-        state.update(FpState(Map(v -> Vector(fp))))
+        state.update(FpState(
+          if (maxState > 0) Map(v -> Vector(fp)) else Map.empty))
         ttlMsOf(blk1).foreach(state.setTimeoutDuration)
         return Iterator.single(mk(r, false))
       } else {

@@ -1403,15 +1403,6 @@ object SubscriptionRunner {
     }
   }
 
-  /** Streaming retry consumer — the Spark form of the reference's timer
-    * server loop (server/timer + trigger.go:256-302): a durable ticker
-    * query (rate source; the rows are ignored, the trigger cadence is the
-    * wheel's tick) that runs [[releaseSpool]] once per trigger. All retry
-    * state lives in the spool's due-time buckets and the events' stamped
-    * attempt counts, so the query survives checkpoint restarts with no
-    * state of its own, and a restart resumes escalation exactly where the
-    * spool left off.
-    */
   /** One-shot drain: start, process everything currently on the bus, stop.
     * The SAFE counterpart to `start(..., AvailableNow)` — without a
     * dedup/near-dup horizon it is exactly that (await termination); with
@@ -1459,6 +1450,15 @@ object SubscriptionRunner {
     } finally if (q.isActive) q.stop()
   }
 
+  /** Streaming retry consumer — the Spark form of the reference's timer
+    * server loop (server/timer + trigger.go:256-302): a durable ticker
+    * query (rate source; the rows are ignored, the trigger cadence is the
+    * wheel's tick) that runs [[releaseSpool]] once per trigger. All retry
+    * state lives in the spool's due-time buckets and the events' stamped
+    * attempt counts, so the query survives checkpoint restarts with no
+    * state of its own, and a restart resumes escalation exactly where the
+    * spool left off.
+    */
   def startRetries(
       spark: SparkSession,
       spool: BucketedSpool,

@@ -322,6 +322,37 @@ class StreamDedupStateSpec extends SparkSpec {
     assert(!got(50L), "the first copy must not match")
   }
 
+  test("a zero state cap stores nothing: identical content in a later micro-batch never matches") {
+    // each event of the first batch is a singleton against empty state in
+    // all three of its groups — the fast path must honour the cap the
+    // general fold applies (total < maxState), or batch 2 matches state
+    // that maxState = 0 should never have stored
+    val bus = EventBus(tmp("cap0bus"))
+    val ckpt = tmp("cap0ck")
+    val acc = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
+    def runOnce(): Unit = {
+      val q = StreamNearDedup.blockMatches(streamed(bus), maxState = 0)
+        .writeStream
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch {
+          (batch: org.apache.spark.sql.Dataset[StreamNearDedup.BlockMatch], _: Long) =>
+            batch.collect().foreach(m => acc.merge(m.eventId, m.matched, (a, b) => a || b))
+        }
+        .start()
+      try q.processAllAvailable()
+      finally { q.stop(); q.awaitTermination(30000); () }
+    }
+    bus.append(EventView.fromEventsTable(ev(Seq((1L, "t", "alpha beta gamma", 0L)))))
+    runOnce()
+    bus.append(EventView.fromEventsTable(ev(Seq((2L, "t", "alpha beta gamma", 1L)))))
+    runOnce()
+    assert(acc.get(1L) == false)
+    assert(acc.get(2L) == false,
+      "with maxState = 0 no fingerprint is stored, so the copy must not match")
+  }
+
   test("the composed both-horizons fold is exactly ONE state operator") {
     // the design invariant behind Config.dedupHorizon + neardupHorizon
     // composing in one streaming plan: chaining two
