@@ -80,8 +80,13 @@ final case class PqLutModel(m: Int, k: Int, subdim: Int,
   * residual-dispatch CASE tree was textually duplicated into every slot.
   * With the kernel the child (raw embedding or residual) is evaluated
   * once per row and the table filled in a single m·k·subdim loop.
-  * Arithmetic, fold order and null semantics are slot-for-slot identical
-  * (parity pinned in SimilaritySpec).
+  * For a non-null embedding, arithmetic, fold order and per-slot null
+  * semantics are slot-for-slot identical. A NULL embedding is the one
+  * difference: the kernel is null-safe and returns a NULL lut, where the
+  * column spelling builds an array of m·k null slots. Its one consumer,
+  * [[PqAdcExpr]], returns null for either (a null lut, or a null slot
+  * at any code). Parity, including that row, is pinned in
+  * HashKernelsSpec.
   */
 case class PqLutExpr(child: Expression, model: PqLutModel)
   extends UnaryExpression with ExpectsInputTypes {

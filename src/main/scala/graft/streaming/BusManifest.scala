@@ -4,11 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Append-time commit manifest of an [[EventBus]] — the structure that
   * makes the boundary probe O(1) and delta reads O(new commits) instead
-  * of O(files) (VERDICT r18 #1: the footer memo absorbs footer READS,
-  * but every probe still re-LISTED the whole bus — ~45 s per attach
-  * round at a million files, paid on the driver regardless of memo
-  * warmth). The reference never pays this: its vsb blocks carry a
-  * per-entry index enabling O(log) seek
+  * of O(files) (VERDICT r18 #1: a per-probe footer walk re-LISTS the
+  * whole bus — ~45 s per attach round at a million files, paid on the
+  * driver even when every footer is cached). The reference never pays
+  * this: its vsb blocks carry a per-entry index enabling O(log) seek
   * (server/store/vsb/index/index.go:56-61, block_seek.go:45-86) — this
   * is that index re-expressed at FILE granularity, which is the right
   * unit for a parquet-directory log.
@@ -43,8 +42,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * writes to a manifested bus go through [[EventBus.append]] /
   * [[EventBus.appendPartitioned]] in one JVM. Out-of-band file
   * creation/deletion makes the manifest stale — delete
-  * `_graft_manifest` (probes then fall back to the footer walk) or set
-  * `graft.bus.manifest.enabled=false`. Cross-driver writers were
+  * `_graft_manifest`; probes answer from data until the next append
+  * rebuilds it. Cross-driver writers were
   * already out of scope (the FileOutputCommitter staging race,
   * [[EventBus.append]]'s scaladoc).
   */
@@ -61,7 +60,7 @@ private[streaming] object BusManifest {
     * directory its files move out of (None for a backfill record — the
     * files were already in place). `trusted=false` = some file's footer
     * stats were missing/garbled at append time; probes fall back to the
-    * footer walk / data aggregate for the whole bus.
+    * data aggregate for the whole bus.
     */
   final case class Record(id: Long, staging: Option[String],
       trusted: Boolean, hasMax: Boolean, max: Long, files: Seq[FileEntry])
@@ -160,7 +159,7 @@ private[streaming] object BusManifest {
     writeRecordAt(fs, checkpointPath(root, r.id), r)
 
   /** Parse failures throw IOException — a torn/garbled manifest file is
-    * a degradable signal (probes fall back to the footer walk; the next
+    * a degradable signal (probes fall back to the data aggregate; the next
     * append rebuilds), never a silent wrong answer.
     */
   private def parseFail(p: Path, why: String): Nothing =
@@ -281,7 +280,7 @@ private[streaming] object BusManifest {
     * no manifest on this bus. Throws IOException when a record
     * references a file that is neither at its target nor in its staging
     * directory (out-of-band deletion — the next [[EventBus.append]]
-    * rebuilds the manifest from footers; probes fall back meanwhile).
+    * rebuilds the manifest from footers; probes answer from data meanwhile).
     * MUST be called under the bus append lock: replay moves files.
     */
   def current(fs: FileSystem, root: Path): Option[Latest] = {

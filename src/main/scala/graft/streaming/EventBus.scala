@@ -60,16 +60,13 @@ class EventBus(val path: String) extends Serializable {
     * the boundary (O(new commits)) — no per-probe O(files) directory
     * listing. The first manifested append to a pre-existing bus
     * BACKFILLS a record covering the existing files from one footer
-    * walk. `graft.bus.manifest.enabled=false` restores the plain append
-    * (probes then take the footer-walk path). Rename is O(1) on
+    * walk. Rename is O(1) on
     * HDFS-like stores; an S3-class store wants a committer-integrated
     * manifest instead — out of scope with the cross-driver caveat above.
     */
   def append(df: DataFrame): Unit =
     EventBus.appendLock(path).synchronized {
-      if (EventBus.manifestEnabled(df.sparkSession))
-        EventBus.appendManifested(df, path, Seq.empty)
-      else df.write.mode("append").parquet(path)
+      EventBus.appendManifested(df, path, Seq.empty)
     }
 
   /** Partitioned append — the 100 TB layout: one directory level per
@@ -86,10 +83,7 @@ class EventBus(val path: String) extends Serializable {
     */
   def appendPartitioned(df: DataFrame, partitionCols: String*): Unit =
     EventBus.appendLock(path).synchronized {
-      if (EventBus.manifestEnabled(df.sparkSession))
-        EventBus.appendManifested(df, path, partitionCols)
-      else
-        df.write.mode("append").partitionBy(partitionCols: _*).parquet(path)
+      EventBus.appendManifested(df, path, partitionCols)
     }
 
   /** OFFLINE compaction: rewrite the bus's committed files into about
@@ -97,8 +91,8 @@ class EventBus(val path: String) extends Serializable {
     * `partitionCols` are given), swap them in crash-safely, and rebuild
     * the manifest — the log-lifecycle half the manifest made urgent:
     * micro-batch appends at the 100 TB layout create one commit's worth
-    * of small files per trigger, and every reader's listing, footer
-    * memo, and manifest record chain grow with it. The reference
+    * of small files per trigger, and every reader's listing and the
+    * manifest record chain grow with it. The reference
     * compacts at the segment layer for the same reason.
     *
     * OFFLINE means NO CONCURRENT READERS: same-JVM probes and appends
@@ -113,7 +107,7 @@ class EventBus(val path: String) extends Serializable {
     * directory FIRST, then an atomic intent marker (staging name + old
     * files to delete) commits the swap; every later step is idempotent
     * replay of the marker, and [[EventBus.maxSequenceFrame]]/
-    * [[EventBus.readAboveSequence]]/footer probes/appends all finish a
+    * [[EventBus.readAboveSequence]]/appends all finish a
     * crashed swap before answering ([[BusManifest.CompactIntent]]). A
     * crash BEFORE the marker leaves only the invisible staging
     * directory.
@@ -124,7 +118,7 @@ class EventBus(val path: String) extends Serializable {
       val conf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(conf)
-      EventBus.finishCompaction(spark, fs, root, path) // heal a crashed swap
+      EventBus.finishCompaction(spark, fs, root) // heal a crashed swap
       EventBus.sweepOrphanCompactStaging(fs, root)
       if (!fs.exists(root)) return
       val old = EventBus.listCommittedFiles(fs, root)
@@ -137,7 +131,7 @@ class EventBus(val path: String) extends Serializable {
       // derive the columns from the existing directory names instead
       val cols =
         if (partitionCols.nonEmpty) partitionCols.toSeq
-        else old.headOption.toSeq.flatMap { case (_, st) =>
+        else old.headOption.toSeq.flatMap { st =>
           val sp = st.getPath.toUri.getPath
           sp.substring(qRoot.length + 1).split('/').dropRight(1)
             .toSeq.flatMap { seg =>
@@ -156,7 +150,7 @@ class EventBus(val path: String) extends Serializable {
       (if (cols.isEmpty) shaped.write
        else shaped.write.partitionBy(cols: _*))
         .mode("overwrite").parquet(staging.toString)
-      val deletes = old.map { case (_, st) =>
+      val deletes = old.map { st =>
         val sp = st.getPath.toUri.getPath
         if (!sp.startsWith(qRoot + "/"))
           throw new java.io.IOException(s"bus file $sp outside $qRoot")
@@ -165,7 +159,7 @@ class EventBus(val path: String) extends Serializable {
       EventBus.compactSwaps.incrementAndGet()
       BusManifest.writeIntent(fs, root,
         BusManifest.CompactIntent(stagingName, deletes))
-      EventBus.finishCompaction(spark, fs, root, path)
+      EventBus.finishCompaction(spark, fs, root)
     }
 
   /** Partition-scoped INCREMENTAL compaction (r20, VERDICT r19 missing
@@ -190,7 +184,7 @@ class EventBus(val path: String) extends Serializable {
       val conf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(conf)
-      EventBus.finishCompaction(spark, fs, root, path) // heal a crashed swap
+      EventBus.finishCompaction(spark, fs, root) // heal a crashed swap
       EventBus.sweepOrphanCompactStaging(fs, root)
       if (!fs.exists(root)) return 0
       val qRoot = fs.makeQualified(root).toUri.getPath
@@ -201,7 +195,7 @@ class EventBus(val path: String) extends Serializable {
         sp.substring(qRoot.length + 1)
       }
       val byDir = EventBus.listCommittedFiles(fs, root)
-        .map { case (_, st) => relOf(st) }
+        .map(relOf)
         .groupBy { rel =>
           val slash = rel.lastIndexOf('/')
           if (slash < 0) "" else rel.substring(0, slash)
@@ -215,8 +209,7 @@ class EventBus(val path: String) extends Serializable {
       // with thousands of hot date partitions serialized thousands of
       // tiny jobs (and O(dirs) manifest rebuilds) inside one append-lock
       // hold. Now every hot directory stages CONCURRENTLY into one
-      // hidden staging tree (bounded driver pool,
-      // `graft.bus.compact.dirConcurrency`, default 4 — guide §2.6:
+      // hidden staging tree (bounded driver pool of 4 — guide §2.6:
       // independent jobs back-fill each other's stragglers; each job
       // still reads/writes only its own directory, so there is still no
       // cross-partition shuffle), then ONE intent marker and ONE
@@ -237,8 +230,7 @@ class EventBus(val path: String) extends Serializable {
           .repartition(targetFilesPerDir)
           .write.mode("overwrite").parquet(stagedDir.toString)
       }
-      val conc = math.min(hot.size, math.max(1,
-        spark.conf.get("graft.bus.compact.dirConcurrency", "4").toInt))
+      val conc = math.min(hot.size, EventBus.CompactDirConcurrency)
       // level-by-level (shallowest first): a staged ancestor directory's
       // overwrite would delete a concurrently-staged descendant (flat
       // root "" vs date=X, or date=X vs date=X/hour=Y when files live at
@@ -269,7 +261,7 @@ class EventBus(val path: String) extends Serializable {
       EventBus.compactSwaps.incrementAndGet()
       BusManifest.writeIntent(fs, root,
         BusManifest.CompactIntent(stagingName, hot.flatMap(_._2)))
-      EventBus.finishCompaction(spark, fs, root, path)
+      EventBus.finishCompaction(spark, fs, root)
       hot.size
     }
 
@@ -312,7 +304,7 @@ class EventBus(val path: String) extends Serializable {
       val conf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(conf)
-      EventBus.finishCompaction(spark, fs, root, path) // heal a crashed swap
+      EventBus.finishCompaction(spark, fs, root) // heal a crashed swap
       EventBus.sweepOrphanCompactStaging(fs, root)
       if (!fs.exists(root)) return 0
       val qRoot = fs.makeQualified(root).toUri.getPath
@@ -326,7 +318,7 @@ class EventBus(val path: String) extends Serializable {
       // million-file bus × N checkpoints used to hold every path string
       // at once. The running set only shrinks, so later checkpoints
       // stream against an ever-smaller candidate set.
-      var safe: Set[String] = all.map { case (_, st) =>
+      var safe: Set[String] = all.map { st =>
         fs.makeQualified(st.getPath).toUri.getPath }.toSet
       val cpIt = checkpoints.iterator
       while (cpIt.hasNext && safe.nonEmpty) {
@@ -334,7 +326,7 @@ class EventBus(val path: String) extends Serializable {
         safe = StreamCommitLog.committedAmong(
           new org.apache.hadoop.fs.Path(c).getFileSystem(conf), c, safe)
       }
-      val candidates = all.map(_._2).filter(st =>
+      val candidates = all.filter(st =>
         safe.contains(fs.makeQualified(st.getPath).toUri.getPath))
       if (candidates.size <= math.max(1, targetFiles)) return 0
       val rels = candidates.map { st =>
@@ -374,7 +366,7 @@ class EventBus(val path: String) extends Serializable {
       // dir, never an unstamped swap.
       val epoch = EventBus.compactionEpoch(fs, root) + 1
       BusManifest.writeAtomic(fs, EventBus.epochPath(root), epoch.toString)
-      EventBus.listCommittedFiles(fs, staging).foreach { case (_, st) =>
+      EventBus.listCommittedFiles(fs, staging).foreach { st =>
         val n = st.getPath.getName
         val stamped =
           if (n.endsWith(".parquet"))
@@ -387,7 +379,7 @@ class EventBus(val path: String) extends Serializable {
       EventBus.compactSwaps.incrementAndGet()
       BusManifest.writeIntent(fs, root,
         BusManifest.CompactIntent(stagingName, rels))
-      EventBus.finishCompaction(spark, fs, root, path)
+      EventBus.finishCompaction(spark, fs, root)
       candidates.size
     }
 
@@ -402,71 +394,43 @@ class EventBus(val path: String) extends Serializable {
   /** The on-disk high-water mark `max(sequence_number)` as a 1-row frame —
     * the [[SubscriptionRunner.SharedGroup.attach]] boundary probe.
     *
-    * EXACT, with no data IO: the max is computed from the parquet FOOTER
-    * statistics of every committed file (int64 min/max stats are exact),
-    * so the probe is metadata-bounded regardless of partition scheme.
-    * The pre-r18 newest-date-partition pruning was UNSOUND: the partition
-    * value is usually derived from EVENT time, which is not
-    * append-monotone — an out-of-order event time puts a top-sequence row
-    * in an older date directory, the pruned probe undershoots the true
-    * high-water mark, and an attaching member permanently loses every
-    * already-stream-processed row above it (ADVICE r17 high). Per-file
-    * footer maxima are memoized by (path, length, mtime) — committed
-    * parquet files are immutable — so a repeat probe (the attach delta
-    * loop calls this once per round) pays one directory listing plus
-    * footers for NEW files only, and those new-file reads run
-    * concurrently (bounded driver pool; ONE distributed Spark job above
-    * `graft.bus.footer.distributedThreshold`, so a cold driver probing a
-    * million-file bus scales with the cluster, not one thread). Any file
-    * whose stats are missing or untrusted degrades the whole probe to
-    * the full data aggregate — slower, never wrong.
+    * EXACT for any partition scheme. The pre-r18 newest-date-partition
+    * pruning was UNSOUND: the partition value is usually derived from
+    * EVENT time, which is not append-monotone — an out-of-order event
+    * time puts a top-sequence row in an older date directory, the pruned
+    * probe undershoots the true high-water mark, and an attaching member
+    * permanently loses every already-stream-processed row above it
+    * (ADVICE r17 high).
     *
-    * r19 (VERDICT r18 #1): a MANIFESTED bus ([[BusManifest]] — every bus
-    * written through [[append]]/[[appendPartitioned]]) answers from the
-    * manifest's LATEST pointer: O(1) — two small metadata reads,
-    * independent of file count, no directory listing at all. The footer
-    * walk above is the fallback for manifestless/legacy buses and for
-    * an untrusted manifest.
+    * A MANIFESTED bus ([[BusManifest]] — every bus written through
+    * [[append]]/[[appendPartitioned]]) answers from the manifest's LATEST
+    * pointer: O(1) — two small metadata reads, independent of file count,
+    * no directory listing and no data IO (the per-file maxima behind it
+    * are parquet footer stats, exact for int64). A bus with no manifest
+    * (raw-written history, not yet appended to) or an untrusted one
+    * (some file's stats missing) degrades to the full data aggregate —
+    * slower, never wrong — until the next append rebuilds the manifest.
     */
   def maxSequenceFrame(spark: SparkSession): DataFrame =
     EventBus.manifestLatest(spark, path) match {
       case Some(l) if l.trusted && l.hasMax =>
         spark.range(1).select(lit(l.max).as("max_sequence_number"))
       case _ =>
-        footerMaxSequence(spark) match {
-          case Some(Some(m)) =>
-            spark.range(1).select(lit(m).as("max_sequence_number"))
-          case _ =>
-            // untrusted/missing stats, or no committed files: the full
-            // aggregate (empty dir throws AnalysisException — the callers'
-            // nothing-on-disk contract; all-null stats yield a null row)
-            read(spark).agg(max(col("sequence_number")))
-        }
+        // no committed files: an empty dir throws AnalysisException (the
+        // callers' nothing-on-disk contract); all-null yields a null row
+        read(spark).agg(max(col("sequence_number")))
     }
-
-  /** Per-file-footer max of `sequence_number` across the whole bus.
-    * `Some(Some(m))` = every committed file carries trusted stats, max is
-    * `m`; `Some(None)` = trusted but no rows carry the column; `None` =
-    * stats missing/unreadable somewhere — callers must fall back to a
-    * data aggregate. Max-ONLY probes take [[EventBus.footerMaxOnly]]:
-    * above the distributed threshold it reduces to one (trusted, max)
-    * partial per PARTITION instead of collecting a per-file verdict row
-    * per miss (VERDICT r18 #5 — ~10⁶ path strings in one collect for an
-    * answer that is a single long).
-    */
-  private[streaming] def footerMaxSequence(
-      spark: SparkSession): Option[Option[Long]] =
-    try EventBus.footerMaxOnly(spark, path)
-    catch { case _: java.io.IOException => None }
 
   /** Read only the files that can hold rows with `sequence_number > lo` —
     * the attach delta-round read ([[SubscriptionRunner.SharedGroup]]):
-    * a file whose footer max is ≤ `lo` is pruned before any data IO
-    * (exact for any partition scheme, unlike date pruning — see
-    * [[maxSequenceFrame]]); untrusted-stats files are conservatively
-    * included. `basePath` keeps partition columns identical to [[read]].
-    * Callers still apply the `sequence_number > lo` row filter — this
-    * prunes FILES, not rows.
+    * a file whose manifested footer max is ≤ `lo` is pruned before any
+    * data IO (exact for any partition scheme, unlike date pruning — see
+    * [[maxSequenceFrame]]). `basePath` keeps partition columns identical
+    * to [[read]]. With no trusted manifest (or a gap in its record
+    * chain) this is the whole bus: callers still apply the
+    * `sequence_number > lo` row filter — this prunes FILES, not rows —
+    * and Spark's parquet reader prunes row groups by the same footer
+    * statistics.
     */
   def readAboveSequence(spark: SparkSession, lo: Long): DataFrame = {
     // manifested bus: walk records BACKWARD from LATEST until one's max
@@ -498,17 +462,11 @@ class EventBus(val path: String) extends Serializable {
             if (donors.nonEmpty)
               return spark.read.option("basePath", path)
                 .parquet(donors: _*).filter(lit(false))
-          case None => () // no committed files at all — footer fallback
+          case None => () // no committed files at all
         }
-      case None => () // no/untrusted manifest — footer fallback
+      case None => () // no/untrusted manifest
     }
-    try {
-      val stats = EventBus.footerStats(spark, path)
-      val wanted = stats.filter(f => !f.trusted || (f.hasMax && f.max > lo))
-      if (wanted.isEmpty || wanted.size == stats.size) read(spark)
-      else spark.read.option("basePath", path)
-        .parquet(wanted.map(_.file): _*)
-    } catch { case _: java.io.IOException => read(spark) }
+    read(spark)
   }
 }
 
@@ -518,33 +476,19 @@ object EventBus {
   /** One committed file's footer verdict for `sequence_number`: `trusted`
     * = every row group either carries exact int64 stats or provably holds
     * no values of the column; `hasMax`/`max` = the file-level max when any
-    * values exist. An untrusted file poisons footer-only answers for its
-    * whole bus (callers fall back to data aggregates).
+    * values exist. An untrusted file makes its manifest record, and so
+    * the whole bus's LATEST, untrusted (probes fall back to data).
     */
-  private[streaming] final case class FileFooter(
-      file: String, trusted: Boolean, hasMax: Boolean, max: Long)
+  private final case class FileFooter(
+      trusted: Boolean, hasMax: Boolean, max: Long)
 
-  // per-bus memo of per-file footer verdicts, keyed by
-  // (name, length, mtime) — committed parquet files are immutable, so an
-  // entry never goes stale; a rewritten file gets a new key. Bounded by
-  // pruning against each probe's fresh listing (memory = O(live files)
-  // per bus), with a 4M-entry clear as the last-resort guard.
-  private val footerMemos =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.ConcurrentHashMap[String, FileFooter]]()
-
-  /** Misses above this count are read as ONE distributed Spark job
-    * instead of on the driver: a cold driver probing a 100 TB bus
-    * (~10⁶ files) must not serialize a million footer RPCs through one
-    * thread — 1000 executor cores turn hours into seconds. Overridable
-    * per session for tests and tuning.
+  /** Concurrent per-directory staging jobs in
+    * [[EventBus.compactPartitionDirs]] (one level at a time).
     */
-  private val DistributedFooterThresholdKey =
-    "graft.bus.footer.distributedThreshold"
-  private val DistributedFooterThresholdDefault = 4096
+  private val CompactDirConcurrency = 4
 
-  /** Bounded driver pool for moderate miss counts (footer reads are
-    * short blocking RPCs; daemon threads so the pool never pins the JVM).
+  /** Bounded driver pool for footer reads (short blocking RPCs; daemon
+    * threads so the pool never pins the JVM).
     */
   private lazy val footerPool = java.util.concurrent.Executors.newFixedThreadPool(
     math.min(32, Runtime.getRuntime.availableProcessors),
@@ -556,67 +500,32 @@ object EventBus {
       }
     })
 
-  /** Hadoop `Configuration` is Writable, not Serializable — the standard
-    * wrapper so a distributed footer read can ship the session's conf to
-    * executors (same pattern as Spark's own SerializableConfiguration,
-    * which is private[spark]).
-    */
-  private class SerializableHadoopConf(
-      @transient var value: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
-  /** Current memo entry count for a bus (spec hook for the prune bound). */
-  private[streaming] def footerMemoSize(path: String): Int = {
-    val m = footerMemos.get(appendLockKey(path))
-    if (m == null) 0 else m.size
-  }
-
-  /** The fresh listing + memo view of one bus: its per-file memo (pruned
-    * to this listing's live set), the listed committed data files, and
-    * the subset missing from the memo.
-    */
-  private final case class BusListing(
-      memo: java.util.concurrent.ConcurrentHashMap[String, FileFooter],
-      listed: Vector[(String, org.apache.hadoop.fs.FileStatus)],
-      misses: Vector[(String, org.apache.hadoop.fs.FileStatus)])
-
   /** List every committed data file under `root` by a manual listStatus
     * walk. NOT `fs.listFiles(p, true)`: that iterator builds a
     * LocatedFileStatus per file (block locations, and on the local FS a
     * per-file permission exec) — measured 11.8 s vs 0.14 s for a
-    * 3,000-file bus, an 84× constant on the probe's dominant cost that
-    * the memo cannot absorb because every probe must re-list. The walk
-    * also enforces the committed-data rule at DESCENT time: a hidden
+    * 3,000-file bus, an 84× constant on the walk's dominant cost. The
+    * walk also enforces the committed-data rule at DESCENT time: a hidden
     * directory (`_temporary`, `.spark-staging`) is never entered, so a
     * mid-commit (or crashed) append's staged parts can neither poison
-    * the probe (garbled footers read as untrusted) nor OVERSHOOT the
-    * high-water mark (complete-but-uncommitted parts read as trusted
-    * maxima — the attach guard would then exclude sequences that commit
-    * later, permanently); hidden files (_SUCCESS, .crc) are skipped the
-    * same way. Spark's own file index applies the same rule.
+    * a backfilled manifest (garbled footers read as untrusted) nor
+    * OVERSHOOT its high-water mark (complete-but-uncommitted parts read
+    * as trusted maxima — the attach guard would then exclude sequences
+    * that commit later, permanently); hidden files (_SUCCESS, .crc) are
+    * skipped the same way. Spark's own file index applies the same rule.
     *
     * Iterative with a cycle guard (ADVICE r18): the recursive form blew
     * the thread stack on a symlinked directory cycle — a
-    * StackOverflowError is an Error, so the probe CRASHED instead of
-    * degrading to the data aggregate. The explicit queue cannot
-    * overflow, already-visited canonical directories are skipped (the
-    * cycle's second lap), and a pathological tree past the hard cap
-    * throws IOException — the degradable signal every caller handles.
+    * StackOverflowError is an Error, so the walk CRASHED instead of
+    * failing cleanly. The explicit queue cannot overflow,
+    * already-visited canonical directories are skipped (the cycle's
+    * second lap), and a pathological tree past the hard cap throws
+    * IOException.
     */
   private[streaming] def listCommittedFiles(
       fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path)
-      : Vector[(String, org.apache.hadoop.fs.FileStatus)] = {
-    val files = Vector.newBuilder[(String, org.apache.hadoop.fs.FileStatus)]
+      root: org.apache.hadoop.fs.Path): Vector[org.apache.hadoop.fs.FileStatus] = {
+    val files = Vector.newBuilder[org.apache.hadoop.fs.FileStatus]
     val queue = new java.util.ArrayDeque[org.apache.hadoop.fs.Path]()
     val visited = new java.util.HashSet[String]()
     def canonical(d: org.apache.hadoop.fs.Path): String = {
@@ -639,172 +548,11 @@ object EventBus {
         if (!n.startsWith("_") && !n.startsWith(".")) {
           if (st.isDirectory) {
             if (visited.add(canonical(st.getPath))) queue.add(st.getPath)
-          } else files +=
-            s"${st.getPath}:${st.getLen}:${st.getModificationTime}" -> st
+          } else files += st
         }
       }
     }
     files.result()
-  }
-
-  /** One fresh listing of `path` plus its memo, pruned: entries for files
-    * no longer listed (compaction, cleanup, a rewritten part under a new
-    * (len, mtime)) are dropped UNCONDITIONALLY against this listing
-    * (ADVICE r18: the old `memo.size > listed.size` trigger let stale
-    * entries persist whenever deletions were balanced by unread new
-    * files), so memory is O(live files) per bus — never a coarse clear
-    * that would force a >cap bus to re-read EVERY footer on EVERY probe
-    * (the pre-r18 262k clear did exactly that). The hard clear survives
-    * only as a last-resort bound for a pathological live set.
-    */
-  private def listBus(spark: SparkSession, path: String): BusListing = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crashed compaction swap must finish before any footer answer:
-    // half-swapped disks carry duplicates (never loss), and the walk
-    // below would memoize verdicts for files about to be deleted
-    if (fs.exists(BusManifest.intentPath(p)))
-      appendLock(path).synchronized { finishCompaction(spark, fs, p, path) }
-    val memo = footerMemos.computeIfAbsent(appendLockKey(path),
-      _ => new java.util.concurrent.ConcurrentHashMap[String, FileFooter]())
-    val listed = listCommittedFiles(fs, p)
-    val live = listed.iterator.map(_._1).toSet
-    val ks = memo.keys()
-    while (ks.hasMoreElements) {
-      val k = ks.nextElement()
-      if (!live.contains(k)) memo.remove(k)
-    }
-    if (memo.size > (1 << 22)) memo.clear()
-    BusListing(memo, listed,
-      listed.filter { case (key, _) => !memo.containsKey(key) })
-  }
-
-  private def distributedThreshold(spark: SparkSession): Int =
-    try spark.conf.get(DistributedFooterThresholdKey,
-      DistributedFooterThresholdDefault.toString).toInt
-    catch { case _: NumberFormatException => DistributedFooterThresholdDefault }
-
-  /** Footer verdicts for every committed data file under `path` (listing
-    * is fresh each call; footer reads hit the memo for files already
-    * seen). Memo MISSES are read concurrently: a bounded driver pool for
-    * moderate counts, one distributed Spark job above
-    * `graft.bus.footer.distributedThreshold` — the probe's cost model at
-    * 100 TB is one directory listing plus footers for NEW files only,
-    * and the new-file reads scale with the cluster, not the driver.
-    * Throws IOException when the directory cannot be listed.
-    */
-  private[streaming] def footerStats(
-      spark: SparkSession, path: String): Seq[FileFooter] =
-    footerStatsOf(spark, path, listBus(spark, path))
-
-  /** [[footerStats]] over a listing the caller already paid for (ADVICE
-    * r19: the max-only probe's small-miss branch listed the bus twice —
-    * the listing is the probe's dominant cost, so the fallback path must
-    * pay it once).
-    */
-  private def footerStatsOf(spark: SparkSession, path: String,
-      listing: BusListing): Seq[FileFooter] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val BusListing(memo, listed, misses) = listing
-    // pass 2: read the missing footers concurrently and fill the memo
-    if (misses.size > 1) {
-      if (misses.size > distributedThreshold(spark)) {
-        // one Spark job: footer RPCs scale with the cluster. Ship each
-        // path WITH its listing-time (len, mtime): the executor re-stats
-        // and refuses a mismatch (ADVICE r18 — a file rewritten between
-        // the driver's listing and the executor read would otherwise be
-        // memoized under the STALE key with the new content's verdict;
-        // trusted=false degrades the probe instead).
-        val sconf = new SerializableHadoopConf(conf)
-        val meta = misses.map { case (_, st) =>
-          (st.getPath.toString, st.getLen, st.getModificationTime)
-        }
-        val read = spark.sparkContext
-          .parallelize(meta, math.min(meta.size,
-            spark.sparkContext.defaultParallelism * 4))
-          .map { case (f, len, mtime) =>
-            f -> readFooterAt(sconf.value, f, len, mtime)
-          }
-          .collect().toMap
-        misses.foreach { case (key, st) =>
-          memo.putIfAbsent(key, read.getOrElse(st.getPath.toString,
-            readFooter(conf, st)))
-        }
-      } else {
-        import scala.jdk.CollectionConverters._
-        val tasks: java.util.List[java.util.concurrent.Callable[Unit]] =
-          misses.map[java.util.concurrent.Callable[Unit]] { case (key, st) =>
-            () => { memo.computeIfAbsent(key, _ => readFooter(conf, st)); () }
-          }.asJava
-        footerPool.invokeAll(tasks).asScala.foreach(_.get())
-      }
-    }
-    listed.map { case (key, st) =>
-      memo.computeIfAbsent(key, _ => readFooter(conf, st))
-    }
-  }
-
-  /** Partial count of the last distributed max-only reduce — spec hook
-    * (EventBusLockSpec asserts the collect is O(partitions), not
-    * O(files)). -1 until that path runs.
-    */
-  @volatile private[streaming] var lastMaxOnlyPartials: Int = -1
-
-  /** Max-only footer probe: the [[footerStats]] fold without the per-file
-    * collect. Same contract as [[EventBus.footerMaxSequence]]:
-    * `Some(Some(m))` = all trusted with max `m`; `Some(None)` = trusted,
-    * no values; `None` = untrusted somewhere. Below the distributed
-    * threshold it simply delegates to [[footerStats]] (driver pool,
-    * memo filled). ABOVE it (VERDICT r18 #5), the old path collected one
-    * FileFooter per miss — ~10⁶ path strings (~100–200 MB) in one
-    * driver collect for an answer that is a single long. This path
-    * reduces per PARTITION to (allTrusted, hasMax, max) and collects
-    * O(partitions) rows. Trade-off: the misses are NOT memoized (there
-    * are no per-file verdicts to keep) — a following
-    * [[EventBus.readAboveSequence]] on a still-cold memo pays the
-    * per-file job it needs anyway; with the bus manifest in place both
-    * are fallback paths.
-    */
-  private[streaming] def footerMaxOnly(
-      spark: SparkSession, path: String): Option[Option[Long]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val listing = listBus(spark, path)
-    val BusListing(memo, listed, misses) = listing
-    if (misses.size <= math.max(1, distributedThreshold(spark))) {
-      val stats = footerStatsOf(spark, path, listing)
-      if (stats.exists(!_.trusted)) None
-      else Some(
-        stats.filter(_.hasMax).map(_.max) match {
-          case s if s.isEmpty => None
-          case s => Some(s.max)
-        })
-    } else {
-      val sconf = new SerializableHadoopConf(conf)
-      val meta = misses.map { case (_, st) =>
-        (st.getPath.toString, st.getLen, st.getModificationTime)
-      }
-      val partials = spark.sparkContext
-        .parallelize(meta, math.min(meta.size,
-          spark.sparkContext.defaultParallelism * 4))
-        .mapPartitions { it =>
-          var trusted = true; var hasMax = false; var mx = Long.MinValue
-          it.foreach { case (f, len, mtime) =>
-            val ff = readFooterAt(sconf.value, f, len, mtime)
-            if (!ff.trusted) trusted = false
-            else if (ff.hasMax) { hasMax = true; if (ff.max > mx) mx = ff.max }
-          }
-          Iterator.single((trusted, hasMax, mx))
-        }
-        .collect()
-      lastMaxOnlyPartials = partials.length
-      val hits = listed.flatMap { case (key, _) => Option(memo.get(key)) }
-      if (partials.exists(!_._1) || hits.exists(!_.trusted)) None
-      else {
-        val maxes = partials.filter(_._2).map(_._3) ++
-          hits.filter(_.hasMax).map(_.max)
-        Some(if (maxes.isEmpty) None else Some(maxes.max))
-      }
-    }
   }
 
   /** Idempotent tail of a compaction swap, replayed from the intent
@@ -812,13 +560,13 @@ object EventBus {
     * and idempotence: (1) the manifest describes the OLD layout — drop
     * it; (2) move staged files whose targets are missing; (3) delete the
     * intent's old files that still exist (never one that a staged file
-    * re-landed — checked against the staged set); (4) rebuild the
-    * manifest from the disk truth; (5) drop staging, then the marker
-    * last, so a crash anywhere re-enters here.
+    * re-landed — checked against the staged set); (4) drop staging,
+    * then the marker, so a crash anywhere before re-enters here; (5)
+    * rebuild the manifest from the disk truth.
     */
   private[streaming] def finishCompaction(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, path: String): Unit =
+      root: org.apache.hadoop.fs.Path): Unit =
     BusManifest.readIntent(fs, root).foreach { in =>
       fs.delete(BusManifest.dir(root), true)
       val staging = new org.apache.hadoop.fs.Path(root, in.staging)
@@ -826,7 +574,7 @@ object EventBus {
         if (!fs.exists(staging)) Set.empty
         else {
           val qStaging = fs.makeQualified(staging).toUri.getPath
-          listCommittedFiles(fs, staging).map { case (_, st) =>
+          listCommittedFiles(fs, staging).map { st =>
             val sp = st.getPath.toUri.getPath
             if (!sp.startsWith(qStaging + "/"))
               throw new java.io.IOException(s"staged file $sp outside $qStaging")
@@ -847,16 +595,12 @@ object EventBus {
       }
       // marker drops BEFORE the manifest rebuild: the disk is fully
       // swapped here, so a crash in between merely leaves a healed,
-      // manifestless bus — footer probes stay correct and the next
-      // append backfills. (Rebuild-first would recurse: the backfill's
-      // footer walk re-checks this very marker.)
+      // manifestless bus — probes answer from data until the next
+      // append backfills
       fs.delete(staging, true)
       fs.delete(BusManifest.intentPath(root), false)
-      if (manifestEnabled(spark) &&
-          fs.exists(root) && listCommittedFiles(fs, root).nonEmpty) {
-        backfillManifest(spark, fs, root, path)
-        ()
-      }
+      backfillManifest(spark.sparkContext.hadoopConfiguration, fs, root)
+      ()
     }
 
   /** Count of compaction intent-marker swaps — the BusManifestSpec
@@ -967,19 +711,10 @@ object EventBus {
     }
   }
 
-  /** Manifest kill switch: `graft.bus.manifest.enabled` (default true)
-    * gates BOTH maintenance (append) and consultation (probes) — false
-    * restores the plain footer-walk engine end-to-end (specs that pin
-    * the footer path, out-of-band bus surgery).
-    */
-  private[streaming] def manifestEnabled(spark: SparkSession): Boolean =
-    try spark.conf.get("graft.bus.manifest.enabled", "true").toBoolean
-    catch { case _: IllegalArgumentException => true }
-
   /** The bus's manifest commit pointer, replaying a crashed append's
     * dangling record first (under the append lock — reentrant for
     * callers already holding it, e.g. a boundary probe). None = no
-    * manifest / disabled / unreadable — callers take the footer walk.
+    * manifest / unreadable — callers answer from data.
     * The no-dangling-record fast path is LOCK-FREE: LATEST is replaced
     * atomically, and a record landing right after the existence check
     * belongs to an append whose rows are above any boundary this probe
@@ -989,13 +724,12 @@ object EventBus {
     */
   private[streaming] def manifestLatest(
       spark: SparkSession, path: String): Option[BusManifest.Latest] =
-    if (!manifestEnabled(spark)) None
-    else try {
+    try {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(BusManifest.intentPath(root)))
         appendLock(path).synchronized {
-          finishCompaction(spark, fs, root, path)
+          finishCompaction(spark, fs, root)
         }
       BusManifest.readLatest(fs, root) match {
         case Some(l)
@@ -1014,8 +748,8 @@ object EventBus {
     * (append-monotone sequences) — or at the newest CHECKPOINT record
     * (r20: a folded record covering every commit at-or-below its id, so
     * an Earliest read pays ≤ checkpoint-interval + 1 small reads instead
-    * of O(appends)). None = no trusted manifest — caller falls back to
-    * the footer walk. Some(empty) = trusted manifest, nothing above lo.
+    * of O(appends)). None = no trusted manifest — caller reads the whole
+    * bus. Some(empty) = trusted manifest, nothing above lo.
     */
   private[streaming] def manifestFilesAbove(
       spark: SparkSession, path: String, lo: Long): Option[Vector[String]] =
@@ -1031,7 +765,7 @@ object EventBus {
             val atCkpt = l.ckpt > 0 && id == l.ckpt
             (if (atCkpt) BusManifest.readCheckpoint(fs, root, id)
              else BusManifest.readRecord(fs, root, id)) match {
-              case None => return None // gap — degrade to the footer walk
+              case None => return None // gap — degrade to a full read
               case Some(rec) =>
                 if (!rec.trusted) return None
                 if (rec.hasMax && rec.max <= lo) stop = true
@@ -1088,7 +822,9 @@ object EventBus {
       case _ => None
     }
 
-  /** Concurrent footer verdicts for a small (one-commit) file set. */
+  /** Concurrent footer verdicts for a file set (one commit's files, or a
+    * whole bus during a backfill).
+    */
   private def readFootersFor(conf: org.apache.hadoop.conf.Configuration,
       sts: Vector[org.apache.hadoop.fs.FileStatus]): Vector[FileFooter] =
     if (sts.sizeIs <= 1) sts.map(readFooter(conf, _))
@@ -1103,16 +839,20 @@ object EventBus {
   /** First manifested append to a PRE-EXISTING bus: one footer walk
     * turns the current file set into record 1 (staging=None — the files
     * are already in place), so legacy history rides the manifest from
-    * here on. Untrusted footers make an untrusted manifest — probes
-    * keep falling back, never answer wrong.
+    * here on. Also the manifest rebuild after a compaction swap.
+    * Untrusted footers make an untrusted manifest — probes keep
+    * answering from data, never wrong.
     */
-  private def backfillManifest(spark: SparkSession,
+  private def backfillManifest(conf: org.apache.hadoop.conf.Configuration,
       fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, path: String): BusManifest.Latest = {
-    val stats = footerStats(spark, path).toVector
+      root: org.apache.hadoop.fs.Path): Option[BusManifest.Latest] = {
+    val listed =
+      if (fs.exists(root)) listCommittedFiles(fs, root) else Vector.empty
+    if (listed.isEmpty) return None
+    val stats = readFootersFor(conf, listed)
     val qRoot = fs.makeQualified(root).toUri.getPath
-    val files = stats.map { ff =>
-      val sp = new org.apache.hadoop.fs.Path(ff.file).toUri.getPath
+    val files = listed.zip(stats).map { case (st, ff) =>
+      val sp = st.getPath.toUri.getPath
       if (!sp.startsWith(qRoot + "/"))
         throw new java.io.IOException(s"bus file $sp outside $qRoot")
       BusManifest.FileEntry(sp.substring(qRoot.length + 1), ff.hasMax, ff.max)
@@ -1126,7 +866,7 @@ object EventBus {
       BusManifest.Latest(0L, trusted = true, hasMax = false, Long.MinValue),
       rec)
     BusManifest.writeLatest(fs, root, latest)
-    latest
+    Some(latest)
   }
 
   /** The manifested append (caller holds the per-path append lock): the
@@ -1143,7 +883,7 @@ object EventBus {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
-    finishCompaction(spark, fs, root, path) // heal a crashed swap first
+    finishCompaction(spark, fs, root) // heal a crashed swap first
     // set when current() is irrecoverable: the dropped manifest may have
     // held unreplayed records whose staged-but-unmoved files live in
     // staging dirs — those are QUARANTINED below, not swept (ADVICE r19:
@@ -1163,9 +903,7 @@ object EventBus {
       }) match {
         case Some(l) => l
         case None =>
-          if (fs.exists(root) && listCommittedFiles(fs, root).nonEmpty)
-            backfillManifest(spark, fs, root, path)
-          else {
+          backfillManifest(conf, fs, root).getOrElse {
             val l = BusManifest.Latest(0L, trusted = true, hasMax = false,
               Long.MinValue)
             fs.mkdirs(BusManifest.dir(root))
@@ -1208,9 +946,9 @@ object EventBus {
       else df.write.partitionBy(partitionCols: _*)
     writer.mode("overwrite").parquet(staging.toString)
     val staged = listCommittedFiles(fs, staging)
-    val verdicts = readFootersFor(conf, staged.map(_._2))
+    val verdicts = readFootersFor(conf, staged)
     val qStaging = fs.makeQualified(staging).toUri.getPath
-    val entries = staged.map(_._2).zip(verdicts).map { case (st, ff) =>
+    val entries = staged.zip(verdicts).map { case (st, ff) =>
       val sp = st.getPath.toUri.getPath
       if (!sp.startsWith(qStaging + "/"))
         throw new java.io.IOException(s"staged file $sp outside $qStaging")
@@ -1228,29 +966,21 @@ object EventBus {
           throw new java.io.IOException(s"collision rename failed for $rel")
         rel = unique
       }
-      (rel, st, ff)
+      (rel, ff)
     }
     val maxes = verdicts.filter(_.hasMax).map(_.max)
     val rec = BusManifest.Record(nextId, Some(stagingName),
       verdicts.forall(_.trusted), maxes.nonEmpty,
       if (maxes.nonEmpty) maxes.max else Long.MinValue,
-      entries.map { case (rel, _, ff) =>
+      entries.map { case (rel, ff) =>
         BusManifest.FileEntry(rel, ff.hasMax, ff.max)
       })
     BusManifest.writeRecord(fs, root, rec)
-    val memo = footerMemos.computeIfAbsent(appendLockKey(path),
-      _ => new java.util.concurrent.ConcurrentHashMap[String, FileFooter]())
-    entries.foreach { case (rel, st, ff) =>
+    entries.foreach { case (rel, _) =>
       val target = new org.apache.hadoop.fs.Path(root, rel)
       Option(target.getParent).foreach { p => fs.mkdirs(p); () }
       if (!fs.rename(new org.apache.hadoop.fs.Path(staging, rel), target))
         throw new java.io.IOException(s"commit rename of $rel failed")
-      // seed the footer memo under the FINAL key (rename preserves len;
-      // POSIX preserves mtime — a store that doesn't just misses later)
-      val q = fs.makeQualified(target)
-      memo.put(s"$q:${st.getLen}:${st.getModificationTime}",
-        ff.copy(file = q.toString))
-      ()
     }
     fs.delete(staging, true)
     val latest = BusManifest.combine(base, rec)
@@ -1335,77 +1065,42 @@ object EventBus {
     }
   }
 
-  /** [[readFooter]] from a bare path + the driver's listing-time
-    * (len, mtime) — the distributed-read variant (an executor has no
-    * FileStatus; it stats the file itself). The executor's stat is
-    * COMPARED against the listing-time values (ADVICE r18): if the file
-    * was rewritten between the driver's listing and this read, the old
-    * `fromPath` open would memoize the NEW content's verdict under the
-    * stale (path, len, mtime) key and serve it for this probe — only
-    * reachable when the committed-file-immutability invariant is
-    * violated (out-of-band compaction mid-probe), but the cheap stat
-    * makes the degradation (trusted=false → data aggregate) match what
-    * the driver path's `fromStatus` already does. Never throws: an
-    * unreadable/garbled footer is an untrusted file, not a probe crash.
-    */
-  private def readFooterAt(conf: org.apache.hadoop.conf.Configuration,
-      file: String, len: Long, mtime: Long): FileFooter =
-    try {
-      val p = new org.apache.hadoop.fs.Path(file)
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      if (st.getLen != len || st.getModificationTime != mtime)
-        FileFooter(file, trusted = false, hasMax = false, max = Long.MinValue)
-      else footerVerdict(file,
-        org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)))
-    } catch {
-      case _: Exception => FileFooter(file, trusted = false,
-        hasMax = false, max = Long.MinValue)
-    }
-
   /** One file's footer verdict — see [[FileFooter]]. Never throws: an
-    * unreadable/garbled footer is an untrusted file, not a probe crash.
+    * unreadable/garbled footer is an untrusted file, not a crash.
     */
-
   private def readFooter(conf: org.apache.hadoop.conf.Configuration,
       st: org.apache.hadoop.fs.FileStatus): FileFooter = {
-    val file = st.getPath.toString
-    try footerVerdict(file,
-      org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)))
-    catch {
-      case _: Exception => FileFooter(file, trusted = false,
-        hasMax = false, max = Long.MinValue)
-    }
-  }
-
-  /** The per-file verdict from an open reader (closes it). */
-  private def footerVerdict(file: String,
-      reader: org.apache.parquet.hadoop.ParquetFileReader): FileFooter = {
     import scala.jdk.CollectionConverters._
     try {
-      var trusted = true
-      var hasMax = false
-      var mx = Long.MinValue
-      reader.getFooter.getBlocks.asScala.foreach { block =>
-        block.getColumns.asScala
-          .find(_.getPath.toDotString == "sequence_number") match {
-          case None => ()
-          case Some(cc) =>
-            val stats: org.apache.parquet.column.statistics.Statistics[_] =
-              cc.getStatistics
-            if (stats == null ||
-                (stats.isEmpty && block.getRowCount > 0)) trusted = false
-            else if (stats.hasNonNullValue) stats.genericGetMax match {
-              case l: java.lang.Long =>
-                hasMax = true; if (l > mx) mx = l.longValue
-              case _ => trusted = false // not int64 — schema drifted
-            }
-          // else: all values in the block are null — contributes nothing
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try {
+        var trusted = true
+        var hasMax = false
+        var mx = Long.MinValue
+        reader.getFooter.getBlocks.asScala.foreach { block =>
+          block.getColumns.asScala
+            .find(_.getPath.toDotString == "sequence_number") match {
+            case None => ()
+            case Some(cc) =>
+              val stats: org.apache.parquet.column.statistics.Statistics[_] =
+                cc.getStatistics
+              if (stats == null ||
+                  (stats.isEmpty && block.getRowCount > 0)) trusted = false
+              else if (stats.hasNonNullValue) stats.genericGetMax match {
+                case l: java.lang.Long =>
+                  hasMax = true; if (l > mx) mx = l.longValue
+                case _ => trusted = false // not int64 — schema drifted
+              }
+            // else: all values in the block are null — contributes nothing
+          }
         }
-      }
-      FileFooter(file, trusted, hasMax, mx)
-    } finally reader.close()
+        FileFooter(trusted, hasMax, mx)
+      } finally reader.close()
+    } catch {
+      case _: Exception => FileFooter(trusted = false, hasMax = false,
+        max = Long.MinValue)
+    }
   }
 
   // one lock object per bus path (see [[EventBus.append]]); paths are

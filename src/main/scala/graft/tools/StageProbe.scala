@@ -2,14 +2,17 @@ package graft.tools
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Per-stage cost attribution for one named SparkEntry query — the
-  * measurement companion to [[ExplainDump]] (optimization guide §1/§7:
-  * decide WHERE the time goes before touching anything).
+/** Cost attribution for named SparkEntry queries — the measurement
+  * companion to [[ExplainDump]] (optimization guide §1/§7: decide WHERE
+  * the time goes before touching anything).
   *
-  * Usage: runMain graft.tools.StageProbe <name> [reps]
-  * Prints every completed stage's executorRunTime / executorCpuTime /
-  * shuffle bytes with its callsite name, sorted by run time, plus the
-  * job list. Reads SPARK_GRAFT_SF_DIR like Bench.
+  * Usage: runMain graft.tools.StageProbe <query[,query...]> [reps]
+  * Per rep it prints the driver-side split — Dataset construction
+  * (operator wiring + any eager pin jobs) vs the terminal action, with
+  * the action's Catalyst phase durations (analysis, optimization,
+  * planning) — then every completed stage's executorRunTime /
+  * executorCpuTime / shuffle bytes with its callsite name, sorted by run
+  * time, plus the job list. Reads SPARK_GRAFT_SF_DIR like Bench.
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
@@ -68,12 +71,18 @@ object StageProbe {
       rows.clear(); jobs.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val df = fn(spark, sfDir)
+      val t1 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val t2 = System.nanoTime()
       Thread.sleep(500) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
       graft.GraftSession.sweepPersisted(spark)
-      println(f"== rep $r: $name wall $wall%.2f s, ${rows.size} stages, ${jobs.size} jobs ==")
+      val phases = df.queryExecution.tracker.phases
+        .map { case (k, v) => s"$k=${v.durationMs}ms" }.mkString(" ")
+      println(f"== rep $r: $name wall ${(t2 - t0) / 1e9}%.2f s, ${rows.size} stages, ${jobs.size} jobs ==")
+      println(f"[phase] construct=${(t1 - t0) / 1e9}%.2f s " +
+        f"action=${(t2 - t1) / 1e9}%.2f s | $phases")
       println(f"total executorRunTime ${rows.map(_.run).sum / 1000.0}%.1f s, " +
         f"cpu ${rows.map(_.cpu).sum / 1000.0}%.1f s")
       rows.sortBy(-_.run).take(25).foreach { s =>

@@ -145,12 +145,12 @@ class HashKernelsSpec extends SparkSpec {
         (c, Array.fill(subdim)(rnd.nextDouble() * 4 - 2))
       }.toArray
     }
-    // embeddings including a SHORT row (slice length-mismatch → null slots)
-    // and an empty row
-    val embs = (0 until 200).map { i =>
+    // embeddings including a SHORT row (slice length-mismatch → null slots),
+    // an empty row, and a NULL embedding (id 200)
+    val embs = ((0 until 200).map { i =>
       val len = if (i % 17 == 0) rnd.nextInt(dim) else dim
-      (i, Array.fill(len)(rnd.nextFloat() * 2 - 1).toSeq)
-    }.toDF("id", "emb")
+      (i, Option(Array.fill(len)(rnd.nextFloat() * 2 - 1).toSeq))
+    } :+ ((200, Option.empty[Seq[Float]]))).toDF("id", "emb")
     val columnForm = embs.select(col("id"),
       array((for (s <- 0 until m; c <- 0 until k) yield {
         books(s).find(_._1 == c) match {
@@ -164,7 +164,16 @@ class HashKernelsSpec extends SparkSpec {
         books.toSeq.map(_.toSeq.map { case (c, a) => (c, a.toSeq) })).as("lut"))
     val a = columnForm.orderBy("id").collect().toSeq
     val b = kernelForm.orderBy("id").collect().toSeq
-    assert(a.nonEmpty && a === b)
+    // whole-null input: the kernel is null-safe (NULL lut) while the
+    // column spelling yields m·k null slots
+    val (aNull, aRest) = a.partition(_.getInt(0) == 200)
+    val (bNull, bRest) = b.partition(_.getInt(0) == 200)
+    assert(bNull.size == 1 && bNull.head.isNullAt(1),
+      "kernel must return a NULL lut for a NULL embedding")
+    assert(aNull.size == 1 &&
+      aNull.head.getSeq[java.lang.Double](1) === Seq.fill(m * k)(null),
+      "column spelling must return m·k null slots for a NULL embedding")
+    assert(aRest.size == 200 && aRest === bRest)
   }
 
   test("wrap_every_k kernel == array_join(transform(sequence)) spelling (r22)") {

@@ -8,8 +8,8 @@ import java.nio.file.Files
 /** The r19 bus commit manifest (VERDICT r18 #1): boundary probes answer
   * from the atomically-advanced LATEST pointer (O(1), no directory
   * listing), delta reads select files from records past the boundary
-  * (O(new commits)), the footer walk stays as the manifestless/legacy
-  * fallback, and a crashed append's dangling record replays
+  * (O(new commits)), a manifestless or untrusted bus answers from data,
+  * and a crashed append's dangling record replays
   * deterministically. The reference's per-entry vsb index
   * (server/store/vsb/index/index.go:56-61, block_seek.go:45-86) is the
   * semantic ancestor, re-expressed at parquet-file granularity.
@@ -139,7 +139,7 @@ class BusManifestSpec extends SparkSpec {
         col("sequence_number") < 45).count())
   }
 
-  test("torn manifest degrades to the footer walk; the next append rebuilds") {
+  test("torn manifest degrades to the data aggregate; the next append rebuilds") {
     val dir = Files.createTempDirectory("mftorn").toString
     val bus = EventBus(dir)
     val base = EventView.fromEventsTable(Tables.events(spark, sf))
@@ -150,7 +150,7 @@ class BusManifestSpec extends SparkSpec {
     val out = fs.create(BusManifest.latestPath(root), true)
     try out.write("graft-bus-manifest-latest v1\nid".getBytes("UTF-8"))
     finally out.close()
-    // probes degrade to the footer walk — exact, never wrong
+    // probes degrade to the data aggregate — exact, never wrong
     assert(bus.maxSequenceFrame(spark).head.getLong(0) == 39L,
       "a torn manifest must fall back, not crash or mis-answer")
     assert(bus.readAboveSequence(spark, 20L)
@@ -234,7 +234,7 @@ class BusManifestSpec extends SparkSpec {
     base.coalesce(1).write.mode("overwrite")
       .parquet(new org.apache.hadoop.fs.Path(root, stagingName).toString)
     val qRoot = fs.makeQualified(root).toUri.getPath
-    val olds = EventBus.listCommittedFiles(fs, root).map { case (_, st) =>
+    val olds = EventBus.listCommittedFiles(fs, root).map { st =>
       st.getPath.toUri.getPath.substring(qRoot.length + 1)
     }
     BusManifest.writeIntent(fs, root,
@@ -319,7 +319,6 @@ class BusManifestSpec extends SparkSpec {
     val root = new org.apache.hadoop.fs.Path(dir)
     def snapshot(date: String): Set[(String, Long, Long)] =
       EventBus.listCommittedFiles(fs, root)
-        .map(_._2)
         .filter(_.getPath.toString.contains(s"d=$date"))
         .map(st => (st.getPath.toString, st.getLen,
           st.getModificationTime)).toSet
@@ -431,7 +430,7 @@ class BusManifestSpec extends SparkSpec {
     val tailFiles = (perCommit(2) ++ perCommit(3)).map(uriPath)
     val tailStats = EventBus.listCommittedFiles(fs,
       new org.apache.hadoop.fs.Path(dir))
-      .map(_._2).filter(st => tailFiles.contains(
+      .filter(st => tailFiles.contains(
         st.getPath.toUri.getPath))
       .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
       .toSet
@@ -439,7 +438,7 @@ class BusManifestSpec extends SparkSpec {
     // byte-identical (the serve-while-compacting contract)
     assert(bus.compactBelow(spark, 1, Seq(ckA, ckB)) == 4)
     val after = EventBus.listCommittedFiles(fs,
-      new org.apache.hadoop.fs.Path(dir)).map(_._2)
+      new org.apache.hadoop.fs.Path(dir))
     assert(after.filter(st => tailFiles.contains(st.getPath.toUri.getPath))
       .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
       .toSet == tailStats, "uncommitted-by-B files must be untouched")
@@ -472,7 +471,7 @@ class BusManifestSpec extends SparkSpec {
     bus.compact(spark, 2)
     val fs = fsOf(dir)
     val root = new org.apache.hadoop.fs.Path(dir)
-    val rels = EventBus.listCommittedFiles(fs, root).map { case (_, st) =>
+    val rels = EventBus.listCommittedFiles(fs, root).map { st =>
       st.getPath.toUri.getPath }
     assert(rels.forall(_.contains("/d=")),
       s"compaction must keep the partition layout: $rels")
@@ -557,25 +556,6 @@ class BusManifestSpec extends SparkSpec {
     }
   }
 
-  test("kill switch: disabled buses never grow a manifest and probes stay exact") {
-    val dir = Files.createTempDirectory("mfoff").toString
-    val bus = EventBus(dir)
-    val base = EventView.fromEventsTable(Tables.events(spark, sf))
-      .filter(col("sequence_number") < 30)
-    val prior = spark.conf.getOption("graft.bus.manifest.enabled")
-    spark.conf.set("graft.bus.manifest.enabled", "false")
-    try {
-      bus.append(base)
-      assert(!fsOf(dir).exists(BusManifest.dir(
-        new org.apache.hadoop.fs.Path(dir))),
-        "disabled append must not create a manifest")
-      assert(bus.maxSequenceFrame(spark).head.getLong(0) == 29L)
-    } finally prior match {
-      case Some(v) => spark.conf.set("graft.bus.manifest.enabled", v)
-      case None => spark.conf.unset("graft.bus.manifest.enabled")
-    }
-  }
-
   test("compactPartitionDirs batches multiple hot dirs under ONE swap; cold stays byte-identical") {
     val dir = Files.createTempDirectory("mfbatchdir").toString
     val bus = EventBus(dir)
@@ -595,7 +575,7 @@ class BusManifestSpec extends SparkSpec {
     val fs = fsOf(dir)
     val root = new org.apache.hadoop.fs.Path(dir)
     def snapshot(date: String): Set[(String, Long, Long)] =
-      EventBus.listCommittedFiles(fs, root).map(_._2)
+      EventBus.listCommittedFiles(fs, root)
         .filter(_.getPath.toString.contains(s"d=$date"))
         .map(st => (st.getPath.toString, st.getLen,
           st.getModificationTime)).toSet
@@ -649,8 +629,8 @@ class BusManifestSpec extends SparkSpec {
         .mkString("\n"))
     val before = EventBus.listCommittedFiles(fsOf(dir),
       new org.apache.hadoop.fs.Path(dir))
-      .map(st => (st._2.getPath.toString, st._2.getLen,
-        st._2.getModificationTime)).toSet
+      .map(st => (st.getPath.toString, st.getLen,
+        st.getModificationTime)).toSet
     val e = intercept[java.io.IOException] {
       bus.compactBelow(spark, 1, Seq(ck))
     }
@@ -658,8 +638,8 @@ class BusManifestSpec extends SparkSpec {
     // nothing was swapped: every file of both layouts is byte-identical
     assert(EventBus.listCommittedFiles(fsOf(dir),
       new org.apache.hadoop.fs.Path(dir))
-      .map(st => (st._2.getPath.toString, st._2.getLen,
-        st._2.getModificationTime)).toSet == before)
+      .map(st => (st.getPath.toString, st.getLen,
+        st.getModificationTime)).toSet == before)
   }
 
   test("compactFloor: a floorless checkpoint WITH commits adopts 0; a fresh one adopts the current epoch") {

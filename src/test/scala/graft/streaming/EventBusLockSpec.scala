@@ -11,23 +11,11 @@ import java.nio.file.Files
   * commits) and the boundary probe's partition-scheme independence (r18:
   * footer-stats-exact for ANY scheme — a lexicographic-max directory
   * need not hold the max sequence, so no directory pruning is trusted).
+  * The footer cases run on LEGACY buses: history written raw (no
+  * manifest), then the first `bus.append` backfills the manifest from
+  * one footer walk over the committed files.
   */
 class EventBusLockSpec extends SparkSpec {
-
-  /** Run `body` with the bus manifest disabled: these tests pin the
-    * FOOTER-WALK engine (the manifestless/legacy fallback), and several
-    * perform out-of-band bus surgery (raw file writes/deletes) that the
-    * manifest, by documented invariant, does not track.
-    */
-  private def withoutManifest[A](body: => A): A = {
-    val prior = spark.conf.getOption("graft.bus.manifest.enabled")
-    spark.conf.set("graft.bus.manifest.enabled", "false")
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set("graft.bus.manifest.enabled", v)
-      case None => spark.conf.unset("graft.bus.manifest.enabled")
-    }
-  }
 
   test("appendLock: one lock per directory across path spellings") {
     val dir = Files.createTempDirectory("lockid").toString
@@ -58,16 +46,18 @@ class EventBusLockSpec extends SparkSpec {
       == base.count())
   }
 
-  test("footer probe ignores files staged under a hidden directory") { withoutManifest {
+  test("footer probe ignores files staged under a hidden directory") {
     // a mid-commit (or crashed) append leaves parts under the
     // committer's `_temporary`: complete-but-uncommitted files must not
-    // OVERSHOOT the high-water mark (the attach guard would then exclude
-    // sequences that commit later, permanently), and a garbled staged
-    // footer must not poison the probe
+    // OVERSHOOT the backfilled high-water mark (the attach guard would
+    // then exclude sequences that commit later, permanently), and a
+    // garbled staged footer must not poison the manifest
     val dir = Files.createTempDirectory("busstg").toString
     val bus = EventBus(dir)
     val base = EventView.fromEventsTable(Tables.events(spark, sf))
-    bus.append(base.filter(col("sequence_number") < 40))
+    // raw-written legacy history
+    base.filter(col("sequence_number") < 40)
+      .write.mode("append").parquet(dir)
     // stage a COMPLETE part carrying much higher sequences where a
     // crashed commit would leave it
     val stage = Files.createTempDirectory("busstg2").toString
@@ -78,12 +68,18 @@ class EventBusLockSpec extends SparkSpec {
     val tmpDir = Files.createDirectories(
       java.nio.file.Paths.get(dir, "_temporary", "0"))
     Files.copy(part.toPath, tmpDir.resolve(part.getName))
-    assert(bus.maxSequenceFrame(spark).head.getLong(0) == 39L,
+    // the first append backfills the manifest from the committed files
+    bus.append(base.filter(col("sequence_number") >= 40 &&
+      col("sequence_number") < 50))
+    assert(EventBus.manifestLatest(spark, dir).exists(l =>
+      l.trusted && l.hasMax && l.max == 49L),
+      "the backfill must not count the staged part")
+    assert(bus.maxSequenceFrame(spark).head.getLong(0) == 49L,
       "staged parts must not overshoot the boundary")
-    assert(bus.readAboveSequence(spark, 39L)
-      .filter(col("sequence_number") > 39L).count() == 0L,
+    assert(bus.readAboveSequence(spark, 49L)
+      .filter(col("sequence_number") > 49L).count() == 0L,
       "delta reads must not surface staged parts")
-  }}
+  }
 
   test("maxSequenceFrame: exact under partition schemes where directory " +
       "order contradicts sequence order") {
@@ -102,10 +98,6 @@ class EventBusLockSpec extends SparkSpec {
       .head.getLong(0)
     assert(bus.maxSequenceFrame(spark).head.getLong(0) == expected,
       "directory order must not influence the probe")
-    // the answer must hold on BOTH engines: the manifest (the default
-    // probe above) and the footer walk (the manifestless fallback)
-    assert(bus.footerMaxSequence(spark) == Some(Some(expected)),
-      "the footer-walk fallback must agree")
     // numeric date-SHAPED but non-ISO values too
     val dir2 = Files.createTempDirectory("busnp2").toString
     val bus2 = EventBus(dir2)
@@ -117,106 +109,34 @@ class EventBusLockSpec extends SparkSpec {
       bus2.read(spark).agg(max(col("sequence_number"))).head.getLong(0))
   }
 
-  test("footer probe: concurrent cold reads (driver pool) stay exact on a many-file bus") { withoutManifest {
-    // a cold probe's memo-miss footers are read by the bounded driver
-    // pool (> 1 miss) — the path a restarted driver takes on a bus its
-    // memo has never seen. 80 single-row files make the fan-out real.
+  test("footer probe: concurrent cold reads (driver pool) stay exact on a many-file bus") {
+    // the backfill of a legacy bus reads every committed footer through
+    // the bounded driver pool — the path a manifestless bus takes on its
+    // first append. An 80-file raw history makes the fan-out real.
     val dir = Files.createTempDirectory("buspool").toString
     val bus = EventBus(dir)
     val base = EventView.fromEventsTable(Tables.events(spark, sf))
-      .filter(col("sequence_number") < 80).repartition(80, col("id"))
-    bus.append(base)
+    base.filter(col("sequence_number") < 80).repartition(80, col("id"))
+      .write.mode("append").parquet(dir)
+    assert(bus.read(spark).inputFiles.length >= 40,
+      "need a many-file history to exercise the pool")
+    bus.append(base.filter(col("sequence_number") >= 80 &&
+      col("sequence_number") < 90))
     val expected = bus.read(spark).agg(max(col("sequence_number")))
       .head.getLong(0)
-    assert(bus.maxSequenceFrame(spark).head.getLong(0) == expected)
-    // memo-warm repeat answers the same (listing-only path)
+    assert(EventBus.manifestLatest(spark, dir).exists(l =>
+      l.trusted && l.hasMax && l.max == expected),
+      "the backfilled manifest must certify the exact max")
     assert(bus.maxSequenceFrame(spark).head.getLong(0) == expected)
     assert(bus.readAboveSequence(spark, expected)
       .filter(col("sequence_number") > expected).count() == 0L)
-  }}
+    // a mid-history boundary surfaces exactly the tail, legacy rows too
+    assert(bus.readAboveSequence(spark, 39L)
+      .filter(col("sequence_number") > 39L).count() ==
+      bus.read(spark).filter(col("sequence_number") > 39L).count())
+  }
 
-  test("footer memo tracks the live file set: stale entries pruned, probe stays exact") { withoutManifest {
-    // memory bound = O(live files) per bus, enforced by pruning against
-    // each probe's fresh listing — NOT a coarse clear, which on a bus
-    // above the cap would force every probe to re-read every footer
-    // (O(files) metadata RPCs per delta round at the 100 TB layout)
-    val dir = Files.createTempDirectory("busmemo").toString
-    val bus = EventBus(dir)
-    val base = EventView.fromEventsTable(Tables.events(spark, sf))
-      .filter(col("sequence_number") < 40).repartition(10, col("id"))
-    bus.append(base)
-    val n0 = bus.read(spark).inputFiles.length
-    assert(bus.maxSequenceFrame(spark).head.getLong(0) ==
-      bus.read(spark).agg(max(col("sequence_number"))).head.getLong(0))
-    assert(EventBus.footerMemoSize(dir) == n0,
-      s"memo must hold exactly the live files after a probe ($n0)")
-    // a compaction-style rewrite: delete the file holding the max, the
-    // next probe prunes its entry and answers from what remains
-    val stats = EventBus.footerStats(spark, dir)
-    val top = stats.maxBy(_.max)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(top.file), false)
-    val expected = bus.read(spark).agg(max(col("sequence_number")))
-      .head.getLong(0)
-    assert(bus.maxSequenceFrame(spark).head.getLong(0) == expected,
-      "probe must answer from the surviving files")
-    assert(EventBus.footerMemoSize(dir) == n0 - 1,
-      "the deleted file's memo entry must be pruned")
-    // BALANCED churn (ADVICE r18): one delete + one append keeps
-    // memo.size == listed.size, which the old size-triggered prune never
-    // fired on — the stale entry persisted. The unconditional prune drops
-    // it on the next probe: memo holds exactly the live files.
-    val stats2 = EventBus.footerStats(spark, dir)
-    val victim = stats2.minBy(_.max)
-    bus.append(base.filter(col("sequence_number") === 777).coalesce(1))
-    fs.delete(new org.apache.hadoop.fs.Path(victim.file), false)
-    val expected2 = bus.read(spark).agg(max(col("sequence_number")))
-      .head.getLong(0)
-    assert(bus.maxSequenceFrame(spark).head.getLong(0) == expected2)
-    assert(EventBus.footerMemoSize(dir) ==
-      bus.read(spark).inputFiles.length,
-      "balanced delete+append must still prune the stale entry")
-  }}
-
-  test("max-only distributed probe collects O(partitions), not O(files)") { withoutManifest {
-    // VERDICT r18 #5: the boundary probe needs ONE long, but the cold
-    // distributed path collected a FileFooter per miss (~10^6 path
-    // strings at the 100 TB layout). The max-only reduce returns one
-    // (trusted, max) partial per partition — bounded by
-    // 4*defaultParallelism regardless of file count.
-    val dir = Files.createTempDirectory("busmaxonly").toString
-    val bus = EventBus(dir)
-    val base = EventView.fromEventsTable(Tables.events(spark, sf))
-      .filter(col("sequence_number") < 130).repartition(130)
-    bus.append(base)
-    val nFiles = bus.read(spark).inputFiles.length
-    assert(nFiles > spark.sparkContext.defaultParallelism * 4 / 2,
-      s"need enough files to make the bound meaningful (got $nFiles)")
-    val prior = spark.conf.getOption("graft.bus.footer.distributedThreshold")
-    spark.conf.set("graft.bus.footer.distributedThreshold", "2")
-    EventBus.lastMaxOnlyPartials = -1
-    try {
-      val expected = bus.read(spark).agg(max(col("sequence_number")))
-        .head.getLong(0)
-      assert(bus.footerMaxSequence(spark) == Some(Some(expected)),
-        "max-only distributed reduce must stay exact")
-      assert(EventBus.lastMaxOnlyPartials > 0,
-        "the distributed max-only path must have run")
-      assert(EventBus.lastMaxOnlyPartials <=
-        spark.sparkContext.defaultParallelism * 4,
-        "partials must be bounded by the partition cap")
-      assert(EventBus.lastMaxOnlyPartials < nFiles,
-        "the collect must be strictly smaller than the file count")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.bus.footer.distributedThreshold", v)
-        case None => spark.conf.unset("graft.bus.footer.distributedThreshold")
-      }
-    }
-  }}
-
-  test("bus walk survives a symlinked directory cycle") { withoutManifest {
+  test("bus walk survives a symlinked directory cycle") {
     // ADVICE r18: the recursive walk blew the thread stack on a symlink
     // cycle — StackOverflowError is an Error, so the probe CRASHED
     // instead of degrading. The iterative walk skips already-visited
@@ -239,22 +159,23 @@ class EventBusLockSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listed = EventBus.listCommittedFiles(
       fs, new org.apache.hadoop.fs.Path(dir))
-    assert(listed.map(_._2.getPath.getName).distinct.size == listed.size,
+    assert(listed.map(_.getPath.getName).distinct.size == listed.size,
       "the cycle must not double-list any file")
-  }}
+  }
 
-  test("untrusted footer stats degrade the probe to the data aggregate — slower, never wrong") { withoutManifest {
-    // the load-bearing fallback: a committed file whose sequence_number
+  test("untrusted footer stats degrade the probe to the data aggregate — slower, never wrong") {
+    // the load-bearing degrade: a committed file whose sequence_number
     // stats are MISSING (here: written with statistics disabled) must
-    // poison footer-only answers for the whole bus — the probe computes
-    // from DATA and still finds that file's sequences. A refactor that
-    // skipped untrusted files instead of falling back would answer the
-    // trusted-footer max (39 here) and silently lose the catch-up rows
-    // above it.
+    // make the backfilled manifest untrusted — the probe computes from
+    // DATA and still finds that file's sequences. A refactor that
+    // skipped untrusted files instead would answer the trusted-footer
+    // max (39 here) and silently lose the catch-up rows above it.
     val dir = Files.createTempDirectory("busnostat").toString
     val bus = EventBus(dir)
     val base = EventView.fromEventsTable(Tables.events(spark, sf))
-    bus.append(base.filter(col("sequence_number") < 40))
+    // raw-written legacy history
+    base.filter(col("sequence_number") < 40)
+      .write.mode("append").parquet(dir)
     // a stats-less int64 part, committed (not hidden), holding the true max
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       "message spark_schema { required int64 sequence_number; }")
@@ -269,47 +190,15 @@ class EventBusLockSpec extends SparkSpec {
       w.write(gf.newGroup().append("sequence_number", s))
     }
     w.close()
-    val stats = EventBus.footerStats(spark, dir)
-    assert(stats.exists(!_.trusted),
-      "a stats-less file must read as untrusted, not be skipped")
+    // the first (empty) append backfills the manifest
+    bus.append(base.filter(lit(false)))
+    assert(EventBus.manifestLatest(spark, dir).exists(!_.trusted),
+      "a stats-less file must make the manifest untrusted, not be skipped")
     assert(bus.maxSequenceFrame(spark).head.getLong(0) == 110L,
       "the probe must fall back to the data aggregate and find the true max")
-    // delta reads conservatively include the untrusted file
+    // delta reads fall back to the whole bus
     assert(bus.readAboveSequence(spark, 39L)
       .filter(col("sequence_number") > 39L).count() == 11L,
       "rows above the trusted-footer max must still be served")
-  }}
-
-  test("footer probe: the distributed read path (threshold forced low) stays exact") { withoutManifest {
-    // above graft.bus.footer.distributedThreshold the memo-miss footers
-    // are read as ONE Spark job — the 100 TB cold-driver path (a million
-    // serial driver-side footer RPCs would take hours; executors turn it
-    // into a fan-out). Force the threshold to 2 so a 12-file bus takes it.
-    val dir = Files.createTempDirectory("busdist").toString
-    val bus = EventBus(dir)
-    val base = EventView.fromEventsTable(Tables.events(spark, sf))
-      .filter(col("sequence_number") < 48).repartition(12, col("id"))
-    bus.append(base)
-    val prior = spark.conf.getOption("graft.bus.footer.distributedThreshold")
-    spark.conf.set("graft.bus.footer.distributedThreshold", "2")
-    try {
-      val expected = bus.read(spark).agg(max(col("sequence_number")))
-        .head.getLong(0)
-      assert(bus.maxSequenceFrame(spark).head.getLong(0) == expected,
-        "distributed footer read must answer the exact max")
-      // delta pruning rides the same stats: nothing above the max
-      assert(bus.readAboveSequence(spark, expected)
-        .filter(col("sequence_number") > expected).count() == 0L)
-      // and a mid-range boundary still surfaces exactly the tail
-      val mid = expected / 2
-      assert(bus.readAboveSequence(spark, mid)
-        .filter(col("sequence_number") > mid).count() ==
-        bus.read(spark).filter(col("sequence_number") > mid).count())
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.bus.footer.distributedThreshold", v)
-        case None => spark.conf.unset("graft.bus.footer.distributedThreshold")
-      }
-    }
-  }}
+  }
 }

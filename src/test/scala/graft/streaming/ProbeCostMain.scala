@@ -6,16 +6,15 @@ import org.apache.spark.sql.functions._
   * the README's scale paragraph. Run with
   * `sbt "Test/runMain graft.streaming.ProbeCostMain"`.
   *
-  * Compares the r19 manifest probe (LATEST pointer, O(1)) against the
-  * footer-walk fallback (re-lists the bus every probe, O(files)) on
-  * warm-memo buses of growing file counts — the VERDICT r18 #1 claim
-  * under test is that the manifest probe does NOT grow with file count.
+  * Times the manifest probe (LATEST pointer, O(1)) on buses of growing
+  * file counts — the VERDICT r18 #1 claim under test is that the probe
+  * does NOT grow with file count.
   */
 object ProbeCostMain {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.local()
     val reps = 20
-    println("[probecost] files(=commits*10)  manifest_ms  footerwalk_ms  " +
+    println("[probecost] files(=commits*10)  manifest_ms  " +
       "delta_files_read  earliest_ms  earliest_record_reads")
     Seq(300, 1000, 3000).foreach { n =>
       val dir = java.nio.file.Files.createTempDirectory(s"probecost$n")
@@ -31,16 +30,10 @@ object ProbeCostMain {
           (b + 1).toLong * perCommit)
           .select(col("id").as("sequence_number")).repartition(perCommit))
       }
-      def timeProbes(): Double = {
-        bus.maxSequenceFrame(spark).head // warm
-        val t0 = System.nanoTime()
-        (1 to reps).foreach(_ => bus.maxSequenceFrame(spark).head)
-        (System.nanoTime() - t0) / reps / 1e6
-      }
-      val mfMs = timeProbes()
-      spark.conf.set("graft.bus.manifest.enabled", "false")
-      val fwMs = timeProbes()
-      spark.conf.unset("graft.bus.manifest.enabled")
+      bus.maxSequenceFrame(spark).head // warm
+      val t0 = System.nanoTime()
+      (1 to reps).foreach(_ => bus.maxSequenceFrame(spark).head)
+      val mfMs = (System.nanoTime() - t0) / reps / 1e6
       // delta read just above the second-to-last commit: O(new commits)
       val deltaFiles = bus.readAboveSequence(spark, n.toLong - perCommit - 1)
         .filter(col("sequence_number") > n.toLong - perCommit - 1)
@@ -56,7 +49,7 @@ object ProbeCostMain {
         EventBus.manifestFilesAbove(spark, dir, Long.MinValue))
       val eaMs = (System.nanoTime() - t1) / reps / 1e6
       val eaReads = BusManifest.recordReads.get() / reps
-      println(f"[probecost] $n%5d  $mfMs%11.2f  $fwMs%13.2f  " +
+      println(f"[probecost] $n%5d  $mfMs%11.2f  " +
         f"$deltaFiles%d  $eaMs%11.2f  $eaReads%d")
     }
     spark.stop()
