@@ -4,8 +4,10 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.graftexpr.LeafFrame
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
@@ -24,13 +26,15 @@ import org.apache.spark.storage.StorageLevel
   *
   * Two pieces close the gap:
   *
-  *  1. [[pin]] persists (MEMORY_AND_DISK) and eagerly materializes instead
-  *     of `localCheckpoint`-ing. A localCheckpoint's blocks ARE its data —
-  *     lineage is truncated, so evicting early loses the frame and later
-  *     consumers throw. Persisting keeps lineage, so eviction is safe at
-  *     ANY time: a consumer that arrives after eviction silently recomputes
-  *     (slower, never wrong). That safety is what makes automatic eviction
-  *     possible at all.
+  *  1. [[pinLeaf]] persists the frame's rows as an RDD (MEMORY_AND_DISK),
+  *     materializes it with one job, and returns a frame whose only plan
+  *     leaf is that RDD — the shape [[streaming.SubscriptionRunner]]'s
+  *     outcome pin already uses. A persisted RDD keeps its lineage, so
+  *     evicting it is safe at ANY time: a consumer that arrives after
+  *     eviction silently recomputes (slower, never wrong) — the
+  *     recompute-on-loss contract of the RDD design. That safety is what
+  *     makes automatic eviction possible at all. No pin is registered in
+  *     Spark's CacheManager, so no two invocations ever share one.
   *  2. [[releaseAfter]] registers the operator's RETURNED plan as the
   *     pins' terminal consumer. A [[QueryExecutionListener]] watches every
   *     completed action in the session; when one completes whose analyzed
@@ -38,7 +42,10 @@ import org.apache.spark.storage.StorageLevel
   *     caller built on top — `orderBy`, `select`, a write), the pins are
   *     unpersisted and deregistered. The operator's own training jobs run
   *     during construction, BEFORE registration, so they can never trigger
-  *     eviction mid-train.
+  *     eviction mid-train. Every terminal contains at least one of its own
+  *     pins' leaves, and leaves compare by RDD reference, so a late
+  *     completion event from one invocation never matches the next
+  *     invocation's terminal.
   *
   * Net effect: after the first action on an operator's result completes,
   * the session holds zero blocks for it ("evict on completion"). Re-running
@@ -56,20 +63,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraftCache {
 
-  /** `minExecId` epoch-guards the async sweep: two back-to-back invocations
-    * of the same operator produce `sameResult`-identical terminals, so a
-    * LATE completion event from run N would otherwise match — and evict —
-    * run N+1's freshly-registered pins mid-flight (lineage-safe but a full
-    * recompute of the training subtree; the r9 full-bench inflation on
-    * GraftCache-touching queries under listener-bus backlog). Execution ids
-    * are allocated monotonically at QueryExecution construction, so any
-    * event whose `qe.id` predates the entry's own result QE was in flight
-    * before this entry existed and cannot be its consumer. Inclusive lower
-    * bound: `collect()`-style actions run ON the result's own
-    * QueryExecution, whose id equals `minExecId`.
-    */
-  private final case class Entry(
-      terminal: LogicalPlan, pins: Seq[DataFrame], minExecId: Long)
+  private final case class Entry(terminal: LogicalPlan, pins: Seq[DataFrame])
 
   private val nextId = new AtomicLong(0L)
   private val entries = new ConcurrentHashMap[java.lang.Long, Entry]()
@@ -77,131 +71,78 @@ object GraftCache {
   // identity in a CHM: sessions are few and long-lived, so the strong key
   // is not a leak in practice — it dies with the JVM like the session does)
   private val installed = new ConcurrentHashMap[SparkSession, java.lang.Boolean]()
-  // leaf-frame RDD id → the SOURCE frame that actually holds the persist
-  // (see [[pinLeaf]]): unpersist must target the source, since calling
-  // unpersist on the LogicalRDD-rooted leaf is a no-op in the CacheManager
-  private val leafSources = new ConcurrentHashMap[Integer, DataFrame]()
 
-  /** Persist + eagerly materialize an operator-internal frame. The eager
-    * action is what lets the operator's OWN later jobs (training
-    * iterations, candidate joins) hit the cache instead of racing to
-    * materialize it lazily N times in parallel consumers.
-    */
-  def pin(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    df
-  }
-
-  /** [[pin]] + compact-leaf re-rooting (optimization r21, guide §1.2/§7.3
-    * "driver-side work"): persist `df`, materialize it with ONE count job
-    * (which builds the full cache — an InMemoryRelation stores every
-    * column), and return a [[org.apache.spark.sql.graftexpr.LeafFrame]] — a
-    * single LogicalRDD node over the pinned plan's own InternalRow RDD,
-    * carrying the materialized cache's Statistics. Consumers' logical plans
-    * stop embedding (and re-analyzing, re-cache-matching, re-optimizing per
-    * AQE round) the pin's whole lineage subtree, which StageProbe measured
-    * as the DOMINANT warm-run cost of the deep curation chains (~3.4 s of a
-    * 6.0 s wall at 2.6 s executor time). Eviction stays lineage-safe: the
-    * leaf's RDD recomputes from the captured physical plan when blocks are
-    * gone, and never re-persists. Pass the RETURNED leaf to
-    * [[releaseAfter]]; the source holding the persist is resolved
-    * internally.
+  /** Pin `df` as a compact leaf (optimization r21, guide §1.2/§7.3
+    * "driver-side work"): consumers' logical plans stop embedding (and
+    * re-analyzing, re-optimizing per AQE round) the pin's whole lineage
+    * subtree, which StageProbe measured as the DOMINANT warm-run cost of
+    * the deep curation chains (~3.4 s of a 6.0 s wall at 2.6 s executor
+    * time). Pass the RETURNED leaf to [[releaseAfter]].
     */
   def pinLeaf(df: DataFrame): DataFrame = pinLeafCounted(df)._1
 
   /** [[pinLeaf]] that also reports the materialized row count: the ONE
-    * count job that materializes the pin doubles as the counter, so
-    * operators whose branch decisions need the count never pay a second
-    * action. (ADVICE r21: an earlier doc here promised a stats fast-path
-    * that was never written — the count job is always how the pin
-    * materializes, fast-path or not.)
+    * job that materializes the pin doubles as the counter, so operators
+    * whose branch decisions need the count never pay a second action.
+    *
+    * The job runs under an execution id of `df`'s own QueryExecution, so
+    * its completion event carries the full analyzed subtree: an upstream
+    * operator's [[releaseAfter]] terminal nested inside it still matches
+    * in [[sweep]] (a leaf-rooted materialization would hide that lineage
+    * and strand the upstream entry's pins — caught by GraftCacheSpec).
+    * The same job sums the rows' UnsafeRow bytes, so the leaf carries
+    * measured Statistics for join-strategy (broadcast) decisions.
     */
   def pinLeafCounted(df: DataFrame): (DataFrame, Long) = {
-    import org.apache.spark.sql.graftexpr.LeafFrame
-    val t0 = System.nanoTime()
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize via count(), NOT via the leaf: the count's ANALYZED plan
-    // is the full subtree, so an upstream operator's releaseAfter terminal
-    // nested inside it still matches in [[sweep]] — a leaf-rooted
-    // materialization action would hide that lineage and strand the
-    // upstream entry's pins (caught by GraftCacheSpec). The count's
-    // EXECUTED plan is cache-substituted (persist just registered the
-    // frame), so the optimizer round past analysis is over the
-    // InMemoryRelation stub, and the count doubles as the row count
-    // callers need.
-    val t1 = System.nanoTime()
-    val n = df.count()
-    val t2 = System.nanoTime()
-    // df's own lazy QueryExecution is forced only now — post-persist,
-    // post-build — so the leaf's RDD is the InMemoryTableScan of the BUILT
-    // cache and the carried statistics are the measured ones
-    val leaf = LeafFrame(df, Some(LeafFrame.statsOf(df)))
-    LeafFrame.leafRddId(leaf).foreach(id => leafSources.put(id, df))
-    if (sys.env.contains("GRAFT_PIN_DEBUG")) {
-      val site = Thread.currentThread().getStackTrace
-        .find(e => e.getClassName.startsWith("graft.ext"))
-        .map(e => s"${e.getFileName}:${e.getLineNumber}").getOrElse("?")
-      println(f"[pin] $site plan=${(t1 - t0) / 1e9}%.2f " +
-        f"mat=${(t2 - t1) / 1e9}%.2f tail=${(System.nanoTime() - t2) / 1e9}%.2f n=$n")
+    val qe = df.queryExecution
+    val rowWidth = df.schema.defaultSize.toLong
+    val (rows, n, bytes) = SQLExecution.withNewExecutionId(qe, Some("pin")) {
+      val rows = qe.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+      // a failing job must not strand the partial blocks it persisted
+      val (n, bytes) =
+        try rows.aggregate((0L, 0L))(
+          (acc, r) => (acc._1 + 1L, acc._2 + (r match {
+            case u: UnsafeRow => u.getSizeInBytes.toLong
+            case _ => rowWidth
+          })),
+          (a, b) => (a._1 + b._1, a._2 + b._2))
+        catch { case t: Throwable => rows.unpersist(blocking = false); throw t }
+      (rows, n, bytes)
     }
-    (leaf, n)
+    (LeafFrame(df, rows, Statistics(BigInt(bytes), Some(BigInt(n)))), n)
   }
 
-  /** Unpersist a pin immediately (resolving a leaf back to its persisted
-    * source) — for training loops that supersede a pinned iteration frame
-    * mid-operator, where waiting for the terminal would hold every
-    * iteration's blocks at once.
+  /** Unpersist every RDD leaf of `df`'s analyzed plan now: a pin's own
+    * leaf, or the blocks behind a `localCheckpoint`'d frame. For training
+    * loops that supersede an iteration frame mid-operator, where waiting
+    * for the terminal would hold every iteration's blocks at once. A
+    * released pin only costs a recompute if read again; a released
+    * localCheckpoint's blocks ARE its data, so release one only once its
+    * successor is materialized with truncated lineage (bpeTrain's loop).
     */
-  def releaseNow(df: DataFrame): Unit = {
-    peekSourceOf(df).unpersist(blocking = false)
-    forget(df)
-  }
-
-  /** Drop `p`'s leaf→source mapping AFTER its persist was actually
-    * released. Resolution itself ([[peekSourceOf]]) never consumes the
-    * mapping (ADVICE r21): [[unpersistUnlessShared]] legitimately resolves
-    * a pin and then SKIPS the unpersist when another live entry shares it —
-    * a consuming resolve there stranded the mapping, so the surviving
-    * entry's own release later resolved the leaf to itself (a CacheManager
-    * no-op) and the source's blocks leaked until [[evictAll]].
-    */
-  private def forget(p: DataFrame): Unit = {
-    val id =
-      try org.apache.spark.sql.graftexpr.LeafFrame.leafRddId(p)
-      catch { case _: Throwable => None }
-    id.foreach(leafSources.remove(_))
-  }
+  def releaseNow(df: DataFrame): Unit =
+    LeafFrame.leafRdds(df).foreach(_.unpersist(blocking = false))
 
   /** Register `pins` for automatic eviction once an action over `result`
     * (or any plan containing it) completes. Returns `result` unchanged.
+    * `result` must read at least one of the pins' leaves: that leaf is
+    * what makes its terminal unique to this invocation.
     */
   def releaseAfter(result: DataFrame, pins: DataFrame*): DataFrame = {
     if (pins.nonEmpty) {
+      val pinned = pins.flatMap(LeafFrame.leafRdds).toSet
+      require(LeafFrame.leafRdds(result).exists(pinned),
+        "releaseAfter: the result reads none of its pins' leaves, so its " +
+          "terminal could match another invocation's completion event")
       ensureListener(result.sparkSession)
-      val qe = result.queryExecution
       entries.put(nextId.incrementAndGet(),
-        Entry(qe.analyzed, pins.toSeq, qe.id))
+        Entry(result.queryExecution.analyzed, pins.toSeq))
     }
     result
   }
 
-  /** Number of registered not-yet-evicted pin groups (spec hook). */
+  /** Number of registered not-yet-evicted pin groups. */
   def pendingCount: Int = entries.size()
-
-  /** Unpersist the blocks behind a `localCheckpoint`'d frame. ONLY for
-    * training loops whose superseded iteration frames are provably never
-    * read again: a localCheckpoint's blocks ARE its data, so releasing one
-    * that something still references fails that consumer. The safe pattern
-    * (bpeTrain) is: materialize iteration t+1 with truncated lineage —
-    * which therefore does not depend on iteration t — then release t.
-    */
-  def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Evict every registered pin immediately (lineage-safe by construction).
     * The harness-level belt-and-braces sweep; operators don't call this.
@@ -209,54 +150,9 @@ object GraftCache {
   def evictAll(): Unit = {
     val it = entries.keys()
     while (it.hasMoreElements) {
-      val k = it.nextElement()
-      val e = entries.remove(k)
-      if (e != null)
-        e.pins.foreach(p => peekSourceOf(p).unpersist(blocking = false))
+      val e = entries.remove(it.nextElement())
+      if (e != null) e.pins.foreach(releaseNow)
     }
-    leafSources.clear()
-  }
-
-  /** Unpersist `pins` EXCEPT those whose analyzed plan is still pinned by a
-    * live entry. Spark's CacheManager keys cached data by `sameResult` of
-    * the analyzed plan — two back-to-back invocations of a deterministic
-    * operator produce plan-identical pins that SHARE one cache entry, so
-    * unpersisting run N's pin would drop the data out from under run N+1
-    * even though run N+1's registry entry survives the epoch guard. Skipped
-    * pins are released when their surviving entry's own terminal completes.
-    * Leaf pins resolve to their persisted SOURCE on both sides of the
-    * comparison — two invocations' leaves are always distinct RDDs, but
-    * their sources are plan-identical and share the cache entry.
-    */
-  private def unpersistUnlessShared(pins: Seq[DataFrame]): Unit =
-    pins.foreach { p =>
-      val src = peekSourceOf(p)
-      val planP =
-        try src.queryExecution.analyzed
-        catch { case _: Throwable => null }
-      val shared = planP != null && {
-        val vs = entries.values().iterator()
-        var found = false
-        while (!found && vs.hasNext) {
-          val other = vs.next()
-          found = other.pins.exists { q =>
-            try peekSourceOf(q).queryExecution.analyzed.sameResult(planP)
-            catch { case _: Throwable => false }
-          }
-        }
-        found
-      }
-      if (!shared) { src.unpersist(blocking = false); forget(p) }
-    }
-
-  /** The frame holding the persist behind `p`: `p` itself, or the pinned
-    * source a [[pinLeaf]] leaf fronts. Never consumes the mapping — the
-    * unpersist paths call [[forget]] after an actual release. */
-  private def peekSourceOf(p: DataFrame): DataFrame = {
-    val id =
-      try org.apache.spark.sql.graftexpr.LeafFrame.leafRddId(p)
-      catch { case _: Throwable => None }
-    id.flatMap(i => Option(leafSources.get(i))).getOrElse(p)
   }
 
   private def ensureListener(spark: SparkSession): Unit =
@@ -279,12 +175,12 @@ object GraftCache {
       val it = entries.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
-        val hit = qe.id >= e.getValue.minExecId &&
-          (try plan.exists(_.sameResult(e.getValue.terminal))
-          catch { case _: Throwable => false })
+        val hit =
+          try plan.exists(_.sameResult(e.getValue.terminal))
+          catch { case _: Throwable => false }
         if (hit) {
           it.remove()
-          unpersistUnlessShared(e.getValue.pins)
+          e.getValue.pins.foreach(releaseNow)
         }
       }
     }

@@ -52,9 +52,10 @@ object GraftSession {
     * user needs no sweep at all. This harness-level sweep remains as belt
     * and braces between bench/verify queries: it drains the GraftCache
     * registry (covering entries whose terminal action never ran) and drops
-    * any remaining persisted blocks (r7's ~15 s bench regression on
-    * unchanged code was exactly such accumulation shrinking unified
-    * execution memory and raising GC pressure).
+    * any remaining persisted RDD — GraftCache pins are plain persisted
+    * RDDs, so this reaches every pin, registered or not (r7's ~15 s bench
+    * regression on unchanged code was exactly such accumulation shrinking
+    * unified execution memory and raising GC pressure).
     */
   def sweepPersisted(spark: SparkSession): Unit = {
     GraftCache.evictAll()

@@ -367,14 +367,14 @@ object Dedup {
         // Catalyst plan nests every prior iteration's join chain, so
         // analysis/optimization cost grows per iteration — and this branch
         // is the one that runs at 100 TB, where components can take tens
-        // of iterations. pinLeaf does the re-rooting natively over the
-        // InternalRow RDD (the former createDataFrame(updPlan.rdd, schema)
-        // spelling paid a Row deserialize/re-serialize round per row per
-        // iteration); unlike a localCheckpoint (whose released blocks are
-        // unrecoverable, voiding [[graft.GraftCache]]'s evict-anytime
-        // safety contract), the leaf keeps full recompute lineage through
-        // the persisted parent: evicting any pin at any time still only
-        // costs a recompute, never a failure.
+        // of iterations. pinLeaf does the re-rooting natively over a
+        // persisted InternalRow RDD (the former createDataFrame(updPlan.rdd,
+        // schema) spelling paid a Row deserialize/re-serialize round per
+        // row per iteration); unlike a localCheckpoint (whose released
+        // blocks are unrecoverable, voiding [[graft.GraftCache]]'s
+        // evict-anytime safety contract), the leaf's RDD keeps its full
+        // recompute lineage: evicting any pin at any time still only costs
+        // a recompute, never a failure.
         val upd = graft.GraftCache.pinLeaf(updPlan)
         changed = upd.filter(col("comp2") =!= col("comp")).count()
         graft.GraftCache.releaseNow(pinnedLbl)

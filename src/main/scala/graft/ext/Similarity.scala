@@ -607,8 +607,9 @@ object Similarity {
     * out and each task scores only the probed fraction. The residual
     * path's training-input frame (a corpus-wide residual projection read
     * once per PQ iteration plus the encode pass) is still pinned via
-    * [[graft.GraftCache.pinLeaf]] and released once an action over the
-    * returned frame completes.
+    * [[graft.GraftCache.pinLeaf]] — a persisted RDD that the returned
+    * plan reads as its codes-side leaf — and unpersisted once an action
+    * over the returned frame completes.
     */
   /** Element-wise residual x − centroid, double subtraction rounded back
     * to float — IEEE round-to-nearest is deterministic, so an independent

@@ -330,14 +330,14 @@ object TextAnalysis {
           // `next` is materialized with truncated lineage, so the
           // superseded frame's blocks are provably dead — release them now
           // instead of holding one frame per merge for the whole run
-          graft.GraftCache.releaseCheckpoint(vocab)
+          graft.GraftCache.releaseNow(vocab)
           vocab = next
           sinceCkpt = 0
         } else vocab = applied
         rank += 1
       }
     }
-    graft.GraftCache.releaseCheckpoint(vocab)
+    graft.GraftCache.releaseNow(vocab)
     import spark.implicits._
     learned.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
   }

@@ -23,8 +23,18 @@ class EventBus(val path: String) extends Serializable {
 
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
 
-  def readStream(spark: SparkSession): DataFrame =
+  /** The bus as a stream for the query checkpointed at `checkpoint`, with
+    * the stream-safe compaction guard applied: rows from a compaction
+    * output stamped after this checkpoint's birth are content the stream
+    * already committed, re-listed under a new path, and are dropped
+    * in-plan, before any state operator ([[compactBelow]]). There is no
+    * unguarded stream read.
+    */
+  def readStream(spark: SparkSession, checkpoint: String): DataFrame = {
+    val floor = EventBus.compactFloor(spark, path, checkpoint)
     spark.readStream.schema(EventView.schema).parquet(path)
+      .filter(!EventBus.redeliveredByCompaction(floor))
+  }
 
   /** Append a frame to the bus.
     *
@@ -279,14 +289,13 @@ class EventBus(val path: String) extends Serializable {
     * the compacted OUTPUT as brand-new files and re-delivering their
     * rows — is closed by an epoch stamp: every output file name carries
     * `-gce<epoch>` (a per-bus counter bumped under the append lock,
-    * `_graft_compact_epoch`), and every [[SubscriptionRunner]] stream
-    * plan filters out rows whose file epoch is above the epoch its
-    * checkpoint was born at ([[EventBus.redeliveredByCompaction]] — a
-    * fresh checkpoint legitimately serves older compaction outputs as
-    * initial load; anything stamped later is by construction content
-    * that stream already committed). A bare `readStream` without the
-    * guard would re-deliver — use the runner's entry points, or apply
-    * the guard column with the floor from [[EventBus.compactFloor]].
+    * `_graft_compact_epoch`), and every stream read ([[readStream]],
+    * which every [[SubscriptionRunner]] query goes through) filters out
+    * rows whose file epoch is above the epoch its checkpoint was born at
+    * ([[EventBus.redeliveredByCompaction]] — a fresh checkpoint
+    * legitimately serves older compaction outputs as initial load;
+    * anything stamped later is by construction content that stream
+    * already committed).
     *
     * Pass the checkpoint location of EVERY active (or resumable) stream
     * on this bus: the compactable set is the intersection of their

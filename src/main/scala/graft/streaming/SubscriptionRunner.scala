@@ -484,13 +484,8 @@ object SubscriptionRunner {
       dlqBus: Option[EventBus],
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // stream-safe compaction guard (r20): rows from a compaction output
-    // stamped after this checkpoint's birth are content this stream
-    // already committed, re-listed under a new path — dropped in-plan,
-    // before any state operator ([[EventBus.compactBelow]])
-    val floor = EventBus.compactFloor(spark, sourceBus.path, checkpoint)
-    val source = sourceBus.readStream(spark)
-      .filter(!EventBus.redeliveredByCompaction(floor))
+    // readStream carries the stream-safe compaction guard (r20)
+    val source = sourceBus.readStream(spark, checkpoint)
     // the stateful stage (either or both knobs) dedupes with cross-batch
     // state; clear the knobs so processBatch doesn't re-fold every
     // micro-batch
@@ -1343,13 +1338,10 @@ object SubscriptionRunner {
       group: SharedGroup,
       checkpoint: String,
       trigger: Trigger): Unit = {
-    // same stream-safe compaction guard as [[start]] — a shared group's
-    // founders (guard Long.MinValue) take initial load from the stream,
-    // so a re-listed compaction output would re-deliver to every one of
-    // them without this
-    val floor = EventBus.compactFloor(spark, sourceBus.path, checkpoint)
-    group.queryRef = sourceBus.readStream(spark)
-      .filter(!EventBus.redeliveredByCompaction(floor))
+    // a shared group's founders (guard Long.MinValue) take initial load
+    // from the stream, so readStream's compaction guard is what keeps a
+    // re-listed compaction output from re-delivering to every one of them
+    group.queryRef = sourceBus.readStream(spark, checkpoint)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

@@ -10,9 +10,11 @@ import scala.collection.mutable.ArrayBuffer
   * Per rep it prints the driver-side split — Dataset construction
   * (operator wiring + any eager pin jobs) vs the terminal action, with
   * the action's Catalyst phase durations (analysis, optimization,
-  * planning) — then every completed stage's executorRunTime /
-  * executorCpuTime / shuffle bytes with its callsite name, sorted by run
-  * time, plus the job list. Reads SPARK_GRAFT_SF_DIR like Bench.
+  * planning) and the GraftCache pins still pending / RDDs still
+  * persisted once the action has settled — then every completed stage's
+  * executorRunTime / executorCpuTime / shuffle bytes with its callsite
+  * name, sorted by run time, plus the job list. Reads SPARK_GRAFT_SF_DIR
+  * like Bench.
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
@@ -77,12 +79,17 @@ object StageProbe {
       val t2 = System.nanoTime()
       Thread.sleep(500) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
+      // pin lifecycle after the settle: a pin still pending or persisted
+      // here outlived the action that should have evicted it
+      val pending = graft.GraftCache.pendingCount
+      val persisted = spark.sparkContext.getPersistentRDDs.size
       graft.GraftSession.sweepPersisted(spark)
       val phases = df.queryExecution.tracker.phases
         .map { case (k, v) => s"$k=${v.durationMs}ms" }.mkString(" ")
       println(f"== rep $r: $name wall ${(t2 - t0) / 1e9}%.2f s, ${rows.size} stages, ${jobs.size} jobs ==")
       println(f"[phase] construct=${(t1 - t0) / 1e9}%.2f s " +
         f"action=${(t2 - t1) / 1e9}%.2f s | $phases")
+      println(s"[pins] pending=$pending persisted_rdds=$persisted")
       println(f"total executorRunTime ${rows.map(_.run).sum / 1000.0}%.1f s, " +
         f"cpu ${rows.map(_.cpu).sum / 1000.0}%.1f s")
       rows.sortBy(-_.run).take(25).foreach { s =>

@@ -1,7 +1,10 @@
 package graft
 
 import graft.ext.{Curation, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftexpr.LeafFrame
+import org.apache.spark.storage.StorageLevel
 
 /** The operator-internal pin lifecycle (VERDICT r8 #4): pins are evicted
   * automatically once an action over the operator's returned frame
@@ -81,31 +84,52 @@ class GraftCacheSpec extends SparkSpec {
   }
 
   test("a LATE completion event from run N cannot evict run N+1's pins " +
-      "(epoch guard on execution id)") {
+      "(each terminal reads its own invocation's leaves)") {
     freshStart()
-    // two back-to-back invocations of the "same operator": sameResult-
-    // identical terminals, independently pinned — Bench's best-of-two shape
+    // two back-to-back invocations of the "same operator": plan-identical
+    // pins, independently materialized — Bench's best-of-two shape
     def invoke() = {
-      val pin = GraftCache.pin(
+      val pin = GraftCache.pinLeaf(
         spark.range(100).toDF("v").withColumn("h", md5(col("v").cast("string"))))
       val result = spark.range(50).toDF("k").join(pin, col("k") === col("v"))
       (GraftCache.releaseAfter(result, pin), pin)
     }
-    val (r1, _) = invoke()
+    // the pin's blocks, asked of the block registry (not the CacheManager)
+    def persisted(pin: DataFrame): Boolean = LeafFrame.leafRdds(pin).forall(r =>
+      spark.sparkContext.getPersistentRDDs.contains(r.id) &&
+        r.getStorageLevel != StorageLevel.NONE)
+    val (r1, p1) = invoke()
     val (_, p2) = invoke()
     assert(GraftCache.pendingCount === 2)
-    // an action on run 1's own QueryExecution: its execution id PREDATES
-    // run 2's registration, so the sweep must evict entry 1 only — before
-    // the guard, sameResult matched both and run 2 lost its pins mid-flight
+    assert(persisted(p1) && persisted(p2))
+    // an action on run 1's result, arriving after run 2 registered: run 1's
+    // terminal reads run 1's leaf RDD and run 2's reads run 2's, so the
+    // sweep must evict entry 1 only — and releasing run 1's pin must not
+    // drop the plan-identical data run 2 still reads
     r1.collect()
     val deadline = System.currentTimeMillis() + 30000
-    while (GraftCache.pendingCount > 1 && System.currentTimeMillis() < deadline)
+    while ((GraftCache.pendingCount > 1 || persisted(p1)) &&
+      System.currentTimeMillis() < deadline)
       Thread.sleep(100)
     assert(GraftCache.pendingCount === 1,
       "run 1's completion must evict exactly its own entry")
-    assert(p2.storageLevel.useMemory || p2.storageLevel.useDisk,
+    assert(!persisted(p1), "run 1's pin must be released by its own terminal")
+    assert(persisted(p2),
       "run 2's pin must still be persisted after run 1's late-matching event")
     GraftSession.sweepPersisted(spark)
+    assert(awaitNoBlocks())
+  }
+
+  test("releaseAfter rejects a result that reads none of its pins") {
+    freshStart()
+    val pin = GraftCache.pinLeaf(spark.range(10).toDF("v"))
+    // without one of its own leaves, a terminal is plan-identical across
+    // invocations and a late event from one could evict the other's pins
+    intercept[IllegalArgumentException] {
+      GraftCache.releaseAfter(spark.range(5).toDF("v"), pin)
+    }
+    assert(GraftCache.pendingCount === 0)
+    GraftCache.releaseNow(pin)
     assert(awaitNoBlocks())
   }
 
@@ -124,10 +148,9 @@ class GraftCacheSpec extends SparkSpec {
     val result = leaf.filter(col("v") < 100)
     GraftCache.releaseAfter(result, leaf)
     assert(result.count() === 100)
-    // eviction resolves the leaf back to its persisted SOURCE
-    assert(awaitNoBlocks(), "leaf pin must evict through its source")
-    // lineage-safe: the leaf recomputes from the captured physical plan —
-    // and must NOT silently re-persist (the storage level was cleared)
+    assert(awaitNoBlocks(), "leaf pin must evict through the terminal")
+    // lineage-safe: the leaf's RDD recomputes from the captured physical
+    // plan — and must NOT silently re-persist (the storage level was cleared)
     assert(result.count() === 100)
     Thread.sleep(1000)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,

@@ -778,6 +778,44 @@ class EndToEndSpec extends SparkSpec {
     } finally if (g2.query.isActive) g2.query.stop()
   }
 
+  test("a raw readStream query across compactBelow: zero re-deliveries without the runner") {
+    // EventBus.readStream carries the compaction guard itself, so a
+    // stream that never goes through the runner must not see re-listed
+    // compaction outputs as new files either
+    import org.apache.spark.sql.streaming.Trigger
+    val bus = EventBus(tmp("rawsrc"))
+    val ckpt = tmp("rawck")
+    val events = EventView.fromEventsTable(Tables.events(spark, sf))
+      .filter(col("sequence_number") < 70)
+    def slice(lo: Long, hi: Long) = events
+      .filter(col("sequence_number") >= lo && col("sequence_number") < hi)
+    (0 until 6).foreach(i =>
+      bus.append(slice(i * 10L, (i + 1) * 10L).repartition(2)))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    def drain(): Unit = {
+      val q = bus.readStream(spark, ckpt).writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          val got = b.select("id").collect().map(_.getString(0))
+          seen.synchronized { seen ++= got }
+          ()
+        }.start()
+      try assert(q.awaitTermination(60000)) finally q.stop()
+    }
+    drain()
+    assert(seen.size == 60)
+    // every file is committed by the drained checkpoint, so all compact
+    val filesBefore = bus.read(spark).inputFiles.length
+    assert(bus.compactBelow(spark, 2, Seq(ckpt)) == filesBefore)
+    bus.append(slice(60, 70).repartition(2))
+    drain()
+    val all = events.select("id").collect().map(_.getString(0)).toSet
+    assert(seen.size == 70 && seen.toSet == all,
+      s"the restarted stream must see the tail once and NOTHING re-delivered " +
+        s"(got ${seen.size} deliveries)")
+  }
+
   test("a FRESH checkpoint's founders take initial load from pre-birth compaction outputs") {
     // the floor contract's other half: the epoch guard drops only
     // outputs stamped AFTER a checkpoint's birth — a group born on an

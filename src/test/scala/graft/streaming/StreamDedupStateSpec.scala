@@ -34,8 +34,8 @@ class StreamDedupStateSpec extends SparkSpec {
   /** Stream the bus back into the raw-column contract the operators take
     * (type/data carry event_type/props verbatim).
     */
-  private def streamed(bus: EventBus): DataFrame =
-    bus.readStream(spark).select(
+  private def streamed(bus: EventBus, checkpoint: String): DataFrame =
+    bus.readStream(spark, checkpoint).select(
       col("type").as("event_type"), col("data").as("props"),
       col("time").as("ts"), col("sequence_number").as("event_id"))
 
@@ -133,7 +133,7 @@ class StreamDedupStateSpec extends SparkSpec {
     val ttl = java.time.Duration.ofMillis(400)
     val acc = new java.util.concurrent.ConcurrentHashMap[Long, (Boolean, Long)]()
     def runOnce(expect: Long*): Unit = {
-      val q = StreamDedup.verdictsStream(streamed(bus), Some(ttl))
+      val q = StreamDedup.verdictsStream(streamed(bus, ckpt), Some(ttl))
         .writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
@@ -175,7 +175,7 @@ class StreamDedupStateSpec extends SparkSpec {
     val ttl = java.time.Duration.ofHours(1)
     val acc = new java.util.concurrent.ConcurrentHashMap[Long, (Boolean, Long)]()
     def runOnce(expect: Long*): Unit = {
-      val q = StreamDedup.verdictsStream(streamed(bus), Some(ttl))
+      val q = StreamDedup.verdictsStream(streamed(bus, ckpt), Some(ttl))
         .writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
@@ -203,7 +203,7 @@ class StreamDedupStateSpec extends SparkSpec {
     val ttl = java.time.Duration.ofMillis(400)
     val acc = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
     def runOnce(expect: Long*): Unit = {
-      val q = StreamNearDedup.blockMatches(streamed(bus), ttl = Some(ttl))
+      val q = StreamNearDedup.blockMatches(streamed(bus, ckpt), ttl = Some(ttl))
         .writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
@@ -282,7 +282,7 @@ class StreamDedupStateSpec extends SparkSpec {
 
     val acc = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
     def runOnce(): Unit = {
-      val q = StreamNearDedup.blockMatches(streamed(bus), maxState = maxState)
+      val q = StreamNearDedup.blockMatches(streamed(bus, ckpt), maxState = maxState)
         .writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
@@ -331,7 +331,7 @@ class StreamDedupStateSpec extends SparkSpec {
     val ckpt = tmp("cap0ck")
     val acc = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
     def runOnce(): Unit = {
-      val q = StreamNearDedup.blockMatches(streamed(bus), maxState = 0)
+      val q = StreamNearDedup.blockMatches(streamed(bus, ckpt), maxState = 0)
         .writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
