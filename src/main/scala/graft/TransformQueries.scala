@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.ActionFunctions._
 import graft.model.EventView
 import graft.transform.TransformRunner
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -10,11 +9,11 @@ import org.apache.spark.sql.functions._
   * SURVEY §2.5 plus end-to-end interpreter pipelines (§2.4) and templates
   * (§2.6).
   *
-  * Scalar actions run through [[graft.functions.ActionFunctions]] (pure
-  * Column forms: codegen'd, pushdown-friendly — the 100 TB path); ordered
-  * stateful pipelines (struct mutations, debezium, templates) run through
-  * the [[graft.transform.TransformRunner]] interpreter, which is the
-  * fidelity path. Both are exercised against DuckDB oracles.
+  * Every entry runs the [[graft.transform.TransformRunner]] interpreter,
+  * the one implementation of the actions that subscriptions execute, so
+  * the DuckDB oracles check the delivery path's code. The action entries
+  * run a pipeline over a table and project their columns from the
+  * rendered body.
   */
 object TransformQueries {
   import Queries.Q
@@ -38,10 +37,32 @@ object TransformQueries {
   private def eventView(s: SparkSession, d: String): DataFrame =
     Tables.fanOut(EventView.fromEventsTable(events(s, d)))
 
-  /** JSON body field k as string / long / double */
-  private def kStr: Column = get_json_object(col("props"), "$.k")
-  private def kLong: Column = kStr.try_cast("bigint")
-  private def kDouble: Column = kStr.try_cast("double")
+  /** [[eventView]] whose data body carries the row's `value` beside `k`. */
+  private def valueEventView(s: SparkSession, d: String): DataFrame =
+    Tables.fanOut(EventView.fromEventsTable(events(s, d).withColumn("props",
+      to_json(struct(get_json_object(col("props"), "$.k").try_cast("bigint").as("k"),
+        col("value"))))))
+
+  /** The interpreter's input over `docs`, fanned out like [[eventView]]:
+    * `doc_id` is the sequence number and the data body holds `cols`. The
+    * runner defaults every context attribute the frame lacks.
+    */
+  private def docView(docs: DataFrame, cols: String*): DataFrame =
+    Tables.fanOut(docs).select(col("doc_id").as("sequence_number"),
+      to_json(struct(cols.map(col): _*)).as("data"))
+
+  /** Run one pipeline of `commands` (each a JSON command array). */
+  private def pipeline(view: DataFrame, commands: String*): DataFrame =
+    TransformRunner(view, commands.mkString("""{"pipeline": [""", ", ", "]}"))
+
+  /** The rendered body's member at data path `path` (e.g. `parts[0]`);
+    * NULL when an action error left it absent.
+    */
+  private def bodyAt(path: String): Column = get_json_object(col("body"), "$." + path)
+
+  /** Body members `names` as same-named columns of type `tpe`. */
+  private def members(tpe: String, names: String*): Seq[Column] =
+    names.map(n => bodyAt(n).cast(tpe).as(n))
 
   // ===========================================================================
   // interpreter pipelines (define → pipeline → template)
@@ -148,18 +169,21 @@ object TransformQueries {
     """))
 
   // ===========================================================================
-  // math actions (Column forms)
+  // math actions
   // ===========================================================================
 
   private val mathQ = Q(
     "action_math",
-    (s, d) => events(s, d).select(
-      col("event_id"),
-      mathAdd(kDouble, col("value"), lit(1)).as("m_add"),
-      mathSub(col("value"), kDouble).as("m_sub"),
-      mathMul(kDouble, lit(2)).as("m_mul"),
-      mathDiv(col("value"), lit(4)).as("m_div"),
-      mathDiv(col("value"), kDouble).as("m_div_guard")).orderBy(col("event_id")),
+    (s, d) => pipeline(valueEventView(s, d),
+      """["math_add", "$.data.m_add", "$.data.k", "$.data.value", 1]""",
+      """["math_sub", "$.data.m_sub", "$.data.value", "$.data.k"]""",
+      """["math_mul", "$.data.m_mul", "$.data.k", 2]""",
+      """["math_div", "$.data.m_div", "$.data.value", 4]""",
+      // k = 0 is a division-by-zero action error: the member stays absent
+      """["math_div", "$.data.m_div_guard", "$.data.value", "$.data.k"]""")
+      .select(col("sequence_number").as("event_id") +:
+        members("double", "m_add", "m_sub", "m_mul", "m_div", "m_div_guard"): _*)
+      .orderBy(col("event_id")),
     Some("""
       SELECT event_id,
              (CAST(json_extract_string(props, '$.k') AS DOUBLE) + value) + 1 AS m_add,
@@ -175,13 +199,22 @@ object TransformQueries {
   // datetime actions
   // ===========================================================================
 
+  /** date_format and convert_timezone rewrite their argument in place, so
+    * each formats a copy of the event's `time` attribute (RFC3339 text).
+    */
   private val datetimeQ = Q(
     "action_datetime",
-    (s, d) => events(s, d).select(
-      col("event_id"),
-      dateFormat(col("ts"), "Y-m-d H:i").as("dt_fmt"),
-      unixTimeFormat(kLong, "Y-m-d H:i:s").as("dt_unix"),
-      convertTimezone(col("ts"), "UTC", "Asia/Shanghai").as("dt_tz")).orderBy(col("event_id")),
+    (s, d) => pipeline(eventView(s, d),
+      """["duplicate", "$.time", "$.data.dt_fmt"]""",
+      """["date_format", "$.data.dt_fmt", "Y-m-d H:i"]""",
+      """["duplicate", "$.data.k", "$.data.dt_unix"]""",
+      """["unix_time_format", "$.data.dt_unix", "Y-m-d H:i:s"]""",
+      """["duplicate", "$.time", "$.data.dt_tz"]""",
+      """["date_format", "$.data.dt_tz", "Y-m-d H:i:s"]""",
+      """["convert_timezone", "$.data.dt_tz", "UTC", "Asia/Shanghai"]""")
+      .select(col("sequence_number").as("event_id") +:
+        members("string", "dt_fmt", "dt_unix", "dt_tz"): _*)
+      .orderBy(col("event_id")),
     Some("""
       SELECT event_id,
              strftime(ts, '%Y-%m-%d %H:%M') AS dt_fmt,
@@ -198,12 +231,18 @@ object TransformQueries {
 
   private val caseQ = Q(
     "action_case",
-    (s, d) => docs(s, d).select(
-      col("doc_id"),
-      upperCase(col("text")).as("s_upper"),
-      lowerCase(upperCase(col("text"))).as("s_lower"),
-      capitalizeSentence(col("text")).as("s_cap_sentence"),
-      capitalizeWord(col("text")).as("s_cap_word")).orderBy(col("doc_id")),
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["duplicate", "$.data.text", "$.data.s_upper"]""",
+      """["upper_case", "$.data.s_upper"]""",
+      """["duplicate", "$.data.s_upper", "$.data.s_lower"]""",
+      """["lower_case", "$.data.s_lower"]""",
+      """["duplicate", "$.data.text", "$.data.s_cap_sentence"]""",
+      """["capitalize_sentence", "$.data.s_cap_sentence"]""",
+      """["duplicate", "$.data.text", "$.data.s_cap_word"]""",
+      """["capitalize_word", "$.data.s_cap_word"]""")
+      .select(col("sequence_number").as("doc_id") +:
+        members("string", "s_upper", "s_lower", "s_cap_sentence", "s_cap_word"): _*)
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id,
              UPPER(text) AS s_upper,
@@ -216,10 +255,14 @@ object TransformQueries {
 
   private val affixQ = Q(
     "action_affix",
-    (s, d) => docs(s, d).select(
-      col("doc_id"),
-      addPrefix(col("text"), lit("doc: ")).as("s_prefixed"),
-      addSuffix(col("text"), lit("!")).as("s_suffixed")).orderBy(col("doc_id")),
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["duplicate", "$.data.text", "$.data.s_prefixed"]""",
+      """["add_prefix", "$.data.s_prefixed", "doc: "]""",
+      """["duplicate", "$.data.text", "$.data.s_suffixed"]""",
+      """["add_suffix", "$.data.s_suffixed", "!"]""")
+      .select(col("sequence_number").as("doc_id") +:
+        members("string", "s_prefixed", "s_suffixed"): _*)
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id, 'doc: ' || text AS s_prefixed, text || '!' AS s_suffixed
       FROM documents ORDER BY doc_id
@@ -227,9 +270,11 @@ object TransformQueries {
 
   private val joinQ = Q(
     "action_join",
-    (s, d) => docs(s, d).select(
-      col("doc_id"),
-      joinArrays("-", splitWithDelimiter(col("text"), " ")).as("s_joined")).orderBy(col("doc_id")),
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["split_with_delimiter", "$.data.text", " ", "$.data.words"]""",
+      """["join", "$.data.s_joined", "-", "$.data.words"]""")
+      .select(col("sequence_number").as("doc_id") +: members("string", "s_joined"): _*)
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id, REPLACE(text, ' ', '-') AS s_joined
       FROM documents ORDER BY doc_id
@@ -237,10 +282,14 @@ object TransformQueries {
 
   private val replaceQ = Q(
     "action_replace",
-    (s, d) => docs(s, d).select(
-      col("doc_id"),
-      replaceString(col("text"), "spark", "SPARK").as("s_replaced"),
-      replaceWithRegex(col("text"), "[aeiou]", "_").as("s_regex")).orderBy(col("doc_id")),
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["duplicate", "$.data.text", "$.data.s_replaced"]""",
+      """["replace_string", "$.data.s_replaced", "spark", "SPARK"]""",
+      """["duplicate", "$.data.text", "$.data.s_regex"]""",
+      """["replace_with_regex", "$.data.s_regex", "[aeiou]", "_"]""")
+      .select(col("sequence_number").as("doc_id") +:
+        members("string", "s_replaced", "s_regex"): _*)
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id,
              REPLACE(text, 'spark', 'SPARK') AS s_replaced,
@@ -250,10 +299,13 @@ object TransformQueries {
 
   private val spliceQ = Q(
     "action_splice_positions",
-    (s, d) => docs(s, d).filter(col("n_chars") > 20).select(
-      col("doc_id"),
-      replaceBetweenPositions(col("text"), 10, 15, "XXXXX").as("s_spliced"),
-      extractBetweenPositions(col("text"), 2, 10).as("s_extracted")).orderBy(col("doc_id")),
+    (s, d) => pipeline(docView(docs(s, d).filter(col("n_chars") > 20), "text"),
+      """["duplicate", "$.data.text", "$.data.s_spliced"]""",
+      """["replace_between_positions", "$.data.s_spliced", 10, 15, "XXXXX"]""",
+      """["extract_between_positions", "$.data.text", "$.data.s_extracted", 2, 10]""")
+      .select(col("sequence_number").as("doc_id") +:
+        members("string", "s_spliced", "s_extracted"): _*)
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id,
              substr(text, 1, 10) || 'XXXXX' || substr(text, 16) AS s_spliced,
@@ -261,24 +313,21 @@ object TransformQueries {
       FROM documents WHERE n_chars > 20 ORDER BY doc_id
     """))
 
-  /** Delimiter ops, formulated identically on both sides via a rest-substring
-    * (DuckDB strpos has no start offset). Only rows where 'join' is followed
-    * by 'merge' qualify.
+  /** Delimiter ops; the oracle walks a rest-substring (DuckDB strpos has no
+    * start offset). Only rows where 'join' is followed by 'merge' qualify:
+    * elsewhere the extract errors and leaves `s_between` absent (the
+    * in-place replace would leave its copy unchanged).
     */
   private val delimsQ = Q(
     "action_delimiters",
-    (s, d) => {
-      val t = col("text")
-      val si = locate("join", t) // 1-based; 0 = missing
-      val rest = t.substr(si + lit(4), length(t))
-      val ei = locate("merge", rest)
-      docs(s, d).filter(si > 0 && ei > 0).select(
-        col("doc_id"),
-        rest.substr(lit(1), ei - 1).as("s_between"),
-        concat(t.substr(lit(1), si - 1), lit("X"),
-          rest.substr(ei + lit(5), length(rest))).as("s_repl_delims"))
-        .orderBy(col("doc_id"))
-    },
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["extract_between_delimiters", "$.data.text", "$.data.s_between", "join", "merge"]""",
+      """["duplicate", "$.data.text", "$.data.s_repl_delims"]""",
+      """["replace_between_delimiters", "$.data.s_repl_delims", "join", "merge", "X"]""")
+      .select(col("sequence_number").as("doc_id") +:
+        members("string", "s_between", "s_repl_delims"): _*)
+      .filter(col("s_between").isNotNull)
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id,
              substr(rest, 1, strpos(rest, 'merge') - 1) AS s_between,
@@ -294,10 +343,12 @@ object TransformQueries {
 
   private val checkQ = Q(
     "action_check_extract_missing",
-    (s, d) => docs(s, d).select(
-      col("doc_id"),
-      checkCustomValues(col("text"), "spark", lit("has"), lit("no")).as("s_check"),
-      extractMissing(col("lang"), lit("EMPTY"), lit("FULL")).as("s_missing")).orderBy(col("doc_id")),
+    (s, d) => pipeline(docView(docs(s, d), "text", "lang"),
+      """["check_custom_values", "$.data.text", "spark", "$.data.s_check", "has", "no"]""",
+      """["extract_missing", "$.data.lang", "$.data.s_missing", "EMPTY", "FULL"]""")
+      .select(col("sequence_number").as("doc_id") +:
+        members("string", "s_check", "s_missing"): _*)
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id,
              CASE WHEN text LIKE '%spark%' THEN 'has' ELSE 'no' END AS s_check,
@@ -307,10 +358,11 @@ object TransformQueries {
 
   private val conditionQ = Q(
     "action_condition_if",
-    (s, d) => events(s, d).select(
-      col("event_id"),
-      conditionIf(col("value"), ">=", lit(100), lit("hi"), lit("lo")).as("c_ord"),
-      conditionIf(col("event_type"), "==", lit("error"), lit(1), lit(0)).as("c_eq"))
+    (s, d) => pipeline(valueEventView(s, d),
+      """["condition_if", "$.data.c_ord", "$.data.value", ">=", 100, "hi", "lo"]""",
+      """["condition_if", "$.data.c_eq", "$.type", "==", "error", 1, 0]""")
+      .select(col("sequence_number").as("event_id") +:
+        (members("string", "c_ord") ++ members("int", "c_eq")): _*)
       .orderBy(col("event_id")),
     Some("""
       SELECT event_id,
@@ -321,10 +373,12 @@ object TransformQueries {
 
   private val lengthQ = Q(
     "action_length",
-    (s, d) => docs(s, d).select(
-      col("doc_id"),
-      lengthOf(col("text")).cast("bigint").as("n_len"),
-      sizeOf(splitWithDelimiter(col("text"), " ")).cast("bigint").as("n_words"))
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["length", "$.data.n_len", "$.data.text"]""",
+      """["split_with_delimiter", "$.data.text", " ", "$.data.words"]""",
+      """["length", "$.data.n_words", "$.data.words"]""")
+      .select(col("sequence_number").as("doc_id") +:
+        members("bigint", "n_len", "n_words"): _*)
       .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id,
@@ -339,16 +393,16 @@ object TransformQueries {
 
   private val splitQ = Q(
     "action_split",
-    (s, d) => {
-      val parts = splitWithDelimiter(col("text"), " ")
-      docs(s, d).select(
-        col("doc_id"),
-        sizeOf(parts).cast("bigint").as("n_parts"),
-        element_at(parts, 1).as("s_first"),
-        element_at(splitFromStart(col("text"), 5), 1).as("s_head"),
-        element_at(splitFromStart(col("text"), 5), 2).as("s_tail"))
-        .orderBy(col("doc_id"))
-    },
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["split_with_delimiter", "$.data.text", " ", "$.data.parts"]""",
+      """["length", "$.data.n_parts", "$.data.parts"]""",
+      """["split_from_start", "$.data.text", 5, "$.data.halves"]""")
+      .select(col("sequence_number").as("doc_id"),
+        bodyAt("n_parts").cast("bigint").as("n_parts"),
+        bodyAt("parts[0]").as("s_first"),
+        bodyAt("halves[0]").as("s_head"),
+        bodyAt("halves[1]").as("s_tail"))
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id,
              len(string_split(text, ' ')) AS n_parts,
@@ -360,16 +414,17 @@ object TransformQueries {
 
   private val splitPosQ = Q(
     "action_split_positions",
-    (s, d) => {
-      val p3 = splitBetweenPositions(col("text"), 3, 9)
-      docs(s, d).filter(col("n_chars") > 12).select(
-        col("doc_id"),
-        element_at(p3, 1).as("p_a"),
-        element_at(p3, 2).as("p_b"),
-        element_at(p3, 3).as("p_c"),
-        (lit(1) + ceil((length(col("text")) - 5).cast("double") / 7d).cast("bigint")).as("n_chunks"),
-        substring(col("text"), 6, 7).as("s_chunk1")).orderBy(col("doc_id"))
-    },
+    (s, d) => pipeline(docView(docs(s, d).filter(col("n_chars") > 12), "text"),
+      """["split_between_positions", "$.data.text", 3, 9, "$.data.p"]""",
+      """["split_with_intervals", "$.data.text", 5, 7, "$.data.chunks"]""",
+      """["length", "$.data.n_chunks", "$.data.chunks"]""")
+      .select(col("sequence_number").as("doc_id"),
+        bodyAt("p[0]").as("p_a"),
+        bodyAt("p[1]").as("p_b"),
+        bodyAt("p[2]").as("p_c"),
+        bodyAt("n_chunks").cast("bigint").as("n_chunks"),
+        bodyAt("chunks[1]").as("s_chunk1"))
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id,
              substr(text, 1, 3) AS p_a,
@@ -381,16 +436,17 @@ object TransformQueries {
     """))
 
   // ===========================================================================
-  // array actions (higher-order functions — foreach.go / render.go / unfold)
+  // array actions (foreach.go / render.go / unfold_array.go)
   // ===========================================================================
 
   private val foreachQ = Q(
     "action_array_foreach",
-    // interpreted HOF (transform) over every word of every doc — the one
-    // action query whose per-row cost warrants redistribution
-    (s, d) => Tables.fanOut(docs(s, d)).select(
-      col("doc_id"),
-      array_join(arrayForeach(splitWithDelimiter(col("text"), " "), upper), " ").as("s_foreach"))
+    // each element is its own data root inside the nested command
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["split_with_delimiter", "$.data.text", " ", "$.data.words"]""",
+      """["array_foreach", "$.data.words", ["upper_case", "$.data"]]""",
+      """["join", "$.data.s_foreach", " ", "$.data.words"]""")
+      .select(col("sequence_number").as("doc_id") +: members("string", "s_foreach"): _*)
       .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id, UPPER(text) AS s_foreach
@@ -399,10 +455,12 @@ object TransformQueries {
 
   private val renderQ = Q(
     "action_render_array",
-    (s, d) => docs(s, d).select(
-      col("doc_id"),
-      array_join(renderArray(splitWithDelimiter(col("text"), " "),
-        w => concat(lit("w="), w)), ",").as("s_rendered")).orderBy(col("doc_id")),
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["split_with_delimiter", "$.data.text", " ", "$.data.words"]""",
+      """["render_array", "$.data.rendered", "$.data.words", "w=<@>"]""",
+      """["join", "$.data.s_rendered", ",", "$.data.rendered"]""")
+      .select(col("sequence_number").as("doc_id") +: members("string", "s_rendered"): _*)
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id, 'w=' || REPLACE(text, ' ', ',w=') AS s_rendered
       FROM documents ORDER BY doc_id
@@ -410,14 +468,16 @@ object TransformQueries {
 
   private val unfoldQ = Q(
     "action_unfold_array",
-    (s, d) => {
-      val parts = splitWithDelimiter(col("text"), " ")
-      docs(s, d).filter(sizeOf(parts) >= 3).select(
-        col("doc_id"),
-        element_at(parts, 1).as("u_0"),
-        element_at(parts, 2).as("u_1"),
-        element_at(parts, 3).as("u_2")).orderBy(col("doc_id"))
-    },
+    (s, d) => pipeline(docView(docs(s, d), "text"),
+      """["split_with_delimiter", "$.data.text", " ", "$.data.words"]""",
+      """["unfold_array", "$.data.words", "$.data.u"]""")
+      .select(col("sequence_number").as("doc_id"),
+        bodyAt("u-0").as("u_0"),
+        bodyAt("u-1").as("u_1"),
+        bodyAt("u-2").as("u_2"))
+      // member u-2 exists exactly when the text has at least three words
+      .filter(col("u_2").isNotNull)
+      .orderBy(col("doc_id")),
     Some("""
       SELECT doc_id,
              string_split(text, ' ')[1] AS u_0,

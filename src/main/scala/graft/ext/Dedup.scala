@@ -22,12 +22,6 @@ object Dedup {
     docs.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_copies"))
 
-  /** Deterministic 64-bit-ish word hash both engines can reproduce:
-    * decimal value of the first 8 hex chars of md5.
-    */
-  def wordHash(c: Column, bits: Int = 32): Column =
-    conv(substring(md5(c), 1, bits / 4), 16, 10).cast("bigint")
-
   /** n-word shingles (n=3): the MinHash input set. */
   def shingles(words: Column, n: Int = 3): Column =
     transform(sequence(lit(1), greatest(size(words) - (n - 1), lit(0))),

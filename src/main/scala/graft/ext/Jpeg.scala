@@ -366,10 +366,6 @@ object Jpeg {
     private var acc = 0
     private var nbits = 0
     var eof = false
-    /** True when positioned at a marker other than RSTn (end of scan). */
-    def atMarker: Boolean =
-      pos + 1 < bytes.length && (bytes(pos) & 0xff) == 0xff &&
-        (bytes(pos + 1) & 0xff) != 0x00
     def nextBit(): Int = {
       if (nbits == 0) {
         if (pos >= bytes.length) { eof = true; return 0 }

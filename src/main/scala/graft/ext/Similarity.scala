@@ -511,20 +511,6 @@ object Similarity {
     }: _*)
   }
 
-  /** Dense ADC lookup tables keyed by (query_id, probe_cell):
-    * lut[s·k + cell] = squared L2 between the keyed vector's subspace
-    * slice and that codeword (null for a codeword the trainer dropped —
-    * such cells are never assigned, so the slot is never read).
-    * Broadcast-sized: m·k doubles per key. The probe_cell key is what
-    * residual IVFADC needs — each probed cell has its own query residual,
-    * hence its own LUT.
-    */
-  private def pqLutKeyed(keyed: DataFrame, codebooks: DataFrame, m: Int,
-      k: Int, dim: Int): DataFrame =
-    keyed.select(col("query_id"), col("probe_cell"),
-      pqLutExpr(col("embedding"), collectBooks(codebooks, m), m, k,
-        dim).as("lut"))
-
   /** The dense sub-major lut[s·k + cell] array as ONE fused kernel call
     * per row ([[graft.functions.PqLut]] — optimization r22, guide §4).
     * The r21 per-slot spelling built the array from m·k separate

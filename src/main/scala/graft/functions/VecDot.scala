@@ -95,7 +95,6 @@ object VecDotExpr {
   * pushdown).
   */
 object ExprBridge {
-  def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
   def toExpressionEager(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)

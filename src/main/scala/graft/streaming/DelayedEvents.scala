@@ -45,14 +45,6 @@ object DelayedEvents {
     n
   }
 
-  /** Publish-side rerouting (proxy.go:198-229): events with a delivery time
-    * go to the timer spool, the rest to the target bus directly.
-    */
-  def routePublish(batch: DataFrame): (DataFrame, DataFrame) = {
-    val delayed = col("attributes").getItem("xvanusdeliverytime").isNotNull
-    (batch.filter(delayed), batch.filter(!delayed))
-  }
-
   /** Bucketed release for the publish-side timer spool (pass a
     * [[BucketedSpool]] as `Publisher.publish`'s timer bus): flush every
     * fully-matured bucket to the target bus in one append, then evict the

@@ -134,6 +134,7 @@ class EventBus(val path: String) extends Serializable {
       val old = EventBus.listCommittedFiles(fs, root)
       if (old.size <= math.max(1, targetFiles)) return
       val qRoot = fs.makeQualified(root).toUri.getPath
+      val deletes = old.map(EventBus.rootRelative(qRoot, _))
       // compacting a PARTITIONED layout without partitionCols would
       // rewrite partition directories into flat root files (the
       // partition column becomes a data column) and the next
@@ -141,14 +142,7 @@ class EventBus(val path: String) extends Serializable {
       // derive the columns from the existing directory names instead
       val cols =
         if (partitionCols.nonEmpty) partitionCols.toSeq
-        else old.headOption.toSeq.flatMap { st =>
-          val sp = st.getPath.toUri.getPath
-          sp.substring(qRoot.length + 1).split('/').dropRight(1)
-            .toSeq.flatMap { seg =>
-              val i = seg.indexOf('=')
-              if (i > 0) Some(seg.substring(0, i)) else None
-            }
-        }
+        else EventBus.partitionColsOf("compact", path, deletes)
       // eager file index: the read plan resolves to the OLD files before
       // the staging directory exists inside the same root
       val df = read(spark)
@@ -160,12 +154,6 @@ class EventBus(val path: String) extends Serializable {
       (if (cols.isEmpty) shaped.write
        else shaped.write.partitionBy(cols: _*))
         .mode("overwrite").parquet(staging.toString)
-      val deletes = old.map { st =>
-        val sp = st.getPath.toUri.getPath
-        if (!sp.startsWith(qRoot + "/"))
-          throw new java.io.IOException(s"bus file $sp outside $qRoot")
-        sp.substring(qRoot.length + 1)
-      }
       EventBus.compactSwaps.incrementAndGet()
       BusManifest.writeIntent(fs, root,
         BusManifest.CompactIntent(stagingName, deletes))
@@ -198,14 +186,8 @@ class EventBus(val path: String) extends Serializable {
       EventBus.sweepOrphanCompactStaging(fs, root)
       if (!fs.exists(root)) return 0
       val qRoot = fs.makeQualified(root).toUri.getPath
-      def relOf(st: org.apache.hadoop.fs.FileStatus): String = {
-        val sp = st.getPath.toUri.getPath
-        if (!sp.startsWith(qRoot + "/"))
-          throw new java.io.IOException(s"bus file $sp outside $qRoot")
-        sp.substring(qRoot.length + 1)
-      }
       val byDir = EventBus.listCommittedFiles(fs, root)
-        .map(relOf)
+        .map(EventBus.rootRelative(qRoot, _))
         .groupBy { rel =>
           val slash = rel.lastIndexOf('/')
           if (slash < 0) "" else rel.substring(0, slash)
@@ -338,27 +320,9 @@ class EventBus(val path: String) extends Serializable {
       val candidates = all.filter(st =>
         safe.contains(fs.makeQualified(st.getPath).toUri.getPath))
       if (candidates.size <= math.max(1, targetFiles)) return 0
-      val rels = candidates.map { st =>
-        val sp = st.getPath.toUri.getPath
-        if (!sp.startsWith(qRoot + "/"))
-          throw new java.io.IOException(s"bus file $sp outside $qRoot")
-        sp.substring(qRoot.length + 1)
-      }
-      // partition layout preserved; derived from EVERY candidate, not
-      // rels.head only — a committed set mixing flat-root and partitioned
-      // files (bus converted to appendPartitioned after early flat
-      // appends) would silently flatten or mispartition the staged
-      // output (ADVICE r20 low / VERDICT r20 #4), so a mixed set refuses
-      val colsPer = rels.map(_.split('/').dropRight(1).toSeq.flatMap { seg =>
-        val i = seg.indexOf('=')
-        if (i > 0) Some(seg.substring(0, i)) else None
-      })
-      val cols = colsPer.head
-      if (colsPer.exists(_ != cols))
-        throw new java.io.IOException(
-          s"compactBelow: mixed partition layouts in committed set at " +
-            s"$path (e.g. ${colsPer.distinct.take(2).mkString(" vs ")}); " +
-            "compact per layout or migrate the flat files first")
+      val rels = candidates.map(EventBus.rootRelative(qRoot, _))
+      // partition layout preserved
+      val cols = EventBus.partitionColsOf("compactBelow", path, rels)
       val df = spark.read.option("basePath", path)
         .parquet(candidates.map(_.getPath.toString): _*)
       val stagingName = s".graft-compact-${java.util.UUID.randomUUID}"
@@ -495,6 +459,39 @@ object EventBus {
     * [[EventBus.compactPartitionDirs]] (one level at a time).
     */
   private val CompactDirConcurrency = 4
+
+  /** `st`'s path relative to the bus root `qRoot` (a qualified URI path);
+    * a file outside the root is refused, never rewritten or deleted.
+    */
+  private def rootRelative(qRoot: String,
+      st: org.apache.hadoop.fs.FileStatus): String = {
+    val sp = st.getPath.toUri.getPath
+    if (!sp.startsWith(qRoot + "/"))
+      throw new java.io.IOException(s"bus file $sp outside $qRoot")
+    sp.substring(qRoot.length + 1)
+  }
+
+  /** Partition columns of the root-relative bus files `rels`, read from
+    * the `name=value` directory segments of EVERY file, not the first
+    * only: a set mixing flat-root and partitioned files (a bus converted
+    * to appendPartitioned after early flat appends) would silently
+    * flatten or mispartition the staged output, so `op` refuses a mixed
+    * set before it writes anything.
+    */
+  private def partitionColsOf(op: String, path: String,
+      rels: Seq[String]): Seq[String] = {
+    val colsPer = rels.map(_.split('/').dropRight(1).toSeq.flatMap { seg =>
+      val i = seg.indexOf('=')
+      if (i > 0) Some(seg.substring(0, i)) else None
+    })
+    val cols = colsPer.headOption.getOrElse(Seq.empty)
+    if (colsPer.exists(_ != cols))
+      throw new java.io.IOException(
+        s"$op: mixed partition layouts in committed set at " +
+          s"$path (e.g. ${colsPer.distinct.take(2).mkString(" vs ")}); " +
+          "compact per layout or migrate the flat files first")
+    cols
+  }
 
   /** Bounded driver pool for footer reads (short blocking RPCs; daemon
     * threads so the pool never pins the JVM).

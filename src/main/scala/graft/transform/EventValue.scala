@@ -106,10 +106,7 @@ object EventValue {
   * builds EventContext{Data: element} — foreach.go:31-65), so `event` is
   * None there and attribute args fail.
   */
-final case class Ctx(event: Option[EventValue], defines: VectorMap[String, JValue], data: JValue) {
-  def withData(d: JValue): Ctx = copy(data = d)
-  def withEvent(e: EventValue): Ctx = copy(event = Some(e), data = e.data)
-}
+final case class Ctx(event: Option[EventValue], defines: VectorMap[String, JValue], data: JValue)
 
 object Ctx {
   def of(e: EventValue): Ctx = Ctx(Some(e), VectorMap.empty, e.data)

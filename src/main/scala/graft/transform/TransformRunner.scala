@@ -17,8 +17,8 @@ import scala.collection.immutable.VectorMap
   *
   * Scale note: this is embarrassingly parallel (no shuffle, no state across
   * rows); at 100 TB throughput is bounded by JSON parse/serialize per event.
-  * Scalar-only pipelines should prefer the Column forms in
-  * [[graft.functions.ActionFunctions]], which stay in whole-stage codegen.
+  * It is the only implementation of the actions: subscriptions and the
+  * catalog's `action_*`/`template_*` queries both run it.
   */
 object TransformRunner {
 

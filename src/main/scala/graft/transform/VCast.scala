@@ -43,17 +43,6 @@ object VCast {
     case other => Left(s"undefined cast from ${JPath.typeName(other)} to Int")
   }
 
-  /** cast.go Bool branch: only "true"/"false" text, case-insensitive. */
-  def toBool(v: JValue): Either[String, Boolean] = v match {
-    case JBool(b) => Right(b)
-    case JStr(s) => s.toLowerCase match {
-      case "true" => Right(true)
-      case "false" => Right(false)
-      case _ => Left(s"cannot cast String value $s to Bool")
-    }
-    case other => Left(s"undefined cast from ${JPath.typeName(other)} to Bool")
-  }
-
   /** cast.go StringArray branch: scalars lift to 1-element arrays; array
     * elements each cast to string. Bools are NOT accepted (mirrors the
     * missing bool case in the reference).

@@ -194,6 +194,20 @@ class PlanSpec extends SparkSpec {
     graft.GraftSession.sweepPersisted(spark)
   }
 
+  test("every action_ and template_ catalog query runs the transform interpreter") {
+    val transformQs = Queries.all.filter(q =>
+      q.name.startsWith("action_") || q.name.startsWith("template_"))
+    assert(transformQs.size == 22, transformQs.map(_.name))
+    transformQs.foreach { q =>
+      val plan = q.run(spark, sf).queryExecution.optimizedPlan
+      // TransformRunner's mapPartitions: a second action implementation
+      // (Column forms) would plan without it
+      assert(plan.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.MapPartitions]),
+        s"${q.name} bypasses the interpreter:\n$plan")
+    }
+  }
+
   test("fanOut probes metadata only — no RDD conversion in the plan") {
     val plan = executedPlan(Tables.fanOut(Tables.documents(spark, sf))
       .select(col("doc_id"), length(col("text")).as("len")))
