@@ -754,6 +754,12 @@ object Bench {
         if (only.isEmpty)
           writeDetail(resultSeq, failed, scaleRows.toSeq, histRows.toSeq,
             sfDir, loadStart)
+        // the stdout line carries wall seconds only; the per-query CPU
+        // goes to stderr, ahead of it
+        System.err.println(f"${"name"}%-28s ${"sec"}%8s ${"cpu_sec"}%8s")
+        resultSeq.foreach { case (n, m) =>
+          System.err.println(f"$n%-28s ${m.wall}%8.3f ${m.cpu}%8.3f")
+        }
         emitFinal(resultSeq, failed, scaleRows.toSeq, sfDir)
     }
     spark.stop()

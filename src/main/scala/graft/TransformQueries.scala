@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   * the one implementation of the actions that subscriptions execute, so
   * the DuckDB oracles check the delivery path's code. The action entries
   * run a pipeline over a table and project their columns from the
-  * rendered body.
+  * rendered body. Each view is sorted on its key BEFORE the interpreter,
+  * so every row passes through the interpreter once and the results come
+  * out in key order (see [[eventView]]).
   */
 object TransformQueries {
   import Queries.Q
@@ -23,32 +25,35 @@ object TransformQueries {
   private def events(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
 
-  /** EventView over the events table, fanned out to core parallelism for
-    * the per-row INTERPRETER pipelines ([[TransformRunner]]): the
-    * interpreter otherwise runs at the scan's file-split count (ONE task
-    * at the bench SFs), and the trailing orderBy re-executes it a second
-    * time for range-partition sampling — two serial single-task passes
-    * (StageProbe, optimization r21: template_none = two ~0.9 s one-task
-    * stages and nothing else). [[graft.Tables.fanOut]] is a no-op once
-    * the input has ≥ cores splits, so a 100 TB events table pays no extra
-    * shuffle. TransformRunner itself deliberately stays at the caller's
-    * partitioning — micro-batches arrive pre-split (see its scale note).
+  /** EventView over the events table, SORTED on its key before the
+    * per-row INTERPRETER pipelines ([[TransformRunner]]) run over it.
+    * The interpreter keeps each partition's row order, so every entry's
+    * result comes out in key order with no sort after the interpreter,
+    * which would run it twice: once for the range-partition sample and
+    * once for the sort itself (`action_math`: 2.98 s against 1.66 s
+    * without that sort, sf0.1, 4 cores). The sample reads only the table
+    * scan, because the view's projections sit above the sort, and the
+    * range exchange spreads the interpreter over the shuffle partitions
+    * (core parallelism), so a one-split table no longer runs it in one
+    * task. TransformRunner itself stays at the caller's partitioning —
+    * micro-batches arrive pre-split (see its scale note).
     */
   private def eventView(s: SparkSession, d: String): DataFrame =
-    Tables.fanOut(EventView.fromEventsTable(events(s, d)))
+    EventView.fromEventsTable(events(s, d).orderBy(col("event_id")))
 
   /** [[eventView]] whose data body carries the row's `value` beside `k`. */
   private def valueEventView(s: SparkSession, d: String): DataFrame =
-    Tables.fanOut(EventView.fromEventsTable(events(s, d).withColumn("props",
-      to_json(struct(get_json_object(col("props"), "$.k").try_cast("bigint").as("k"),
-        col("value"))))))
+    EventView.fromEventsTable(events(s, d).orderBy(col("event_id"))
+      .withColumn("props", to_json(struct(
+        get_json_object(col("props"), "$.k").try_cast("bigint").as("k"),
+        col("value")))))
 
-  /** The interpreter's input over `docs`, fanned out like [[eventView]]:
+  /** The interpreter's input over `docs`, sorted like [[eventView]]:
     * `doc_id` is the sequence number and the data body holds `cols`. The
     * runner defaults every context attribute the frame lacks.
     */
   private def docView(docs: DataFrame, cols: String*): DataFrame =
-    Tables.fanOut(docs).select(col("doc_id").as("sequence_number"),
+    docs.orderBy(col("doc_id")).select(col("doc_id").as("sequence_number"),
       to_json(struct(cols.map(col): _*)).as("data"))
 
   /** Run one pipeline of `commands` (each a JSON command array). */
@@ -88,7 +93,6 @@ object TransformQueries {
       }"""
       TransformRunner(eventView(s, d), spec)
         .select(col("sequence_number").as("event_id"), col("body"))
-        .orderBy(col("event_id"))
     },
     Some("""
       SELECT event_id,
@@ -110,7 +114,6 @@ object TransformQueries {
       }"""
       TransformRunner(eventView(s, d), spec)
         .select(col("sequence_number").as("event_id"), col("body"))
-        .orderBy(col("event_id"))
     },
     Some("""
       SELECT event_id,
@@ -130,7 +133,6 @@ object TransformQueries {
       }"""
       TransformRunner(eventView(s, d), spec)
         .select(col("sequence_number").as("event_id"), col("body"))
-        .orderBy(col("event_id"))
     },
     Some("""
       SELECT event_id,
@@ -154,7 +156,6 @@ object TransformQueries {
             .otherwise("u")))
       TransformRunner(view, """{"pipeline": [{"command": ["debezium_convert_to_mongodb_sink", "k"]}]}""")
         .select(col("sequence_number").as("event_id"), col("body"))
-        .orderBy(col("event_id"))
     },
     Some("""
       SELECT event_id,
@@ -182,8 +183,7 @@ object TransformQueries {
       // k = 0 is a division-by-zero action error: the member stays absent
       """["math_div", "$.data.m_div_guard", "$.data.value", "$.data.k"]""")
       .select(col("sequence_number").as("event_id") +:
-        members("double", "m_add", "m_sub", "m_mul", "m_div", "m_div_guard"): _*)
-      .orderBy(col("event_id")),
+        members("double", "m_add", "m_sub", "m_mul", "m_div", "m_div_guard"): _*),
     Some("""
       SELECT event_id,
              (CAST(json_extract_string(props, '$.k') AS DOUBLE) + value) + 1 AS m_add,
@@ -213,8 +213,7 @@ object TransformQueries {
       """["date_format", "$.data.dt_tz", "Y-m-d H:i:s"]""",
       """["convert_timezone", "$.data.dt_tz", "UTC", "Asia/Shanghai"]""")
       .select(col("sequence_number").as("event_id") +:
-        members("string", "dt_fmt", "dt_unix", "dt_tz"): _*)
-      .orderBy(col("event_id")),
+        members("string", "dt_fmt", "dt_unix", "dt_tz"): _*),
     Some("""
       SELECT event_id,
              strftime(ts, '%Y-%m-%d %H:%M') AS dt_fmt,
@@ -241,8 +240,7 @@ object TransformQueries {
       """["duplicate", "$.data.text", "$.data.s_cap_word"]""",
       """["capitalize_word", "$.data.s_cap_word"]""")
       .select(col("sequence_number").as("doc_id") +:
-        members("string", "s_upper", "s_lower", "s_cap_sentence", "s_cap_word"): _*)
-      .orderBy(col("doc_id")),
+        members("string", "s_upper", "s_lower", "s_cap_sentence", "s_cap_word"): _*),
     Some("""
       SELECT doc_id,
              UPPER(text) AS s_upper,
@@ -261,8 +259,7 @@ object TransformQueries {
       """["duplicate", "$.data.text", "$.data.s_suffixed"]""",
       """["add_suffix", "$.data.s_suffixed", "!"]""")
       .select(col("sequence_number").as("doc_id") +:
-        members("string", "s_prefixed", "s_suffixed"): _*)
-      .orderBy(col("doc_id")),
+        members("string", "s_prefixed", "s_suffixed"): _*),
     Some("""
       SELECT doc_id, 'doc: ' || text AS s_prefixed, text || '!' AS s_suffixed
       FROM documents ORDER BY doc_id
@@ -273,8 +270,7 @@ object TransformQueries {
     (s, d) => pipeline(docView(docs(s, d), "text"),
       """["split_with_delimiter", "$.data.text", " ", "$.data.words"]""",
       """["join", "$.data.s_joined", "-", "$.data.words"]""")
-      .select(col("sequence_number").as("doc_id") +: members("string", "s_joined"): _*)
-      .orderBy(col("doc_id")),
+      .select(col("sequence_number").as("doc_id") +: members("string", "s_joined"): _*),
     Some("""
       SELECT doc_id, REPLACE(text, ' ', '-') AS s_joined
       FROM documents ORDER BY doc_id
@@ -288,8 +284,7 @@ object TransformQueries {
       """["duplicate", "$.data.text", "$.data.s_regex"]""",
       """["replace_with_regex", "$.data.s_regex", "[aeiou]", "_"]""")
       .select(col("sequence_number").as("doc_id") +:
-        members("string", "s_replaced", "s_regex"): _*)
-      .orderBy(col("doc_id")),
+        members("string", "s_replaced", "s_regex"): _*),
     Some("""
       SELECT doc_id,
              REPLACE(text, 'spark', 'SPARK') AS s_replaced,
@@ -304,8 +299,7 @@ object TransformQueries {
       """["replace_between_positions", "$.data.s_spliced", 10, 15, "XXXXX"]""",
       """["extract_between_positions", "$.data.text", "$.data.s_extracted", 2, 10]""")
       .select(col("sequence_number").as("doc_id") +:
-        members("string", "s_spliced", "s_extracted"): _*)
-      .orderBy(col("doc_id")),
+        members("string", "s_spliced", "s_extracted"): _*),
     Some("""
       SELECT doc_id,
              substr(text, 1, 10) || 'XXXXX' || substr(text, 16) AS s_spliced,
@@ -326,8 +320,7 @@ object TransformQueries {
       """["replace_between_delimiters", "$.data.s_repl_delims", "join", "merge", "X"]""")
       .select(col("sequence_number").as("doc_id") +:
         members("string", "s_between", "s_repl_delims"): _*)
-      .filter(col("s_between").isNotNull)
-      .orderBy(col("doc_id")),
+      .filter(col("s_between").isNotNull),
     Some("""
       SELECT doc_id,
              substr(rest, 1, strpos(rest, 'merge') - 1) AS s_between,
@@ -347,8 +340,7 @@ object TransformQueries {
       """["check_custom_values", "$.data.text", "spark", "$.data.s_check", "has", "no"]""",
       """["extract_missing", "$.data.lang", "$.data.s_missing", "EMPTY", "FULL"]""")
       .select(col("sequence_number").as("doc_id") +:
-        members("string", "s_check", "s_missing"): _*)
-      .orderBy(col("doc_id")),
+        members("string", "s_check", "s_missing"): _*),
     Some("""
       SELECT doc_id,
              CASE WHEN text LIKE '%spark%' THEN 'has' ELSE 'no' END AS s_check,
@@ -362,8 +354,7 @@ object TransformQueries {
       """["condition_if", "$.data.c_ord", "$.data.value", ">=", 100, "hi", "lo"]""",
       """["condition_if", "$.data.c_eq", "$.type", "==", "error", 1, 0]""")
       .select(col("sequence_number").as("event_id") +:
-        (members("string", "c_ord") ++ members("int", "c_eq")): _*)
-      .orderBy(col("event_id")),
+        (members("string", "c_ord") ++ members("int", "c_eq")): _*),
     Some("""
       SELECT event_id,
              CASE WHEN value >= 100 THEN 'hi' ELSE 'lo' END AS c_ord,
@@ -378,8 +369,7 @@ object TransformQueries {
       """["split_with_delimiter", "$.data.text", " ", "$.data.words"]""",
       """["length", "$.data.n_words", "$.data.words"]""")
       .select(col("sequence_number").as("doc_id") +:
-        members("bigint", "n_len", "n_words"): _*)
-      .orderBy(col("doc_id")),
+        members("bigint", "n_len", "n_words"): _*),
     Some("""
       SELECT doc_id,
              LENGTH(text) AS n_len,
@@ -401,8 +391,7 @@ object TransformQueries {
         bodyAt("n_parts").cast("bigint").as("n_parts"),
         bodyAt("parts[0]").as("s_first"),
         bodyAt("halves[0]").as("s_head"),
-        bodyAt("halves[1]").as("s_tail"))
-      .orderBy(col("doc_id")),
+        bodyAt("halves[1]").as("s_tail")),
     Some("""
       SELECT doc_id,
              len(string_split(text, ' ')) AS n_parts,
@@ -423,8 +412,7 @@ object TransformQueries {
         bodyAt("p[1]").as("p_b"),
         bodyAt("p[2]").as("p_c"),
         bodyAt("n_chunks").cast("bigint").as("n_chunks"),
-        bodyAt("chunks[1]").as("s_chunk1"))
-      .orderBy(col("doc_id")),
+        bodyAt("chunks[1]").as("s_chunk1")),
     Some("""
       SELECT doc_id,
              substr(text, 1, 3) AS p_a,
@@ -446,8 +434,7 @@ object TransformQueries {
       """["split_with_delimiter", "$.data.text", " ", "$.data.words"]""",
       """["array_foreach", "$.data.words", ["upper_case", "$.data"]]""",
       """["join", "$.data.s_foreach", " ", "$.data.words"]""")
-      .select(col("sequence_number").as("doc_id") +: members("string", "s_foreach"): _*)
-      .orderBy(col("doc_id")),
+      .select(col("sequence_number").as("doc_id") +: members("string", "s_foreach"): _*),
     Some("""
       SELECT doc_id, UPPER(text) AS s_foreach
       FROM documents ORDER BY doc_id
@@ -459,8 +446,7 @@ object TransformQueries {
       """["split_with_delimiter", "$.data.text", " ", "$.data.words"]""",
       """["render_array", "$.data.rendered", "$.data.words", "w=<@>"]""",
       """["join", "$.data.s_rendered", ",", "$.data.rendered"]""")
-      .select(col("sequence_number").as("doc_id") +: members("string", "s_rendered"): _*)
-      .orderBy(col("doc_id")),
+      .select(col("sequence_number").as("doc_id") +: members("string", "s_rendered"): _*),
     Some("""
       SELECT doc_id, 'w=' || REPLACE(text, ' ', ',w=') AS s_rendered
       FROM documents ORDER BY doc_id
@@ -476,8 +462,7 @@ object TransformQueries {
         bodyAt("u-1").as("u_1"),
         bodyAt("u-2").as("u_2"))
       // member u-2 exists exactly when the text has at least three words
-      .filter(col("u_2").isNotNull)
-      .orderBy(col("doc_id")),
+      .filter(col("u_2").isNotNull),
     Some("""
       SELECT doc_id,
              string_split(text, ' ')[1] AS u_0,
@@ -490,6 +475,9 @@ object TransformQueries {
     * first char `{` / `[` / `"` ⇒ JSON template, anything else ⇒ text. The
     * same event set renders through both a sniffed-JSON and a sniffed-text
     * spec (neither declares template_type), through the REAL sniff path.
+    * Both passes read one sort of the view (the exchange is reused), so
+    * the rows come out as the json block, then the text block, each in
+    * key order.
     */
   private val templateSniff = Q(
     "template_sniff",
@@ -504,7 +492,6 @@ object TransformQueries {
         .unionAll(TransformRunner(v, textSpec)
           .select(col("sequence_number").as("event_id"), lit("text").as("sub"),
             col("body")))
-        .orderBy(col("event_id"), col("sub"))
     },
     Some("""
       SELECT event_id, sub, body FROM (
@@ -546,7 +533,6 @@ object TransformQueries {
       }"""
       TransformRunner(view, spec)
         .select(col("sequence_number").as("event_id"), col("body"))
-        .orderBy(col("event_id"))
     },
     Some("""
       SELECT event_id,

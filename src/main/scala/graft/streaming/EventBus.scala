@@ -828,19 +828,40 @@ object EventBus {
       case _ => None
     }
 
+  /** Row count of `df` when its optimized plan is a `LocalRelation`: the
+    * rows are already evaluated on the driver (`ConvertToLocalRelation`
+    * folds projections and filters over local data). None for any other
+    * plan. The analyzed plan is checked first, so a frame that reads
+    * anything but local data pays no optimizer pass here.
+    */
+  private[streaming] def localRows(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val qe = df.queryExecution
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else qe.optimizedPlan match {
+      case l: LocalRelation => Some(l.data.size)
+      case _ => None
+    }
+  }
+
   /** Concurrent footer verdicts for a file set (one commit's files, or a
     * whole bus during a backfill).
     */
   private def readFootersFor(conf: org.apache.hadoop.conf.Configuration,
-      sts: Vector[org.apache.hadoop.fs.FileStatus]): Vector[FileFooter] =
-    if (sts.sizeIs <= 1) sts.map(readFooter(conf, _))
+      sts: Vector[org.apache.hadoop.fs.FileStatus]): Vector[FileFooter] = {
+    // options built from the session's conf: `ParquetFileReader.open`
+    // without them builds a fresh Hadoop Configuration per file, which
+    // re-parses the XML defaults (~10 ms a footer against < 1 ms)
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    if (sts.sizeIs <= 1) sts.map(readFooter(conf, options, _))
     else {
       import scala.jdk.CollectionConverters._
       val tasks: java.util.List[java.util.concurrent.Callable[FileFooter]] =
         sts.map[java.util.concurrent.Callable[FileFooter]](st =>
-          () => readFooter(conf, st)).asJava
+          () => readFooter(conf, options, st)).asJava
       footerPool.invokeAll(tasks).asScala.toVector.map(_.get())
     }
+  }
 
   /** First manifested append to a PRE-EXISTING bus: one footer walk
     * turns the current file set into record 1 (staging=None — the files
@@ -880,8 +901,17 @@ object EventBus {
     * footer maxima are read while the file set is one-commit small, the
     * record is written atomically, the files rename into place, LATEST
     * advances atomically. See [[BusManifest]] for the crash-window
-    * argument. Per-append cost is O(files in THIS commit) (+ one
-    * top-level listStatus for orphan-staging cleanup) — never O(bus).
+    * argument. Footer reads and renames are O(files in THIS commit), but
+    * the orphan-staging sweep lists the bus root on every append, and on
+    * a flat (unpartitioned) bus that listing names every data file — so
+    * each append pays one O(bus files) listing.
+    *
+    * A frame whose optimized plan is a `LocalRelation` (every
+    * request-sized publish) is already in driver memory, so it is small
+    * by construction and lands as ONE file per commit (per partition
+    * directory) rather than one per local-scan slice: every file costs a
+    * footer read and a rename here, and a listing entry on every later
+    * stream trigger.
     */
   private[streaming] def appendManifested(df: DataFrame, path: String,
       partitionCols: Seq[String]): Unit = {
@@ -947,9 +977,10 @@ object EventBus {
     val nextId = base.id + 1
     val stagingName = BusManifest.stagingName(nextId)
     val staging = new org.apache.hadoop.fs.Path(root, stagingName)
+    val out = if (localRows(df).isDefined) df.coalesce(1) else df
     val writer =
-      if (partitionCols.isEmpty) df.write
-      else df.write.partitionBy(partitionCols: _*)
+      if (partitionCols.isEmpty) out.write
+      else out.write.partitionBy(partitionCols: _*)
     writer.mode("overwrite").parquet(staging.toString)
     val staged = listCommittedFiles(fs, staging)
     val verdicts = readFootersFor(conf, staged)
@@ -1075,11 +1106,13 @@ object EventBus {
     * unreadable/garbled footer is an untrusted file, not a crash.
     */
   private def readFooter(conf: org.apache.hadoop.conf.Configuration,
+      options: org.apache.parquet.ParquetReadOptions,
       st: org.apache.hadoop.fs.FileStatus): FileFooter = {
     import scala.jdk.CollectionConverters._
     try {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        options)
       try {
         var trusted = true
         var hasMax = false

@@ -63,28 +63,49 @@ object Publisher {
   /** Full publish: route, append direct events to the bus and delayed
     * events to the timer spool; rejected count returned (the caller's 400).
     *
-    * Scan discipline (same as SubscriptionRunner.processBatchWith): the
-    * batch is persisted on entry, all three routing counts come from ONE
-    * aggregation job over the cached copy, and the appends read the cache —
-    * one source scan per publish regardless of routing fan-out (the
-    * round-2 spelling re-evaluated the un-persisted route filters up to
-    * 5×: three count() actions plus two appends).
+    * Scan discipline: one Spark job per non-empty append and nothing
+    * else when the input is local, one source scan otherwise.
+    *  - Local input (its optimized plan is a `LocalRelation`, which every
+    *    request-sized publish is): `ConvertToLocalRelation` evaluates the
+    *    route filters on the driver, so the three counts are the sizes of
+    *    the routed frames' own `LocalRelation`s — no persist, no
+    *    aggregation job — and each append lands as one file
+    *    ([[EventBus.append]]).
+    *  - Any other input is persisted on entry, all three counts come from
+    *    ONE aggregation job over the cached copy, and the appends read the
+    *    cache — one source scan per publish regardless of routing fan-out
+    *    (the round-2 spelling re-evaluated the un-persisted route filters
+    *    up to 5×: three count() actions plus two appends).
     */
   def publish(events: DataFrame, bus: EventBus, timerBus: EventBus,
       busName: String): PublishResult = {
-    import org.apache.spark.storage.StorageLevel
-    val cached = events.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val r = route(cached, busName)
-      val bad = coalesce(hasInvalidAttr || hasInvalidDeliveryTime, lit(false))
-      val c = cached.agg(
-        count(when(!bad && deliveryTime.isNull, 1)),
-        count(when(!bad && deliveryTime.isNotNull, 1)),
-        count(when(bad, 1))).head
-      val (nAccepted, nDelayed, nRejected) = (c.getLong(0), c.getLong(1), c.getLong(2))
-      if (nAccepted > 0) bus.append(r.accepted)
-      if (nDelayed > 0) timerBus.append(r.delayed)
-      PublishResult(nAccepted, nDelayed, nRejected)
-    } finally { cached.unpersist(); () }
+    def land(r: Routed, c: PublishResult): PublishResult = {
+      if (c.accepted > 0) bus.append(r.accepted)
+      if (c.delayed > 0) timerBus.append(r.delayed)
+      c
+    }
+    val local = EventBus.localRows(events).flatMap { _ =>
+      val r = route(events, busName)
+      for {
+        a <- EventBus.localRows(r.accepted)
+        d <- EventBus.localRows(r.delayed)
+        j <- EventBus.localRows(r.rejected)
+      } yield (r, PublishResult(a.toLong, d.toLong, j.toLong))
+    }
+    local match {
+      case Some((r, c)) => land(r, c)
+      case None =>
+        import org.apache.spark.storage.StorageLevel
+        val cached = events.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val bad = coalesce(hasInvalidAttr || hasInvalidDeliveryTime, lit(false))
+          val c = cached.agg(
+            count(when(!bad && deliveryTime.isNull, 1)),
+            count(when(!bad && deliveryTime.isNotNull, 1)),
+            count(when(bad, 1))).head
+          land(route(cached, busName),
+            PublishResult(c.getLong(0), c.getLong(1), c.getLong(2)))
+        } finally { cached.unpersist(); () }
+    }
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 
 /** A subscription = filter tree + transformer + delivery config, executed as
   * source → filter(Column) → transform → foreachBatch(sink + retry/DLQ
@@ -122,9 +123,14 @@ object SubscriptionRunner {
     * transform, deliver, route failures. Returns routing counts; appends
     * retry/DLQ frames to their buses.
     *
-    * Scan discipline: the batch is persisted on entry and every downstream
-    * frame (filter, transform, failure join) reads the cached copy, so the
-    * source is scanned once per micro-batch regardless of routing fan-out.
+    * Scan discipline: the happy path (every passing event delivered)
+    * reads the batch once, inside its one delivery action, and runs no
+    * other job. A batch with failures is persisted for the failure join,
+    * which reads it once more and serves every routing frame from the
+    * cache. The batch must therefore be re-readable (a scan of immutable
+    * files is); a caller holding a plan that must not run twice (a
+    * stateful stage's output) persists it first, as [[start]] does for
+    * its dedup stages.
     */
   def processBatch(
       batch: DataFrame,
@@ -151,15 +157,11 @@ object SubscriptionRunner {
       retryBus: Option[EventBus],
       dlqBus: Option[EventBus],
       nowEpochSec: => Long = System.currentTimeMillis() / 1000): BatchResult = {
-    import org.apache.spark.storage.StorageLevel
     val exactH = spec.config.dedupHorizon
     val nearH = spec.config.neardupHorizon
-    if (exactH.isEmpty && nearH.isEmpty) {
-      val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
-      try processBatchCached(cached, spec, delivery, retryBus, dlqBus,
-        nowEpochSec)
-      finally { cached.unpersist(); () }
-    } else if (exactH.isDefined && nearH.isDefined) {
+    if (exactH.isEmpty && nearH.isEmpty)
+      processBatchCached(batch, spec, delivery, retryBus, dlqBus, nowEpochSec)
+    else if (exactH.isDefined && nearH.isDefined) {
       // BOTH knobs: the combined single-operator fold
       // ([[StreamNearDedup.verdictsStreamBoth]] — the same operator the
       // streaming plan runs), so batch and streaming agree exactly: each
@@ -211,6 +213,16 @@ object SubscriptionRunner {
     }
   }
 
+  /** Filter, transform, deliver and route one batch, persisted by the
+    * caller or re-readable (see [[processBatch]]). The happy path (every
+    * passing event delivered) is ONE delivery action and no other job:
+    * the input count, the passed count and the delivered count all come
+    * out of the action [[pinOutcomes]] runs. The batch is not persisted
+    * up front: under AQE a new cache materializes as a job of its own.
+    * Failures persist the batch unless it already is, then add the
+    * routing join, one aggregation and the bus appends, all reading the
+    * cached batch and the pinned outcomes.
+    */
   private def processBatchCached(
       batch: DataFrame,
       spec: Spec,
@@ -218,8 +230,10 @@ object SubscriptionRunner {
       retryBus: Option[EventBus],
       dlqBus: Option[EventBus],
       nowEpochSec: => Long): BatchResult = {
-    val total = batch.count()
-    val passed = batch.filter(spec.predicate)
+    // the input count rides the delivery job (see pinOutcomes): observed
+    // below the filter, read back once that job has run
+    val passed = batch.observe(InputRowsMetric, count(lit(1)).as("rows"))
+      .filter(spec.predicate)
 
     // transform (interpreter path keeps per-event error routing)
     val transformed = spec.transformerJson match {
@@ -334,10 +348,18 @@ object SubscriptionRunner {
       }
     }
     val (outcomes, passedCount, deliveredCount) = pinOutcomes(outcomesDs)
+    // the optimizer may drop the observation with its subtree (a filter
+    // that folds to false); only then is the input counted on its own
+    val total = outcomesDs.queryExecution.observedMetrics.get(InputRowsMetric)
+      .map(_.getLong(0)).getOrElse(batch.count())
     if (deliveredCount == passedCount) { // happy path: no routing work at all
       outcomes.unpersist()
       return BatchResult(deliveredCount, total - passedCount, 0L, 0L)
     }
+    // the failure join and its routing frames read the batch through one
+    // cache; a batch the caller already persisted is read as it is
+    val pinInput = batch.storageLevel == StorageLevel.NONE
+    if (pinInput) batch.persist(StorageLevel.MEMORY_AND_DISK)
     // ADVICE r17 low: a throw from the failure join or a retry/DLQ append
     // must not leak the pinned outcome blocks — across the failed
     // micro-batches of a long-running query that accumulates
@@ -413,13 +435,28 @@ object SubscriptionRunner {
       BatchResult(deliveredCount, total - passedCount, retryCount, dlqCount,
         undeliverable =
           (passedCount - deliveredCount) - retryCount - dlqCount)
-    } finally { outcomes.unpersist(); () }
+    } finally {
+      outcomes.unpersist()
+      if (pinInput) batch.unpersist()
+      ()
+    }
   }
 
+  /** Name of the input-row count [[processBatchCached]] observes on its
+    * batch; [[pinOutcomes]]' job fills it.
+    */
+  private val InputRowsMetric = "graft_runner_input_rows"
+
   /** Pin a SIDE-EFFECTING delivery-outcome dataset as RDD blocks,
-    * materialized in exactly ONE job that also yields the
+    * materialized in exactly ONE action that also yields the
     * (passed, delivered) counts — micro-batch latency is driver job
-    * count, so the counts ride the materializing action.
+    * count, so the counts ride the materializing action. The action runs
+    * `outcomes`' OWN QueryExecution, so every metric observed in its plan
+    * is filled by the same jobs and reads back from
+    * `outcomes.queryExecution.observedMetrics` afterwards: that is how
+    * [[processBatchCached]] gets its input count with no job of its own.
+    * Under AQE a plan with a shuffle (the delivery fan-out) runs as two
+    * jobs, its map stage and the aggregate.
     *
     * This is the r17 once-only-delivery fix as a named seam: the delivery
     * `mapPartitions` calls the sink, so it must never sit under a plan
@@ -436,8 +473,13 @@ object SubscriptionRunner {
     */
   private[streaming] def pinOutcomes(
       outcomes: Dataset[(Long, Int)]): (RDD[(Long, Int)], Long, Long) = {
-    val rdd = outcomes.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val qe = outcomes.queryExecution
+    // the rows are read positionally: the tuple encoder's (_1 bigint, _2 int)
+    require(qe.analyzed.output.map(_.dataType) == Seq(LongType, IntegerType),
+      s"outcomes must be (bigint, int) rows: ${qe.analyzed.output}")
+    val rdd = qe.toRdd.map(r => (r.getLong(0), r.getInt(1)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // a throwing sink (raw exception instead of Left) fails this job
     // BEFORE the caller receives the handle — unpersist here or every
     // failed micro-batch of a long-running query leaks the partial
@@ -491,16 +533,24 @@ object SubscriptionRunner {
     // micro-batch
     val batchSpec = spec.copy(config =
       spec.config.copy(dedupHorizon = None, neardupHorizon = None))
+    val stateful = spec.config.dedupHorizon.isDefined ||
+      spec.config.neardupHorizon.isDefined
     val deliver = (batch: DataFrame) => {
-      processBatch(batch, spec = batchSpec, sink, retryBus, dlqBus)
+      // a dedup stage's output must not run twice (the failure join would
+      // re-execute the state operator): pin it. A plain batch is a scan of
+      // immutable bus files, and its happy path reads it once.
+      if (!stateful) processBatch(batch, spec = batchSpec, sink, retryBus, dlqBus)
+      else {
+        val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
+        try processBatch(cached, spec = batchSpec, sink, retryBus, dlqBus)
+        finally { cached.unpersist(); () }
+      }
       ()
     }
     // horizoned plans carry versioned dedup state: refuse a checkpoint
     // written under an incompatible state-key format instead of silently
     // missing duplicates until the stale state TTLs out (ADVICE r17)
-    if (spec.config.dedupHorizon.isDefined ||
-        spec.config.neardupHorizon.isDefined)
-      StreamNearDedup.ensureStateFormat(spark, checkpoint)
+    if (stateful) StreamNearDedup.ensureStateFormat(spark, checkpoint)
     (spec.config.dedupHorizon, spec.config.neardupHorizon) match {
       case (Some(eh), Some(nh)) =>
         // BOTH knobs in ONE state operator (the exact identity check
@@ -764,7 +814,6 @@ object SubscriptionRunner {
       dlqBus: Option[EventBus],
       onBatch: Map[String, BatchResult] => Unit,
       rosterPath: Option[String]) {
-    import org.apache.spark.storage.StorageLevel
     // (spec, delivery, guard): rows with sequence_number <= guard are
     // skipped for this member (already served by its catch-up read).
     // guard == PendingGuard marks a member whose attach catch-up is in

@@ -208,6 +208,49 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("every interpreter catalog query runs each row through the interpreter once") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+    import scala.jdk.CollectionConverters._
+    val transformQs = Queries.all.filter(q =>
+      q.name.startsWith("action_") || q.name.startsWith("template_"))
+    transformQs.foreach { q =>
+      val df = q.run(spark, sf)
+      // wrap every interpreter (TransformRunner's mapPartitions) so each
+      // row it takes in adds its sequence number to that pass's accumulator
+      val passes = scala.collection.mutable.ArrayBuffer.empty[
+        org.apache.spark.util.CollectionAccumulator[Long]]
+      val counted = df.queryExecution.analyzed.transform {
+        case mp: MapPartitions =>
+          val acc = spark.sparkContext.collectionAccumulator[Long](s"${q.name}-rows")
+          passes += acc
+          val run = mp.func
+          mp.copy(func = (it: Iterator[Any]) => run(it.map { r =>
+            acc.add(r.asInstanceOf[Row].getAs[Long]("sequence_number")); r
+          }))
+      }
+      org.apache.spark.sql.graftexpr.TestPlans.frame(df, counted)
+        .write.format("noop").mode("overwrite").save()
+      assert(passes.nonEmpty, s"${q.name} has no interpreter")
+      passes.foreach { acc =>
+        val seqs = acc.value.asScala.toSeq
+        val (rows, inputs) = (seqs.size, seqs.distinct.size)
+        assert(inputs > 0 && rows == inputs,
+          s"${q.name}: $rows interpreter rows for $inputs inputs")
+      }
+      // the view is sorted before the interpreter, so results come out in
+      // key order (template_sniff: per sub-template block)
+      val rows = df.collect().toSeq
+      val blocks =
+        if (q.name == "template_sniff") rows.groupBy(_.getString(1)).values.toSeq
+        else Seq(rows)
+      blocks.foreach { b =>
+        val keys = b.map(_.getLong(0))
+        assert(keys == keys.sorted, s"${q.name} rows out of key order")
+      }
+    }
+  }
+
   test("fanOut probes metadata only — no RDD conversion in the plan") {
     val plan = executedPlan(Tables.fanOut(Tables.documents(spark, sf))
       .select(col("doc_id"), length(col("text")).as("len")))

@@ -54,6 +54,49 @@ class PublisherSpec extends SparkSpec {
       s"publish evaluated its source ${acc.value}× — must be exactly once")
   }
 
+  /** Committed parquet data files under a bus root (hidden dirs skipped). */
+  private def dataFiles(path: String): Int = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(path)
+    Files.walk(root).iterator().asScala.count { p =>
+      p.toString.endsWith(".parquet") && !root.relativize(p).iterator().asScala
+        .exists(s => s.toString.startsWith("_") || s.toString.startsWith("."))
+    }
+  }
+
+  test("a local publish counts on the driver: one job per append, one file per commit") {
+    val rows = synth.collect()
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), synth.schema)
+    assert(EventBus.localRows(local).contains(100))
+    val (bus, timer) = (EventBus(tmp("lbus")), EventBus(tmp("ltimer")))
+    val (res, jobs) = countJobs(Publisher.publish(local, bus, timer, "bus-main"))
+    assert(res == Publisher.PublishResult(25, 25, 50))
+    // no persist and no counting job: the bus write and the timer write
+    assert(jobs == 2, s"local mixed publish ran $jobs jobs, want one per append")
+    assert(dataFiles(bus.path) == 1 && dataFiles(timer.path) == 1)
+
+    // same rows, stamps and timer routing as the non-local (persisted) path
+    val (bus2, timer2) = (EventBus(tmp("nbus")), EventBus(tmp("ntimer")))
+    assert(EventBus.localRows(synth).isEmpty)
+    assert(Publisher.publish(synth, bus2, timer2, "bus-main") == res)
+    def rowsOf(b: EventBus) =
+      b.read(spark).orderBy("sequence_number").collect().toSeq
+    assert(rowsOf(bus) == rowsOf(bus2))
+    assert(rowsOf(timer) == rowsOf(timer2))
+    assert(rowsOf(bus).forall(_.getAs[scala.collection.Map[String, String]](
+      "attributes")(Publisher.EventbusAttr) == "bus-main"))
+
+    // a request-sized publish with nothing delayed or rejected: one job
+    val accepted = spark.createDataFrame(java.util.Arrays.asList(
+      rows.filter(_.getAs[Long]("sequence_number") % 4 == 0): _*), synth.schema)
+    val bus3 = EventBus(tmp("abus"))
+    val (res3, jobs3) = countJobs(
+      Publisher.publish(accepted, bus3, EventBus(tmp("atimer")), "bus-main"))
+    assert(res3 == Publisher.PublishResult(25, 0, 0))
+    assert(jobs3 == 1, s"local accepted-only publish ran $jobs3 jobs")
+    assert(dataFiles(bus3.path) == 1)
+  }
+
   test("null attributes map routes as accepted, not dropped") {
     import spark.implicits._
     val df = Seq((1L, Option.empty[Map[String, String]]),

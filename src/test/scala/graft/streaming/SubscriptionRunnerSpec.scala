@@ -293,6 +293,30 @@ class SubscriptionRunnerSpec extends SparkSpec {
     assert(resNo.delivered == 10)
   }
 
+  test("a happy-path batch is one delivery action: at most 2 jobs, books closed") {
+    // a one-commit micro-batch as the stream sees it: one bus file, read back
+    val bus = EventBus(tmp("hbus"))
+    val rows = view.filter(col("sequence_number") < 200).collect()
+    bus.append(spark.createDataFrame(java.util.Arrays.asList(rows: _*), view.schema))
+    val batch = bus.read(spark)
+    assert(batch.inputFiles.length == 1)
+    val input = batch.count()
+    val purchases = batch.filter(col("type") === "purchase").count()
+    assert(purchases > 0 && purchases < input)
+    val (res, jobs) = countJobs(SubscriptionRunner.processBatch(batch, spec,
+      _ => Right(()), None, None))
+    // AQE runs the delivery fan-out's shuffle map stage as its own job; the
+    // input count rides that job, the passed/delivered counts the aggregate
+    assert(jobs <= 2, s"happy-path batch ran $jobs jobs")
+    assert(res == SubscriptionRunner.BatchResult(purchases, input - purchases, 0L, 0L))
+
+    // a filter that folds to false drops the observed subtree: the input
+    // is then counted on its own and the books still close
+    val none = spec.copy(filters = Seq(FilterSpec.CeSql("1 = 2")))
+    assert(SubscriptionRunner.processBatch(batch, none, _ => Right(()), None, None) ==
+      SubscriptionRunner.BatchResult(0L, input, 0L, 0L))
+  }
+
   test("backoff curve matches util.go:75-88") {
     assert(Backoff.delaySeconds(1) == 1)
     assert(Backoff.delaySeconds(2) == 5)
