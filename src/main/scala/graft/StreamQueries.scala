@@ -705,15 +705,14 @@ object StreamQueries {
     val a = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
   }
 
-  /** STREAM-SAFE compaction (r20, VERDICT r19 missing #2): a shared
-    * group drains three micro-batch commits and stops;
-    * [[graft.streaming.EventBus.compactBelow]] swaps exactly the files
-    * the checkpoint committed (epoch-stamped outputs); the tail lands
-    * and the group RESTARTS on the same checkpoint — the file source
-    * re-lists the compacted outputs as new files, and the runner's
-    * in-plan epoch guard must drop them. The oracle expects every event
-    * EXACTLY once, so a single re-delivered row (or a lost one) fails
-    * the row-count/hash compare. The live-query arm (compact while
+  /** STREAM-SAFE compaction: a shared group drains three micro-batch
+    * commits and stops; [[graft.streaming.EventBus.compactBelow]] swaps
+    * exactly the files at or below the checkpoint's committed offset;
+    * the tail lands and the group RESTARTS on the same checkpoint. The
+    * stream reads by sequence offset, so the compacted rows (all at or
+    * below that offset) must not come back. The oracle expects every
+    * event EXACTLY once, so a single re-delivered row (or a lost one)
+    * fails the row-count/hash compare. The live-query arm (compact while
     * members are armed and delivering) is EndToEndSpec's to pin; this
     * entry pins the delivered DATA across the restart boundary.
     */
@@ -745,7 +744,7 @@ object StreamQueries {
       finally if (g1.query.isActive) g1.query.stop()
       if (bus.compactBelow(s, 2, Seq(ck)) == 0)
         throw new RuntimeException(
-          "compactBelow found nothing to swap — committed log unread?")
+          "compactBelow found nothing to swap — committed offset unread?")
       bus.append(ev.filter(col("sequence_number") >= 3 * q))
       val g2 = SubscriptionRunner.startSharedGroup(
         s, bus, Seq(sub), None, None, ck)

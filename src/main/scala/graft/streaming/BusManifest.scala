@@ -32,11 +32,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * at its target (rename is atomic) or still in the hidden staging
   * directory, so finishing the moves and advancing LATEST is
   * deterministic. A crash before the record leaves only an orphaned
-  * hidden staging directory — invisible to every reader, deleted by the
-  * next append. Probes never see a half state: LATEST is the commit
-  * point, and un-replayed rows are above every boundary a probe could
-  * have handed out (sequence numbers are append-monotone,
-  * [[EventBus.append]]'s precondition).
+  * hidden staging directory named for the next id — invisible to every
+  * reader, overwritten by the next append's staged write (which reuses
+  * the name) or swept by the next compaction. Probes never see a half
+  * state: LATEST is the commit point, and un-replayed rows are above
+  * every boundary a probe could have handed out (sequence numbers are
+  * append-monotone, [[EventBus.append]]'s precondition).
   *
   * Invariant (same one the per-path append lock already carries): ALL
   * writes to a manifested bus go through [[EventBus.append]] /
@@ -60,10 +61,14 @@ private[streaming] object BusManifest {
     * directory its files move out of (None for a backfill record — the
     * files were already in place). `trusted=false` = some file's footer
     * stats were missing/garbled at append time; probes fall back to the
-    * data aggregate for the whole bus.
+    * data aggregate for the whole bus. `min` is the commit's smallest
+    * `sequence_number` from the same footer stats (None = unknown: a
+    * record written without the field, or one with no values) — the
+    * stream source's out-of-order commit check ([[BusSource]]).
     */
   final case class Record(id: Long, staging: Option[String],
-      trusted: Boolean, hasMax: Boolean, max: Long, files: Seq[FileEntry])
+      trusted: Boolean, hasMax: Boolean, max: Long, files: Seq[FileEntry],
+      min: Option[Long] = None)
 
   /** The commit pointer: everything a boundary probe needs, in one small
     * atomically-replaced file. `trusted` is the AND over all records, so
@@ -142,6 +147,7 @@ private[streaming] object BusManifest {
     sb ++= s"graft-bus-manifest-record v1\nid ${r.id}\n"
     sb ++= s"staging ${r.staging.map(enc).getOrElse("-")}\n"
     sb ++= s"trusted ${r.trusted}\nmax ${renderLong(r.hasMax, r.max)}\n"
+    r.min.foreach(m => sb ++= s"min $m\n")
     r.files.foreach { fe =>
       sb ++= s"file ${renderLong(fe.hasMax, fe.max)} ${enc(fe.rel)}\n"
     }
@@ -208,6 +214,7 @@ private[streaming] object BusManifest {
       var trusted = true
       var hasMax = false
       var max = Long.MinValue
+      var min: Option[Long] = None
       val files = Vector.newBuilder[FileEntry]
       lines.tail.foreach { line =>
         line.split(" ", 2) match {
@@ -223,6 +230,8 @@ private[streaming] object BusManifest {
               hasMax = true
               max = v.toLongOption.getOrElse(parseFail(p, "bad max"))
             }
+          case Array("min", v) =>
+            min = Some(v.toLongOption.getOrElse(parseFail(p, "bad min")))
           case Array("file", rest) => rest.split(" ", 2) match {
             case Array(m, rel) =>
               if (m == "-") files += FileEntry(dec(rel), hasMax = false,
@@ -235,14 +244,14 @@ private[streaming] object BusManifest {
         }
       }
       if (rid != id) parseFail(p, s"id $rid != expected $id")
-      Record(rid, staging, trusted, hasMax, max, files.result())
+      Record(rid, staging, trusted, hasMax, max, files.result(), min)
     }
 
   /** Compaction intent marker — `<bus>/_graft_compact` (atomic
     * temp+rename): the staging directory holding the complete compacted
     * file set plus the bus-relative OLD data files to delete. Written
     * AFTER the compacted set is fully staged, so a recovery
-    * ([[EventBus.recoverCompaction]]) can always finish the swap
+    * ([[EventBus.finishCompaction]]) can always finish the swap
     * idempotently: move staged files whose targets are missing, delete
     * old files that still exist, rebuild the manifest from the disk
     * truth, drop the marker. A crash at ANY point leaves duplicates at

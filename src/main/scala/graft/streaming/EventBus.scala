@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * An eventbus is a directory of parquet; eventlogs (partitions) are Spark's
   * input splits; the offset is the `sequence_number` column; `stime` is the
   * storage-time column that QueryOffsetByTime seeks on
-  * (client/pkg/api/client.go:47-54). Structured Streaming's checkpoint
-  * replaces the reference's consumer-offset skiplist
-  * (server/trigger/offset/offset.go:102-139) — contiguous-prefix commit is
-  * native there.
+  * (client/pkg/api/client.go:47-54). A stream reads the bus through
+  * [[BusSource]], whose offset is the max committed `sequence_number`, so
+  * Structured Streaming's checkpoint replaces the reference's
+  * consumer-offset skiplist (server/trigger/offset/offset.go:102-139) —
+  * contiguous-prefix commit is native there.
   *
   * At 100 TB this directory becomes a date/bus-partitioned table; everything
   * below reads through the same two entry points and inherits partition
@@ -23,18 +24,14 @@ class EventBus(val path: String) extends Serializable {
 
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
 
-  /** The bus as a stream for the query checkpointed at `checkpoint`, with
-    * the stream-safe compaction guard applied: rows from a compaction
-    * output stamped after this checkpoint's birth are content the stream
-    * already committed, re-listed under a new path, and are dropped
-    * in-plan, before any state operator ([[compactBelow]]). There is no
-    * unguarded stream read.
+  /** The bus as a stream ([[BusSource]]): each micro-batch is the range
+    * of committed sequence numbers above the last offset, read from the
+    * files the manifest names for it — no directory listing per trigger.
+    * Compaction keeps sequence numbers, so a rewritten file is never
+    * served twice, whether the stream is running or resumed later.
     */
-  def readStream(spark: SparkSession, checkpoint: String): DataFrame = {
-    val floor = EventBus.compactFloor(spark, path, checkpoint)
-    spark.readStream.schema(EventView.schema).parquet(path)
-      .filter(!EventBus.redeliveredByCompaction(floor))
-  }
+  def readStream(spark: SparkSession): DataFrame =
+    spark.readStream.format(classOf[BusSourceProvider].getName).load(path)
 
   /** Append a frame to the bus.
     *
@@ -46,9 +43,13 @@ class EventBus(val path: String) extends Serializable {
     * appended later never sorts at-or-below the on-disk high-water mark
     * (a violating row would be excluded from both the catch-up read and
     * the guarded stream view — silently lost for the attached member),
-    * and [[IngestDedup]]/[[StreamNearDedup]] treat sequence order as
-    * arrival order. [[Publisher.publish]] (the write path that assigns
-    * sequence numbers) maintains it; hand-rolled appends must too.
+    * the stream source hands out the committed max as its offset (a
+    * later row at or below it would never be in a range, so the source
+    * fails the query instead, [[BusSource.NonMonotoneCommit]]), and
+    * [[IngestDedup]]/[[StreamNearDedup]] treat sequence order as
+    * arrival order. Callers of [[Publisher.publish]] assign the
+    * sequence numbers; concurrent publishers must commit their ranges
+    * in order, and hand-rolled appends must keep the rule too.
     *
     * Same-JVM appends to one bus path are serialized: the Hadoop
     * FileOutputCommitter stages every in-flight write of a directory under
@@ -82,10 +83,11 @@ class EventBus(val path: String) extends Serializable {
   /** Partitioned append — the 100 TB layout: one directory level per
     * partition column (e.g. event date, bus name), so time/bus-scoped
     * reads prune whole directories (PartitionFilters) before any file IO.
-    * Readers are unchanged: `read`/`readStream` see partition columns as
-    * ordinary columns. The [[append]] monotonicity precondition applies
-    * here too. NOTE the partition value is usually derived from EVENT
-    * time (`to_date(time)`), which is NOT append-monotone — an
+    * Readers are unchanged: `read` sees partition columns as ordinary
+    * columns, and `readStream` serves the fixed event schema. The
+    * [[append]] monotonicity precondition applies here too. NOTE the
+    * partition value is usually derived from EVENT time
+    * (`to_date(time)`), which is NOT append-monotone — an
     * out-of-order event time legitimately lands a top-sequence row in an
     * older date directory, so nothing may assume the max sequence lives
     * in the lexicographically newest partition ([[maxSequenceFrame]] is
@@ -96,7 +98,7 @@ class EventBus(val path: String) extends Serializable {
       EventBus.appendManifested(df, path, partitionCols)
     }
 
-  /** OFFLINE compaction: rewrite the bus's committed files into about
+  /** Compaction: rewrite the bus's committed files into about
     * `targetFiles` larger ones (per partition-column tuple when
     * `partitionCols` are given), swap them in crash-safely, and rebuild
     * the manifest — the log-lifecycle half the manifest made urgent:
@@ -105,13 +107,15 @@ class EventBus(val path: String) extends Serializable {
     * manifest record chain grow with it. The reference
     * compacts at the segment layer for the same reason.
     *
-    * OFFLINE means NO CONCURRENT READERS: same-JVM probes and appends
-    * are excluded by the per-path lock, but a plain `read`/`readStream`
-    * takes no lock — a batch reader listing mid-swap can see duplicate
-    * rows (new files land before old ones delete; never loss), and a
-    * STREAMING query tracks files by path, so compaction under an
-    * active stream re-delivers the whole bus as "new" files. Run it
-    * like the maintenance window it is.
+    * Compaction keeps every row's `sequence_number`, and a stream
+    * ([[readStream]]) addresses the bus by that offset, so a stream
+    * stopped before `compact` and resumed after it sees no row twice.
+    * What stays OFFLINE is the swap itself: same-JVM probes and appends
+    * are excluded by the per-path lock, but a LIVE stream whose
+    * micro-batch reads a file the swap deletes fails that batch (it
+    * re-runs from its checkpoint on restart), and a batch reader listing
+    * mid-swap can see duplicate rows (new files land before old ones
+    * delete; never loss). Under a live stream use [[compactBelow]].
     *
     * Crash safety: the compacted set is fully staged in a hidden
     * directory FIRST, then an atomic intent marker (staging name + old
@@ -123,29 +127,83 @@ class EventBus(val path: String) extends Serializable {
     * directory.
     */
   def compact(spark: SparkSession, targetFiles: Int,
-      partitionCols: String*): Unit =
+      partitionCols: String*): Unit = {
+    compactSelected(spark, targetFiles, partitionCols, "compact") {
+      (fs, root) =>
+        val qRoot = fs.makeQualified(root).toUri.getPath
+        EventBus.listCommittedFiles(fs, root)
+          .map(EventBus.rootRelative(qRoot, _))
+    }
+    ()
+  }
+
+  /** STREAM-SAFE compaction: compact only files whose manifested max
+    * `sequence_number` is at or below the minimum offset the listed
+    * streams have COMMITTED (each checkpoint's `commits/` and `offsets/`
+    * logs, [[BusSource.committedOffset]]), and leave the tail untouched —
+    * the reference's serve-while-compacting contract (WAL truncation
+    * below the committed offset, server/store/wal/wal.go:195-210).
+    *
+    * A live stream's next micro-batch reads only files holding rows
+    * above its committed offset, so it never reads a file this swap
+    * deletes, and the compacted output (every row at or below that
+    * offset) is never in its range.
+    *
+    * Pass the checkpoint location of EVERY active (or resumable) stream
+    * on this bus: the slowest stream bounds compaction exactly like the
+    * reference's minimum committed offset does. A checkpoint with no
+    * commits yet compacts nothing, and a bus with no trusted manifest
+    * compacts nothing. Batch readers keep the mid-swap caveat
+    * (duplicates at worst, never loss — same as [[compact]]). Returns
+    * the number of files compacted (0 = nothing eligible).
+    */
+  def compactBelow(spark: SparkSession, targetFiles: Int,
+      checkpoints: Seq[String]): Int = {
+    require(checkpoints.nonEmpty, "compactBelow needs >= 1 checkpoint")
+    compactSelected(spark, targetFiles, Seq.empty, "compactBelow") {
+      (fs, root) =>
+        val conf = spark.sparkContext.hadoopConfiguration
+        val committed = checkpoints.map(c => BusSource.committedOffset(
+          new org.apache.hadoop.fs.Path(c).getFileSystem(conf), c))
+        if (committed.exists(_.isEmpty)) Vector.empty
+        else {
+          val floor = committed.flatten.min
+          BusManifest.current(fs, root)
+            .flatMap(EventBus.manifestRecordsAbove(fs, root, _, Long.MinValue))
+            .map(EventBus.filesAbove(_, Long.MinValue)).getOrElse(Vector.empty)
+            .filter(_.max <= floor).map(_.rel)
+        }
+    }
+  }
+
+  /** The body [[compact]] and [[compactBelow]] share: under the append
+    * lock, heal the bus ([[EventBus.prepareCompaction]]), rewrite the
+    * root-relative files `select` names into `targetFiles` staged files,
+    * and swap them in behind one intent marker. Returns the number of
+    * files compacted.
+    */
+  private def compactSelected(spark: SparkSession, targetFiles: Int,
+      partitionCols: Seq[String], op: String)(
+      select: (org.apache.hadoop.fs.FileSystem,
+        org.apache.hadoop.fs.Path) => Seq[String]): Int =
     EventBus.appendLock(path).synchronized {
-      val conf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
-      EventBus.finishCompaction(spark, fs, root) // heal a crashed swap
-      EventBus.sweepOrphanCompactStaging(fs, root)
-      if (!fs.exists(root)) return
-      val old = EventBus.listCommittedFiles(fs, root)
-      if (old.size <= math.max(1, targetFiles)) return
-      val qRoot = fs.makeQualified(root).toUri.getPath
-      val deletes = old.map(EventBus.rootRelative(qRoot, _))
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!EventBus.prepareCompaction(spark, fs, root)) return 0
+      val rels = select(fs, root)
+      if (rels.size <= math.max(1, targetFiles)) return 0
       // compacting a PARTITIONED layout without partitionCols would
       // rewrite partition directories into flat root files (the
       // partition column becomes a data column) and the next
       // appendPartitioned would leave a mixed tree (ADVICE r19) —
       // derive the columns from the existing directory names instead
       val cols =
-        if (partitionCols.nonEmpty) partitionCols.toSeq
-        else EventBus.partitionColsOf("compact", path, deletes)
+        if (partitionCols.nonEmpty) partitionCols
+        else EventBus.partitionColsOf(op, path, rels)
       // eager file index: the read plan resolves to the OLD files before
       // the staging directory exists inside the same root
-      val df = read(spark)
+      val df = spark.read.option("basePath", path).parquet(
+        rels.map(r => new org.apache.hadoop.fs.Path(root, r).toString): _*)
       val stagingName = s".graft-compact-${java.util.UUID.randomUUID}"
       val staging = new org.apache.hadoop.fs.Path(root, stagingName)
       val shaped =
@@ -156,8 +214,9 @@ class EventBus(val path: String) extends Serializable {
         .mode("overwrite").parquet(staging.toString)
       EventBus.compactSwaps.incrementAndGet()
       BusManifest.writeIntent(fs, root,
-        BusManifest.CompactIntent(stagingName, deletes))
+        BusManifest.CompactIntent(stagingName, rels))
       EventBus.finishCompaction(spark, fs, root)
+      rels.size
     }
 
   /** Partition-scoped INCREMENTAL compaction (r20, VERDICT r19 missing
@@ -172,19 +231,16 @@ class EventBus(val path: String) extends Serializable {
     * bounds to the hot directories, and no cross-partition shuffle ever
     * happens (a leaf directory's files are read and rewritten without
     * partition-column reconstruction — the values live in the unchanged
-    * directory name). Same OFFLINE contract as [[compact]]. Returns the
+    * directory name). Same contract as [[compact]]. Returns the
     * number of directories rewritten.
     */
   def compactPartitionDirs(spark: SparkSession, maxFilesPerDir: Int,
       targetFilesPerDir: Int = 1): Int =
     EventBus.appendLock(path).synchronized {
       require(targetFilesPerDir >= 1, "targetFilesPerDir must be >= 1")
-      val conf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
-      EventBus.finishCompaction(spark, fs, root) // heal a crashed swap
-      EventBus.sweepOrphanCompactStaging(fs, root)
-      if (!fs.exists(root)) return 0
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!EventBus.prepareCompaction(spark, fs, root)) return 0
       val qRoot = fs.makeQualified(root).toUri.getPath
       val byDir = EventBus.listCommittedFiles(fs, root)
         .map(EventBus.rootRelative(qRoot, _))
@@ -255,105 +311,6 @@ class EventBus(val path: String) extends Serializable {
         BusManifest.CompactIntent(stagingName, hot.flatMap(_._2)))
       EventBus.finishCompaction(spark, fs, root)
       hot.size
-    }
-
-  /** STREAM-SAFE compaction (r20, VERDICT r19 missing #2): compact only
-    * files every listed stream has fully COMMITTED (its checkpoint's
-    * file-source log, [[StreamCommitLog]]), leave the tail untouched —
-    * the reference's serve-while-compacting contract (WAL truncation
-    * below the committed offset, server/store/wal/wal.go:195-210)
-    * re-expressed for Spark's path-tracking file source.
-    *
-    * Why the offline caveat disappears: a live FileStreamSource never
-    * re-reads a committed file (its seen-map is by path), files in a
-    * PLANNED-but-uncommitted batch are not in the committed set and are
-    * never touched, and the one remaining hazard — the source listing
-    * the compacted OUTPUT as brand-new files and re-delivering their
-    * rows — is closed by an epoch stamp: every output file name carries
-    * `-gce<epoch>` (a per-bus counter bumped under the append lock,
-    * `_graft_compact_epoch`), and every stream read ([[readStream]],
-    * which every [[SubscriptionRunner]] query goes through) filters out
-    * rows whose file epoch is above the epoch its checkpoint was born at
-    * ([[EventBus.redeliveredByCompaction]] — a fresh checkpoint
-    * legitimately serves older compaction outputs as initial load;
-    * anything stamped later is by construction content that stream
-    * already committed).
-    *
-    * Pass the checkpoint location of EVERY active (or resumable) stream
-    * on this bus: the compactable set is the intersection of their
-    * committed logs, so the slowest stream bounds compaction exactly
-    * like the reference's minimum committed offset does. A checkpoint
-    * with no commits yet yields an empty intersection — nothing
-    * compacts. Batch readers keep the mid-swap caveat (duplicates at
-    * worst, never loss — same as [[compact]]). Returns the number of
-    * files compacted (0 = nothing eligible).
-    */
-  def compactBelow(spark: SparkSession, targetFiles: Int,
-      checkpoints: Seq[String]): Int =
-    EventBus.appendLock(path).synchronized {
-      require(checkpoints.nonEmpty, "compactBelow needs >= 1 checkpoint")
-      val conf = spark.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
-      EventBus.finishCompaction(spark, fs, root) // heal a crashed swap
-      EventBus.sweepOrphanCompactStaging(fs, root)
-      if (!fs.exists(root)) return 0
-      val qRoot = fs.makeQualified(root).toUri.getPath
-      val all = EventBus.listCommittedFiles(fs, root)
-      // Bounded intersection (optimization r21, VERDICT r20 #1): the
-      // candidate universe is the bus's CURRENT committed file set, and
-      // each checkpoint's log is streamed against it
-      // ([[StreamCommitLog.committedAmong]] keeps only candidate hits as
-      // it parses), so driver memory is bounded by the live file count —
-      // never by the checkpoints' committed HISTORY, which on a legacy
-      // million-file bus × N checkpoints used to hold every path string
-      // at once. The running set only shrinks, so later checkpoints
-      // stream against an ever-smaller candidate set.
-      var safe: Set[String] = all.map { st =>
-        fs.makeQualified(st.getPath).toUri.getPath }.toSet
-      val cpIt = checkpoints.iterator
-      while (cpIt.hasNext && safe.nonEmpty) {
-        val c = cpIt.next()
-        safe = StreamCommitLog.committedAmong(
-          new org.apache.hadoop.fs.Path(c).getFileSystem(conf), c, safe)
-      }
-      val candidates = all.filter(st =>
-        safe.contains(fs.makeQualified(st.getPath).toUri.getPath))
-      if (candidates.size <= math.max(1, targetFiles)) return 0
-      val rels = candidates.map(EventBus.rootRelative(qRoot, _))
-      // partition layout preserved
-      val cols = EventBus.partitionColsOf("compactBelow", path, rels)
-      val df = spark.read.option("basePath", path)
-        .parquet(candidates.map(_.getPath.toString): _*)
-      val stagingName = s".graft-compact-${java.util.UUID.randomUUID}"
-      val staging = new org.apache.hadoop.fs.Path(root, stagingName)
-      val shaped =
-        if (cols.isEmpty) df.repartition(targetFiles)
-        else df.repartition(targetFiles, cols.map(col): _*)
-      (if (cols.isEmpty) shaped.write
-       else shaped.write.partitionBy(cols: _*))
-        .mode("overwrite").parquet(staging.toString)
-      // bump the epoch, then stamp every staged output with it — the
-      // stream guard keys off the stamp. Epoch-before-intent: a crash
-      // between the two leaves a bumped counter and an invisible staging
-      // dir, never an unstamped swap.
-      val epoch = EventBus.compactionEpoch(fs, root) + 1
-      BusManifest.writeAtomic(fs, EventBus.epochPath(root), epoch.toString)
-      EventBus.listCommittedFiles(fs, staging).foreach { st =>
-        val n = st.getPath.getName
-        val stamped =
-          if (n.endsWith(".parquet"))
-            n.stripSuffix(".parquet") + s"-gce$epoch.parquet"
-          else n + s"-gce$epoch.parquet"
-        if (!fs.rename(st.getPath,
-            new org.apache.hadoop.fs.Path(st.getPath.getParent, stamped)))
-          throw new java.io.IOException(s"epoch stamp rename of $n failed")
-      }
-      EventBus.compactSwaps.incrementAndGet()
-      BusManifest.writeIntent(fs, root,
-        BusManifest.CompactIntent(stagingName, rels))
-      EventBus.finishCompaction(spark, fs, root)
-      candidates.size
     }
 
   /** First offset with stime >= ts per eventlog — QueryOffsetByTime
@@ -448,12 +405,13 @@ object EventBus {
 
   /** One committed file's footer verdict for `sequence_number`: `trusted`
     * = every row group either carries exact int64 stats or provably holds
-    * no values of the column; `hasMax`/`max` = the file-level max when any
-    * values exist. An untrusted file makes its manifest record, and so
-    * the whole bus's LATEST, untrusted (probes fall back to data).
+    * no values of the column; `hasMax`/`max`/`min` = the file-level max
+    * and min when any values exist. An untrusted file makes its manifest
+    * record, and so the whole bus's LATEST, untrusted (probes fall back
+    * to data).
     */
   private final case class FileFooter(
-      trusted: Boolean, hasMax: Boolean, max: Long)
+      trusted: Boolean, hasMax: Boolean, max: Long, min: Long = Long.MaxValue)
 
   /** Concurrent per-directory staging jobs in
     * [[EventBus.compactPartitionDirs]] (one level at a time).
@@ -616,106 +574,43 @@ object EventBus {
   private[streaming] val compactSwaps =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Delete top-level `.graft-compact-*` staging directories that no
-    * intent marker references (caller holds the append lock and has
-    * already run [[finishCompaction]], so a live intent's staging is
-    * gone). A compaction that crashed between staging its output and
-    * writing the intent used to leak the staged bytes forever — the
-    * append-time orphan sweep matched only `.graft-staging-*` names
-    * (ADVICE r20 low). Top-level listing only, never O(bus).
+  /** Heal the bus before a compaction selects its files (caller holds
+    * the append lock): finish a crashed swap, REPLAY a crashed append's
+    * dangling record (its staged files would otherwise be dropped with
+    * the manifest by the swap — committed rows no reader ever sees),
+    * then sweep orphaned staging. False when the bus does not exist.
+    * An irrecoverable manifest throws here, before anything is touched;
+    * the next append rebuilds it.
     */
-  private[streaming] def sweepOrphanCompactStaging(
+  private def prepareCompaction(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Boolean = {
+    finishCompaction(spark, fs, root)
+    if (!fs.exists(root)) return false
+    BusManifest.current(fs, root)
+    sweepOrphanStaging(fs, root)
+    true
+  }
+
+  /** Delete top-level `.graft-compact-*` and `.graft-staging-*`
+    * directories (caller holds the append lock and has already run
+    * [[finishCompaction]] and [[BusManifest.current]], so no live intent
+    * or record references one): a compaction that crashed between
+    * staging its output and writing the intent, or an append that
+    * crashed before its record. Appends never list the root for these —
+    * the next append's staged write overwrites the one name an append
+    * crash can leave — so compaction is where older orphans go.
+    * Top-level listing only, never O(bus).
+    */
+  private def sweepOrphanStaging(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(root) && !fs.exists(BusManifest.intentPath(root)))
-      fs.listStatus(root)
-        .filter(_.getPath.getName.startsWith(".graft-compact-"))
-        .foreach { st => fs.delete(st.getPath, true); () }
-
-  /** Per-bus compaction epoch counter (root-level, underscore-hidden —
-    * survives manifest drops/rebuilds): bumped by every
-    * [[EventBus.compactBelow]], stamped into its output file names
-    * (`-gce<epoch>.parquet`), floored per-checkpoint by
-    * [[compactFloor]]. 0 = never stream-compacted.
-    */
-  private[streaming] def epochPath(
-      root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(root, "_graft_compact_epoch")
-
-  private[streaming] def compactionEpoch(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Long =
-    if (!fs.exists(epochPath(root))) 0L
-    else {
-      val in = fs.open(epochPath(root))
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      txt.trim.toLongOption.getOrElse(
-        throw new java.io.IOException(s"garbled epoch file at $root"))
-    }
-
-  /** TRUE for rows read from a compaction output stamped ABOVE the
-    * reader's floor epoch: content a stream with that floor has already
-    * committed ([[EventBus.compactBelow]]'s precondition), re-listed
-    * under a new path — filter with `!redeliveredByCompaction(floor)`
-    * in every stream plan over a bus. Outputs at-or-below the floor
-    * pass: they predate the checkpoint, so they are its legitimate
-    * initial load. Evaluates per row from `input_file_name()` — inside
-    * codegen, no IO.
-    */
-  private[streaming] def redeliveredByCompaction(
-      floor: Long): org.apache.spark.sql.Column = {
-    val e = regexp_extract(input_file_name(), "-gce(\\d+)\\.parquet$", 1)
-    e =!= lit("") && e.cast("long") > lit(floor)
-  }
-
-  /** The compaction-epoch floor of a stream checkpoint: the bus epoch
-    * at the checkpoint's BIRTH, persisted as
-    * `<checkpoint>/graft_compact_floor` on first use and read back on
-    * every restart.
-    *
-    * When the floor file is absent, the current epoch is adopted ONLY
-    * for a truly FRESH checkpoint (no committed batches yet) — outputs
-    * at-or-below that epoch are its legitimate initial load. A
-    * pre-floor-file checkpoint that already HAS commits adopts floor 0
-    * instead: [[compactBelow]] may have run while that stream was down
-    * ("active or resumable" is explicitly supported), and adopting the
-    * current epoch would let those stamped outputs pass the
-    * [[redeliveredByCompaction]] guard on restart — the whole compacted
-    * history re-delivered as duplicates (ADVICE r20 medium). Floor 0 is
-    * safe for it: by compactBelow's precondition every stamped output
-    * is content that stream already committed, so filtering all stamps
-    * loses nothing. Idempotent; call before starting the query.
-    */
-  private[streaming] def compactFloor(spark: SparkSession, busPath: String,
-      checkpoint: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val cp = new org.apache.hadoop.fs.Path(checkpoint)
-    val cfs = cp.getFileSystem(conf)
-    val fp = new org.apache.hadoop.fs.Path(cp, "graft_compact_floor")
-    if (cfs.exists(fp)) {
-      val in = cfs.open(fp)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      txt.trim.toLongOption.getOrElse(0L)
-    } else {
-      val hasCommits = try {
-        val commits = new org.apache.hadoop.fs.Path(cp, "commits")
-        cfs.exists(commits) && cfs.listStatus(commits)
-          .exists(_.getPath.getName.toLongOption.isDefined)
-      } catch { case _: java.io.IOException => true } // unreadable → safe side
-      val e =
-        if (hasCommits) 0L
-        else {
-          val root = new org.apache.hadoop.fs.Path(busPath)
-          try compactionEpoch(root.getFileSystem(conf), root)
-          catch { case _: java.io.IOException => 0L }
-        }
-      cfs.mkdirs(cp)
-      BusManifest.writeAtomic(cfs, fp, e.toString)
-      e
-    }
-  }
+    fs.listStatus(root)
+      .filter { st =>
+        val n = st.getPath.getName
+        n.startsWith(".graft-compact-") || n.startsWith(".graft-staging-")
+      }
+      .foreach { st => fs.delete(st.getPath, true); () }
 
   /** The bus's manifest commit pointer, replaying a crashed append's
     * dangling record first (under the append lock — reentrant for
@@ -748,49 +643,63 @@ object EventBus {
     } catch { case _: java.io.IOException => None }
 
   /** Absolute paths of every committed file that can hold rows with
-    * `sequence_number > lo`, from the manifest: records are scanned
-    * BACKWARD from LATEST and the scan stops at the first record whose
-    * max is ≤ lo — every earlier record is entirely ≤ that max
-    * (append-monotone sequences) — or at the newest CHECKPOINT record
-    * (r20: a folded record covering every commit at-or-below its id, so
-    * an Earliest read pays ≤ checkpoint-interval + 1 small reads instead
-    * of O(appends)). None = no trusted manifest — caller reads the whole
-    * bus. Some(empty) = trusted manifest, nothing above lo.
+    * `sequence_number > lo`, from the manifest ([[manifestRecordsAbove]]).
+    * None = no trusted manifest — caller reads the whole bus. Some(empty)
+    * = trusted manifest, nothing above lo.
     */
   private[streaming] def manifestFilesAbove(
       spark: SparkSession, path: String, lo: Long): Option[Vector[String]] =
-    manifestLatest(spark, path) match {
-      case Some(l) if l.trusted && l.id > 0 =>
-        try {
-          val root = new org.apache.hadoop.fs.Path(path)
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val out = Vector.newBuilder[String]
-          var id = l.id
-          var stop = false
-          while (id >= 1 && !stop) {
-            val atCkpt = l.ckpt > 0 && id == l.ckpt
-            (if (atCkpt) BusManifest.readCheckpoint(fs, root, id)
-             else BusManifest.readRecord(fs, root, id)) match {
-              case None => return None // gap — degrade to a full read
-              case Some(rec) =>
-                if (!rec.trusted) return None
-                if (rec.hasMax && rec.max <= lo) stop = true
-                else {
-                  rec.files.foreach { fe =>
-                    if (fe.hasMax && fe.max > lo)
-                      out += fs.makeQualified(
-                        new org.apache.hadoop.fs.Path(root, fe.rel)).toString
-                  }
-                  // a checkpoint covers everything at-or-below it — its
-                  // per-file maxima did the lo-filtering above
-                  if (atCkpt) stop = true else id -= 1
-                }
-            }
-          }
-          Some(out.result())
-        } catch { case _: java.io.IOException => None }
-      case _ => None
+    manifestLatest(spark, path).flatMap { l =>
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      manifestRecordsAbove(fs, root, l, lo).map(
+        filesAbove(_, lo).map(qualified(fs, root, _)))
     }
+
+  /** The entries of `recs` whose footer max is > `lo`. */
+  private[streaming] def filesAbove(recs: Vector[BusManifest.Record],
+      lo: Long): Vector[BusManifest.FileEntry] =
+    recs.flatMap(_.files.filter(fe => fe.hasMax && fe.max > lo))
+
+  private[streaming] def qualified(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, fe: BusManifest.FileEntry): String =
+    fs.makeQualified(new org.apache.hadoop.fs.Path(root, fe.rel)).toString
+
+  /** The records under LATEST `l` that can hold rows with
+    * `sequence_number > lo`: records are scanned BACKWARD from LATEST
+    * and the scan stops at the first record whose max is ≤ lo — every
+    * earlier record is entirely ≤ that max (append-monotone sequences) —
+    * or at the newest CHECKPOINT record (r20: a folded record covering
+    * every commit at-or-below its id, so an Earliest read pays ≤
+    * checkpoint-interval + 1 small reads instead of O(appends)). None =
+    * `l` untrusted, or a gap/unreadable record in the chain.
+    */
+  private[streaming] def manifestRecordsAbove(
+      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+      l: BusManifest.Latest, lo: Long): Option[Vector[BusManifest.Record]] =
+    if (!l.trusted || l.id <= 0) None
+    else try {
+      val out = Vector.newBuilder[BusManifest.Record]
+      var id = l.id
+      var stop = false
+      while (id >= 1 && !stop) {
+        val atCkpt = l.ckpt > 0 && id == l.ckpt
+        (if (atCkpt) BusManifest.readCheckpoint(fs, root, id)
+         else BusManifest.readRecord(fs, root, id)) match {
+          case None => return None // gap — degrade to a full read
+          case Some(rec) =>
+            if (!rec.trusted) return None
+            if (rec.hasMax && rec.max <= lo) stop = true
+            else {
+              out += rec
+              // a checkpoint covers everything at-or-below it — callers
+              // filter its files by their per-file maxima
+              if (atCkpt) stop = true else id -= 1
+            }
+        }
+      }
+      Some(out.result())
+    } catch { case _: java.io.IOException => None }
 
   /** The newest committed file on a manifested bus (schema donor for the
     * nothing-above-the-boundary empty frame) plus whether it sits in a
@@ -901,10 +810,8 @@ object EventBus {
     * footer maxima are read while the file set is one-commit small, the
     * record is written atomically, the files rename into place, LATEST
     * advances atomically. See [[BusManifest]] for the crash-window
-    * argument. Footer reads and renames are O(files in THIS commit), but
-    * the orphan-staging sweep lists the bus root on every append, and on
-    * a flat (unpartitioned) bus that listing names every data file — so
-    * each append pays one O(bus files) listing.
+    * argument. Footer reads, renames and metadata calls are O(files in
+    * THIS commit): a healthy append never lists the bus root.
     *
     * A frame whose optimized plan is a `LocalRelation` (every
     * request-sized publish) is already in driver memory, so it is small
@@ -947,32 +854,23 @@ object EventBus {
             l
           }
       }
-    // orphaned staging from a crash BEFORE its record was written is
-    // invisible to every reader; sweep it here (top-level listing only).
-    // After an IRRECOVERABLE manifest, a staging dir may instead belong
-    // to a record we could no longer read — rename to a (still hidden)
-    // quarantine name for the operator rather than deleting data
-    if (fs.exists(root))
+    // an append that crashed BEFORE its record can orphan only the
+    // staging name of the next id, which the staged write below
+    // overwrites — so a healthy append never lists the root (on a flat
+    // bus that listing names every data file). After an IRRECOVERABLE
+    // manifest, a staging dir may instead belong to a record we could
+    // no longer read — rename each to a (still hidden) quarantine name
+    // for the operator rather than deleting data
+    if (quarantineStaging && fs.exists(root))
       fs.listStatus(root)
-        .filter { st =>
-          val n = st.getPath.getName
-          // compact staging is referenced only by an intent marker (never
-          // by a manifest record), and finishCompaction above consumed
-          // any live intent — a surviving .graft-compact-* dir is orphan
-          // garbage from a crash before its intent landed (ADVICE r20)
-          n.startsWith(".graft-staging-") || n.startsWith(".graft-compact-")
-        }
+        .filter(_.getPath.getName.startsWith(".graft-staging-"))
         .foreach { st =>
-          if (quarantineStaging &&
-              st.getPath.getName.startsWith(".graft-staging-")) {
-            val tag = java.util.UUID.randomUUID.toString.take(8)
-            val q = new org.apache.hadoop.fs.Path(root,
-              s".graft-quarantine-$tag-${st.getPath.getName.stripPrefix(".")}")
-            System.err.println(
-              s"[eventbus] quarantining ${st.getPath} -> $q")
-            if (!fs.rename(st.getPath, q)) fs.delete(st.getPath, true)
-            ()
-          } else { fs.delete(st.getPath, true); () }
+          val tag = java.util.UUID.randomUUID.toString.take(8)
+          val q = new org.apache.hadoop.fs.Path(root,
+            s".graft-quarantine-$tag-${st.getPath.getName.stripPrefix(".")}")
+          System.err.println(s"[eventbus] quarantining ${st.getPath} -> $q")
+          if (!fs.rename(st.getPath, q)) fs.delete(st.getPath, true)
+          ()
         }
     val nextId = base.id + 1
     val stagingName = BusManifest.stagingName(nextId)
@@ -1006,12 +904,14 @@ object EventBus {
       (rel, ff)
     }
     val maxes = verdicts.filter(_.hasMax).map(_.max)
+    val trusted = verdicts.forall(_.trusted)
     val rec = BusManifest.Record(nextId, Some(stagingName),
-      verdicts.forall(_.trusted), maxes.nonEmpty,
+      trusted, maxes.nonEmpty,
       if (maxes.nonEmpty) maxes.max else Long.MinValue,
       entries.map { case (rel, ff) =>
         BusManifest.FileEntry(rel, ff.hasMax, ff.max)
-      })
+      },
+      if (trusted) verdicts.filter(_.hasMax).map(_.min).minOption else None)
     BusManifest.writeRecord(fs, root, rec)
     entries.foreach { case (rel, _) =>
       val target = new org.apache.hadoop.fs.Path(root, rel)
@@ -1081,12 +981,14 @@ object EventBus {
         latest.id, None, trusted, hasMax, mx, files.result()))
       BusManifest.writeLatest(fs, root, latest.copy(ckpt = latest.id))
       // sweep everything the fold covered — one listing of the (small)
-      // manifest dir, so leftovers from a crashed earlier fold heal too
+      // manifest dir, so leftovers from a crashed earlier fold heal too.
+      // The newest commit record stays until the next fold: a stream
+      // source reads each new commit's record for its min (BusSource)
       val commitPat = "commit-(\\d+)".r
       val ckptPat = "ckpt-(\\d+)".r
       fs.listStatus(BusManifest.dir(root)).foreach { st =>
         val keep = st.getPath.getName match {
-          case commitPat(n) => n.toLong > latest.id
+          case commitPat(n) => n.toLong >= latest.id
           case ckptPat(n) => n.toLong >= latest.id
           // crashed writeAtomic temps (all manifest writers hold the
           // append lock we hold, so none can be in flight)
@@ -1117,6 +1019,7 @@ object EventBus {
         var trusted = true
         var hasMax = false
         var mx = Long.MinValue
+        var mn = Long.MaxValue
         reader.getFooter.getBlocks.asScala.foreach { block =>
           block.getColumns.asScala
             .find(_.getPath.toDotString == "sequence_number") match {
@@ -1126,15 +1029,18 @@ object EventBus {
                 cc.getStatistics
               if (stats == null ||
                   (stats.isEmpty && block.getRowCount > 0)) trusted = false
-              else if (stats.hasNonNullValue) stats.genericGetMax match {
-                case l: java.lang.Long =>
-                  hasMax = true; if (l > mx) mx = l.longValue
-                case _ => trusted = false // not int64 — schema drifted
-              }
+              else if (stats.hasNonNullValue)
+                (stats.genericGetMax, stats.genericGetMin) match {
+                  case (hi: java.lang.Long, lo: java.lang.Long) =>
+                    hasMax = true
+                    if (hi > mx) mx = hi.longValue
+                    if (lo < mn) mn = lo.longValue
+                  case _ => trusted = false // not int64 — schema drifted
+                }
             // else: all values in the block are null — contributes nothing
           }
         }
-        FileFooter(trusted, hasMax, mx)
+        FileFooter(trusted, hasMax, mx, mn)
       } finally reader.close()
     } catch {
       case _: Exception => FileFooter(trusted = false, hasMax = false,

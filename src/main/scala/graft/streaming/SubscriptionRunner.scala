@@ -526,8 +526,7 @@ object SubscriptionRunner {
       dlqBus: Option[EventBus],
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // readStream carries the stream-safe compaction guard (r20)
-    val source = sourceBus.readStream(spark, checkpoint)
+    val source = sourceBus.readStream(spark)
     // the stateful stage (either or both knobs) dedupes with cross-batch
     // state; clear the knobs so processBatch doesn't re-fold every
     // micro-batch
@@ -1388,9 +1387,9 @@ object SubscriptionRunner {
       checkpoint: String,
       trigger: Trigger): Unit = {
     // a shared group's founders (guard Long.MinValue) take initial load
-    // from the stream, so readStream's compaction guard is what keeps a
-    // re-listed compaction output from re-delivering to every one of them
-    group.queryRef = sourceBus.readStream(spark, checkpoint)
+    // from the stream; its sequence offset keeps a compacted file from
+    // re-delivering to any of them
+    group.queryRef = sourceBus.readStream(spark)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

@@ -381,15 +381,37 @@ class BusManifestSpec extends SparkSpec {
     assert(bus.maxSequenceFrame(spark).head.getLong(0) == 39L)
     assert(EventBus.manifestLatest(spark, dir).exists(_.trusted))
     assert(bus.read(spark).count() == 40L)
-    // an ORDINARY orphan (no irrecoverable manifest) still sweeps
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root,
-      BusManifest.stagingName(99L)))
+    // an ORDINARY orphan (no irrecoverable manifest) — a crash before
+    // the record leaves the NEXT id's staging name — is overwritten by
+    // the next append's staged write, never committed
+    val nextStaging = new org.apache.hadoop.fs.Path(root,
+      BusManifest.stagingName(EventBus.manifestLatest(spark, dir).get.id + 1))
+    fs.mkdirs(nextStaging)
+    val out3 = fs.create(new org.apache.hadoop.fs.Path(nextStaging,
+      "part-orphan.parquet"), true)
+    try out3.write("staged-bytes".getBytes("UTF-8")) finally out3.close()
     bus.append(base.filter(col("sequence_number") >= 40 &&
       col("sequence_number") < 45))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(root,
-      BusManifest.stagingName(99L))), "plain orphans still sweep")
+    assert(!fs.exists(nextStaging), "plain orphans still go")
+    assert(bus.read(spark).count() == 45L)
     assert(fs.listStatus(root)
       .count(_.getPath.getName.startsWith(".graft-quarantine-")) == 1)
+  }
+
+  /** A synthetic stream checkpoint in Spark's on-disk layout whose
+    * batches 0..n-1 committed the bus offsets `offsets` (one source).
+    */
+  private def writeOffsetCk(name: String, offsets: Seq[Long]): String = {
+    val ck = Files.createTempDirectory(name).toString
+    Files.createDirectories(java.nio.file.Paths.get(ck, "commits"))
+    Files.createDirectories(java.nio.file.Paths.get(ck, "offsets"))
+    offsets.zipWithIndex.foreach { case (o, b) =>
+      Files.writeString(java.nio.file.Paths.get(ck, "offsets", b.toString),
+        s"""v1\n{"batchWatermarkMs":0,"batchTimestampMs":1}\n$o""")
+      Files.writeString(
+        java.nio.file.Paths.get(ck, "commits", b.toString), "v1\n{}")
+    }
+    ck
   }
 
   test("compactBelow: the intersection over checkpoints bounds the swap — the slowest stream wins") {
@@ -398,53 +420,35 @@ class BusManifestSpec extends SparkSpec {
     val base = EventView.fromEventsTable(Tables.events(spark, sf))
       .filter(col("sequence_number") < 80)
     val fs = fsOf(dir)
-    // 4 commits of 2 files, tracking each commit's file set
-    val perCommit = (0 until 4).map { i =>
-      val before =
-        if (i == 0) Set.empty[String] else bus.read(spark).inputFiles.toSet
+    // 4 commits of 2 files
+    (0 until 4).foreach { i =>
       bus.append(base.filter(col("sequence_number") >= i * 20 &&
         col("sequence_number") < (i + 1) * 20).repartition(2))
-      bus.read(spark).inputFiles.toSet -- before
     }
-    def uriPath(f: String): String =
-      new org.apache.hadoop.fs.Path(new java.net.URI(f)).toUri.getPath
-    // synthetic checkpoints in Spark's on-disk format: stream A
-    // committed all 4 commits, stream B (the slow one) only the first 2
-    def writeCk(name: String, commits: Seq[Set[String]]): String = {
-      val ck = Files.createTempDirectory(name).toString
-      Files.createDirectories(java.nio.file.Paths.get(ck, "commits"))
-      Files.createDirectories(java.nio.file.Paths.get(ck, "sources", "0"))
-      commits.zipWithIndex.foreach { case (files, b) =>
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(ck, "commits", b.toString), "v1\n{}")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(ck, "sources", "0", b.toString),
-          "v1\n" + files.toSeq.sorted.map(f =>
-            s"""{"path":"file://${uriPath(f)}","timestamp":1,"batchId":$b}""")
-            .mkString("\n"))
+    val root = new org.apache.hadoop.fs.Path(dir)
+    def stats(pred: Long => Boolean) = EventBus.listCommittedFiles(fs, root)
+      .filter { st =>
+        val mx = spark.read.parquet(st.getPath.toString)
+          .agg(max(col("sequence_number"))).head.getLong(0)
+        pred(mx)
       }
-      ck
-    }
-    val ckA = writeCk("mfbelowA", perCommit)
-    val ckB = writeCk("mfbelowB", perCommit.take(2))
-    val tailFiles = (perCommit(2) ++ perCommit(3)).map(uriPath)
-    val tailStats = EventBus.listCommittedFiles(fs,
-      new org.apache.hadoop.fs.Path(dir))
-      .filter(st => tailFiles.contains(
-        st.getPath.toUri.getPath))
       .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
       .toSet
-    // only the 4 files BOTH streams committed compact; the tail is
-    // byte-identical (the serve-while-compacting contract)
+    // stream A committed all 4 commits, stream B (the slow one) only the
+    // first 2 (offset 39); an uncommitted planned batch stays out
+    val ckA = writeOffsetCk("mfbelowA", Seq(19L, 79L))
+    val ckB = writeOffsetCk("mfbelowB", Seq(19L, 39L))
+    Files.writeString(java.nio.file.Paths.get(ckB, "offsets", "2"),
+      "v1\n{}\n79")
+    val tailStats = stats(_ > 39L)
+    val headBefore = stats(_ <= 39L)
+    assert(tailStats.size == 4 && headBefore.size == 4)
+    // only the 4 files at or below BOTH streams' committed offsets
+    // compact; the tail is byte-identical (serve-while-compacting)
     assert(bus.compactBelow(spark, 1, Seq(ckA, ckB)) == 4)
-    val after = EventBus.listCommittedFiles(fs,
-      new org.apache.hadoop.fs.Path(dir))
-    assert(after.filter(st => tailFiles.contains(st.getPath.toUri.getPath))
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
-      .toSet == tailStats, "uncommitted-by-B files must be untouched")
-    val stamped = after.filter(_.getPath.getName.contains("-gce"))
-    assert(stamped.length == 1, "4 committed files -> 1 stamped output")
-    assert(stamped.head.getPath.getName.endsWith("-gce1.parquet"))
+    assert(stats(_ > 39L) == tailStats,
+      "files above B's committed offset must be untouched")
+    assert(stats(_ <= 39L).size == 1, "4 committed files -> 1 output")
     assert(bus.read(spark).count() == base.count())
     assert(bus.read(spark).select("sequence_number").distinct().count()
       == base.count())
@@ -452,6 +456,16 @@ class BusManifestSpec extends SparkSpec {
     // a checkpoint with NO commits forbids everything
     val ckEmpty = Files.createTempDirectory("mfbelowE").toString
     assert(bus.compactBelow(spark, 1, Seq(ckA, ckEmpty)) == 0)
+    // a checkpoint whose committed offset is not a bus offset (Spark's
+    // file source wrote it) is refused, never read as "nothing"
+    val ckFile = writeOffsetCk("mfbelowF", Seq.empty)
+    Files.writeString(java.nio.file.Paths.get(ckFile, "offsets", "0"),
+      "v1\n{}\n{\"logOffset\":0}")
+    Files.writeString(java.nio.file.Paths.get(ckFile, "commits", "0"),
+      "v1\n{}")
+    val e = intercept[IllegalStateException](
+      bus.compactBelow(spark, 1, Seq(ckA, ckFile)))
+    assert(e.getMessage.contains("not a bus sequence offset"), e.getMessage)
   }
 
   test("compact derives partition columns from the layout — no silent flattening") {
@@ -505,6 +519,8 @@ class BusManifestSpec extends SparkSpec {
   }
 
   test("record/LATEST wire format round-trips arbitrary rel paths, maxima, and the ckpt pointer") {
+    // (records also carry an optional commit min; a record written
+    // without the line reads back as unknown — the legacy case below)
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     def forAll[A](g: Gen[A], n: Int)(f: A => Unit): Unit =
@@ -535,8 +551,9 @@ class BusManifestSpec extends SparkSpec {
       hm <- Gen.oneOf(true, false)
       mx <- Gen.choose(-1000000L, Long.MaxValue)
       es <- Gen.choose(0, 5).flatMap(n => Gen.listOfN(n, entry))
+      mn <- Gen.option(Gen.choose(Long.MinValue, Long.MaxValue))
     } yield BusManifest.Record(id, st, tr, hm,
-      if (hm) mx else Long.MinValue, es)
+      if (hm) mx else Long.MinValue, es, mn)
     forAll(record, 150) { r =>
       BusManifest.writeRecord(fs, root, r)
       val back = BusManifest.readRecord(fs, root, r.id)
@@ -614,19 +631,7 @@ class BusManifestSpec extends SparkSpec {
     bus.appendPartitioned(base.filter(col("sequence_number") >= 20)
       .withColumn("d", lit("2024-07-01")).repartition(2), "d")
     // a checkpoint that committed EVERYTHING (both layouts)
-    val files = bus.read(spark).inputFiles.toSet
-    val ck = Files.createTempDirectory("mfmixedck").toString
-    Files.createDirectories(java.nio.file.Paths.get(ck, "commits"))
-    Files.createDirectories(java.nio.file.Paths.get(ck, "sources", "0"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(ck, "commits", "0"), "v1\n{}")
-    def uriPath(f: String): String =
-      new org.apache.hadoop.fs.Path(new java.net.URI(f)).toUri.getPath
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(ck, "sources", "0", "0"),
-      "v1\n" + files.toSeq.sorted.map(f =>
-        s"""{"path":"file://${uriPath(f)}","timestamp":1,"batchId":0}""")
-        .mkString("\n"))
+    val ck = writeOffsetCk("mfmixedck", Seq(39L))
     val before = EventBus.listCommittedFiles(fsOf(dir),
       new org.apache.hadoop.fs.Path(dir))
       .map(st => (st.getPath.toString, st.getLen,
@@ -642,50 +647,102 @@ class BusManifestSpec extends SparkSpec {
         st.getModificationTime)).toSet == before)
   }
 
-  test("compactFloor: a floorless checkpoint WITH commits adopts 0; a fresh one adopts the current epoch") {
-    val dir = Files.createTempDirectory("mffloor").toString
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(dir)
-    fs.mkdirs(root)
-    // bus already stream-compacted twice
-    BusManifest.writeAtomic(fs, EventBus.epochPath(root), "2")
-    // pre-floor-file checkpoint that already has a committed batch: a
-    // compactBelow that ran while it was down stamped outputs with
-    // epoch <= 2; adopting 2 would let them pass the redelivery guard
-    val ckOld = Files.createTempDirectory("mffloorold").toString
-    Files.createDirectories(java.nio.file.Paths.get(ckOld, "commits"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(ckOld, "commits", "0"), "v1\n{}")
-    assert(EventBus.compactFloor(spark, dir, ckOld) == 0L,
-      "checkpoint with commits must adopt floor 0, not the current epoch")
-    // idempotent: persisted and re-read
-    assert(EventBus.compactFloor(spark, dir, ckOld) == 0L)
-    // a truly fresh checkpoint adopts the current epoch (its initial
-    // load legitimately includes the existing compaction outputs)
-    val ckNew = Files.createTempDirectory("mffloornew").toString
-    assert(EventBus.compactFloor(spark, dir, ckNew) == 2L)
-    assert(EventBus.compactFloor(spark, dir, ckNew) == 2L)
-  }
-
   test("orphaned .graft-compact-* staging (crash before intent) sweeps at the next append/compaction") {
     val dir = Files.createTempDirectory("mforphan").toString
     val bus = EventBus(dir)
     val base = EventView.fromEventsTable(Tables.events(spark, sf))
       .filter(col("sequence_number") < 20)
-    bus.append(base)
+    bus.append(base.repartition(2))
     val fs = fsOf(dir)
     val root = new org.apache.hadoop.fs.Path(dir)
-    // a compaction that crashed after staging, before its intent marker
-    val orphan = new org.apache.hadoop.fs.Path(root,
-      ".graft-compact-deadbeef-crashed")
-    fs.mkdirs(orphan)
-    val out = fs.create(new org.apache.hadoop.fs.Path(orphan,
-      "part-stale.parquet"), true)
-    try out.write("staged-bytes".getBytes("UTF-8")) finally out.close()
+    // a compaction that crashed after staging, before its intent marker,
+    // and an append staging dir no record references
+    val orphans = Seq(".graft-compact-deadbeef-crashed",
+      BusManifest.stagingName(7L)).map(new org.apache.hadoop.fs.Path(root, _))
+    orphans.foreach { o =>
+      fs.mkdirs(o)
+      val out = fs.create(new org.apache.hadoop.fs.Path(o,
+        "part-stale.parquet"), true)
+      try out.write("staged-bytes".getBytes("UTF-8")) finally out.close()
+    }
     bus.append(base.withColumn("sequence_number",
-      col("sequence_number") + 20))
-    assert(!fs.exists(orphan),
-      "append must sweep orphaned compact staging (ADVICE r20)")
+      col("sequence_number") + 20).repartition(2))
+    // appends never list the root; the next compaction sweeps both
+    bus.compact(spark, 1)
+    orphans.foreach(o => assert(!fs.exists(o),
+      s"compaction must sweep orphaned staging $o (ADVICE r20)"))
     assert(bus.read(spark).count() == 40L)
   }
+
+  test("compact replays a crashed append's dangling record first: its committed rows survive the swap") {
+    val dir = Files.createTempDirectory("mfcompdangle").toString
+    val bus = EventBus(dir)
+    val base = EventView.fromEventsTable(Tables.events(spark, sf))
+    (0 until 3).foreach { i =>
+      bus.append(base.filter(col("sequence_number") >= i * 10 &&
+        col("sequence_number") < (i + 1) * 10))
+    }
+    // commit 4 as a crash between record-write and file-move leaves it:
+    // record written, file still staged, LATEST at 3
+    val fs = fsOf(dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val stagingName = BusManifest.stagingName(4L)
+    val scratch = Files.createTempDirectory("mfcompdangle2").toString
+    base.filter(col("sequence_number") >= 100 && col("sequence_number") < 111)
+      .coalesce(1).write.mode("overwrite").parquet(scratch)
+    val part = new java.io.File(scratch).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val stagingDir = new org.apache.hadoop.fs.Path(root, stagingName)
+    fs.mkdirs(stagingDir)
+    fs.copyFromLocalFile(new org.apache.hadoop.fs.Path(part.toString),
+      new org.apache.hadoop.fs.Path(stagingDir, part.getName))
+    BusManifest.writeRecord(fs, root, BusManifest.Record(
+      4L, Some(stagingName), trusted = true, hasMax = true, max = 110L,
+      Seq(BusManifest.FileEntry(part.getName, hasMax = true, max = 110L))))
+    bus.compact(spark, 1)
+    assert(bus.read(spark).count() == 41L,
+      "the dangling commit's rows must be replayed, not dropped with the manifest")
+    assert(bus.maxSequenceFrame(spark).head.getLong(0) == 110L)
+    assert(!fs.exists(stagingDir))
+  }
+
+  test("appends never list the bus root: only the first backfill does") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countfs.impl", classOf[CountingLocalFs].getName)
+    val local = Files.createTempDirectory("mfcount").toString
+    val dir = "countfs://" + local
+    val bus = EventBus(dir)
+    val base = EventView.fromEventsTable(Tables.events(spark, sf))
+      .filter(col("sequence_number") < 40).collect()
+    val schema = EventView.fromEventsTable(Tables.events(spark, sf)).schema
+    def slice(i: Int) = spark.createDataFrame(
+      java.util.Arrays.asList(base.filter { r =>
+        val q = r.getLong(0); q >= i * 10 && q < (i + 1) * 10 }: _*), schema)
+    def rootListings: Int =
+      Option(CountingLocalFs.listed.get(local)).map(_.intValue).getOrElse(0)
+    bus.append(slice(0))
+    val afterFirst = rootListings
+    (1 until 4).foreach(i => bus.append(slice(i)))
+    assert(rootListings == afterFirst,
+      s"appends 2-4 listed the bus root ${rootListings - afterFirst} times")
+    assert(bus.read(spark).count() == 40L)
+    assert(bus.maxSequenceFrame(spark).head.getLong(0) == 39L)
+  }
+}
+
+/** The local file system under a test-only `countfs` scheme, counting
+  * `listStatus` calls per path — how a spec sees which directories an
+  * operation lists.
+  */
+class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def getScheme: String = "countfs"
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingLocalFs.listed.merge(f.toUri.getPath, 1, (a, b) => a + b)
+    super.listStatus(f)
+  }
+}
+object CountingLocalFs {
+  val listed = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 }

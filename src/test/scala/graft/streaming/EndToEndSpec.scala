@@ -670,12 +670,10 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("compactBelow under a LIVE shared group: zero re-deliveries, tail untouched, read-back equal") {
-    // the r19 compaction was OFFLINE-only: a streaming source tracks
-    // files by path, so compacting under an active stream re-delivered
-    // the whole bus as "new" files. compactBelow (r20) compacts only
-    // files the checkpoint has COMMITTED and epoch-stamps its outputs;
-    // the runner's in-plan guard drops re-listed stamped content — the
-    // reference's serve-while-compacting contract (wal.go:195-210)
+    // the stream reads by sequence offset, and compactBelow rewrites only
+    // files at or below the checkpoint's COMMITTED offset — the
+    // reference's serve-while-compacting contract (wal.go:195-210): no
+    // compacted row is ever in a later batch's range
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.streaming.Trigger
     val sourceBus = EventBus(tmp("cbsrc"))
@@ -696,7 +694,7 @@ class EndToEndSpec extends SparkSpec {
       { d => CompactBelowE2E.a.add(d.id); Right(()) }
 
     // run 1: founder drains the 6 commits, group stops (checkpoint now
-    // has the committed file log compactBelow keys off)
+    // has the committed offset compactBelow keys off)
     val g1 = SubscriptionRunner.startSharedGroup(
       spark, sourceBus,
       Seq((specA, SubscriptionRunner.Delivery.PerEvent(sinkA))),
@@ -713,8 +711,8 @@ class EndToEndSpec extends SparkSpec {
     assert(sourceBus.read(spark).select("sequence_number").distinct()
       .count() == 60L)
 
-    // tail lands, run 2 restarts on the SAME checkpoint: the re-listed
-    // compacted outputs must NOT re-deliver to the founder
+    // tail lands, run 2 restarts on the SAME checkpoint: the compacted
+    // outputs must NOT re-deliver to the founder
     sourceBus.append(slice(60, 70).repartition(2))
     val g2 = SubscriptionRunner.startSharedGroup(
       spark, sourceBus,
@@ -733,7 +731,7 @@ class EndToEndSpec extends SparkSpec {
           s"(got ${CompactBelowE2E.a.size} deliveries)")
 
       // an Earliest attach serves full history from the COMPACTED files
-      // via catch-up (the guard filters streams, never batch reads)
+      // via catch-up
       val specB = SubscriptionRunner.Spec(Seq.empty, None,
         SubscriptionRunner.Config("sub-cb-b"))
       val sinkB: SubscriptionRunner.Sink =
@@ -744,7 +742,7 @@ class EndToEndSpec extends SparkSpec {
       assert(CompactBelowE2E.b.asScala.toSet == ids(0, 70))
 
       // compact MID-STREAM (live query, both members armed): wait until
-      // the tail commit is in the checkpoint's committed log, then swap
+      // the tail commit is in the checkpoint's committed offset, then swap
       sourceBus.append(slice(70, 80).repartition(2))
       val d2 = System.currentTimeMillis() + 60000
       while (CompactBelowE2E.a.asScala.toSet != ids(0, 80) &&
@@ -779,9 +777,8 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("a raw readStream query across compactBelow: zero re-deliveries without the runner") {
-    // EventBus.readStream carries the compaction guard itself, so a
-    // stream that never goes through the runner must not see re-listed
-    // compaction outputs as new files either
+    // the offset lives in the source itself, so a stream that never
+    // goes through the runner must not see compacted rows again either
     import org.apache.spark.sql.streaming.Trigger
     val bus = EventBus(tmp("rawsrc"))
     val ckpt = tmp("rawck")
@@ -793,7 +790,7 @@ class EndToEndSpec extends SparkSpec {
       bus.append(slice(i * 10L, (i + 1) * 10L).repartition(2)))
     val seen = scala.collection.mutable.ArrayBuffer.empty[String]
     def drain(): Unit = {
-      val q = bus.readStream(spark, ckpt).writeStream
+      val q = bus.readStream(spark).writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -817,11 +814,9 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("a FRESH checkpoint's founders take initial load from pre-birth compaction outputs") {
-    // the floor contract's other half: the epoch guard drops only
-    // outputs stamped AFTER a checkpoint's birth — a group born on an
-    // already-compacted bus must receive the stamped files as its
-    // legitimate initial load, or compaction would silently orphan
-    // history for every future subscriber
+    // a group born on an already-compacted bus must receive the
+    // compacted files as its legitimate initial load, or compaction
+    // would silently orphan history for every future subscriber
     import scala.jdk.CollectionConverters._
     val sourceBus = EventBus(tmp("cfsrc"))
     CompactFreshE2E.a.clear()
@@ -830,7 +825,7 @@ class EndToEndSpec extends SparkSpec {
     (0 until 3).foreach(i => sourceBus.append(events
       .filter(col("sequence_number") >= i * 20 &&
         col("sequence_number") < (i + 1) * 20).repartition(2)))
-    // drain with a throwaway group so a committed file log exists, then
+    // drain with a throwaway group so a committed offset exists, then
     // compact everything it committed
     val specTmp = SubscriptionRunner.Spec(Seq.empty, None,
       SubscriptionRunner.Config("sub-cf-tmp"))
@@ -841,7 +836,7 @@ class EndToEndSpec extends SparkSpec {
     try { assert(g0.query.awaitTermination(60000)) }
     finally if (g0.query.isActive) g0.query.stop()
     assert(sourceBus.compactBelow(spark, 1, Seq(ckTmp)) == 6)
-    assert(sourceBus.read(spark).inputFiles.forall(_.contains("-gce")),
+    assert(sourceBus.read(spark).inputFiles.length == 1,
       "the whole bus is now compaction output")
     // a brand-new group on a brand-new checkpoint: its founder must see
     // every row exactly once via the stream's first batches
@@ -858,7 +853,7 @@ class EndToEndSpec extends SparkSpec {
     assert(CompactFreshE2E.a.size == 60 &&
       CompactFreshE2E.a.asScala.toSet == expect,
       s"fresh founder got ${CompactFreshE2E.a.size} deliveries — " +
-        "pre-birth compaction outputs are initial load, not re-delivery")
+        "compaction outputs are initial load, not re-delivery")
   }
 
   test("SharedGroup.attach is non-blocking: members proceed during a slow catch-up") {

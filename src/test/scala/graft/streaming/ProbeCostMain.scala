@@ -8,14 +8,15 @@ import org.apache.spark.sql.functions._
   *
   * Times the manifest probe (LATEST pointer, O(1)) on buses of growing
   * file counts — the VERDICT r18 #1 claim under test is that the probe
-  * does NOT grow with file count.
+  * does NOT grow with file count — and the stream source's per-trigger
+  * cost (`getOffset` plus building the batch of the newest commit).
   */
 object ProbeCostMain {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.local()
     val reps = 20
     println("[probecost] files(=commits*10)  manifest_ms  " +
-      "delta_files_read  earliest_ms  earliest_record_reads")
+      "delta_files_read  earliest_ms  earliest_record_reads  source_trigger_ms")
     Seq(300, 1000, 3000).foreach { n =>
       val dir = java.nio.file.Files.createTempDirectory(s"probecost$n")
         .toString
@@ -49,8 +50,19 @@ object ProbeCostMain {
         EventBus.manifestFilesAbove(spark, dir, Long.MinValue))
       val eaMs = (System.nanoTime() - t1) / reps / 1e6
       val eaReads = BusManifest.recordReads.get() / reps
+      // one stream trigger with one new commit: the offset from LATEST,
+      // then the batch above the previous commit (its file index is
+      // built over that commit's files only)
+      val source = new BusSource(spark, dir)
+      val prev = Some(org.apache.spark.sql.execution.streaming.runtime
+        .LongOffset(n.toLong - perCommit - 1))
+      def trigger(): Unit = source.getBatch(prev, source.getOffset.get)
+      trigger() // warm
+      val t2 = System.nanoTime()
+      (1 to reps).foreach(_ => trigger())
+      val srcMs = (System.nanoTime() - t2) / reps / 1e6
       println(f"[probecost] $n%5d  $mfMs%11.2f  " +
-        f"$deltaFiles%d  $eaMs%11.2f  $eaReads%d")
+        f"$deltaFiles%d  $eaMs%11.2f  $eaReads%d  $srcMs%11.2f")
     }
     spark.stop()
   }

@@ -17,7 +17,7 @@ class StatefulStreamingSpec extends SparkSpec {
 
     val outTable = "windowed_rates_out"
     val ckpt = tmp("wck")
-    val q = WindowedStats.eventRatesStream(bus.readStream(spark, ckpt))
+    val q = WindowedStats.eventRatesStream(bus.readStream(spark))
       .writeStream.format("memory").queryName(outTable)
       .outputMode("update")
       .option("checkpointLocation", ckpt)
@@ -42,7 +42,7 @@ class StatefulStreamingSpec extends SparkSpec {
     bus.append(view.limit(40)) // at-least-once redelivery of 40 events
 
     val seen = spark.sparkContext.longAccumulator("deduped")
-    val q = bus.readStream(spark, ckpt)
+    val q = bus.readStream(spark)
       .withWatermark("time", "10 days") // state bound; ids inside it dedup
       .dropDuplicates("id")
       .writeStream
@@ -123,7 +123,7 @@ class StatefulStreamingSpec extends SparkSpec {
 
     val latestAcc = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     def runOnce(): Unit = {
-      val q = UserSessions.profilesStream(bus.readStream(spark, ckpt))
+      val q = UserSessions.profilesStream(bus.readStream(spark))
         .writeStream
         .outputMode("update")
         .option("checkpointLocation", ckpt)
@@ -161,7 +161,7 @@ class StatefulStreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       // the bus streams the EventView shape; map back to the raw-column
       // contract (type/data carry event_type/props verbatim)
-      val streamed = bus.readStream(spark, ckpt).select(
+      val streamed = bus.readStream(spark).select(
         col("type").as("event_type"), col("data").as("props"),
         col("time").as("ts"), col("sequence_number").as("event_id"))
       val q = StreamDedup.verdictsStream(streamed)
@@ -209,7 +209,7 @@ class StatefulStreamingSpec extends SparkSpec {
     // foreachBatch; state lives per (type, block, value) in the checkpoint
     val acc = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
     def runOnce(): Unit = {
-      val streamed = bus.readStream(spark, ckpt).select(
+      val streamed = bus.readStream(spark).select(
         col("type").as("event_type"), col("data").as("props"),
         col("time").as("ts"), col("sequence_number").as("event_id"))
       val q = StreamNearDedup.blockMatches(streamed)

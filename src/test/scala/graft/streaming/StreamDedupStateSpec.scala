@@ -35,7 +35,7 @@ class StreamDedupStateSpec extends SparkSpec {
     * (type/data carry event_type/props verbatim).
     */
   private def streamed(bus: EventBus, checkpoint: String): DataFrame =
-    bus.readStream(spark, checkpoint).select(
+    bus.readStream(spark).select(
       col("type").as("event_type"), col("data").as("props"),
       col("time").as("ts"), col("sequence_number").as("event_id"))
 
