@@ -523,8 +523,8 @@ object StreamQueries {
     * monotone appends land with OUT-OF-ORDER partition dates (partition
     * values derive from event time — the newest commit carries the
     * OLDEST date, exactly the shape that made directory pruning unsound),
-    * then the query serves `(lo, boundary]` the way a SharedGroup attach
-    * delta round does — the boundary from the manifest's LATEST pointer
+    * then the query serves `(lo, boundary]` the way a stream batch
+    * reads a range above its offset — the boundary from the manifest's LATEST pointer
     * ([[graft.streaming.EventBus.maxSequenceFrame]], O(1), no listing),
     * the file selection from manifest records past `lo`
     * ([[graft.streaming.EventBus.readAboveSequence]], O(new commits)).
@@ -740,16 +740,16 @@ object StreamQueries {
         }: SubscriptionRunner.Delivery)
       val g1 = SubscriptionRunner.startSharedGroup(
         s, bus, Seq(sub), None, None, ck)
-      try { g1.query.awaitTermination(120000); () }
-      finally if (g1.query.isActive) g1.query.stop()
+      try { g1.awaitTermination(120000); () }
+      finally g1.stop()
       if (bus.compactBelow(s, 2, Seq(ck)) == 0)
         throw new RuntimeException(
           "compactBelow found nothing to swap — committed offset unread?")
       bus.append(ev.filter(col("sequence_number") >= 3 * q))
       val g2 = SubscriptionRunner.startSharedGroup(
         s, bus, Seq(sub), None, None, ck)
-      try { g2.query.awaitTermination(120000); () }
-      finally if (g2.query.isActive) g2.query.stop()
+      try { g2.awaitTermination(120000); () }
+      finally g2.stop()
       import s.implicits._
       BusCompactStreamCapture.a.asScala.toSeq
         .toDF("sequence_number")
@@ -1220,9 +1220,9 @@ object StreamQueries {
   /** Mid-stream attach on the REAL running shared group
     * ([[graft.streaming.SubscriptionRunner.SharedGroup.attach]]): sub-a
     * founds the group and processes the first half of the bus; sub-b
-    * attaches AFTERWARDS with `OffsetReset.Earliest` — its catch-up batch
-    * read must replay every pre-attach signup exactly once — then the
-    * second half lands and both members see it through the shared scan.
+    * attaches AFTERWARDS with `OffsetReset.Earliest` — its own stream's
+    * catch-up must replay every pre-attach signup exactly once — then
+    * the second half lands and both members see it live.
     * The oracle replays both filters over the full range: exactly-once
     * across the attach boundary means neither a missing pre-attach event
     * nor a double delivery survives the hash compare.
@@ -1280,7 +1280,7 @@ object StreamQueries {
           LateAttachCapture.b.size < expectB) &&
           System.currentTimeMillis() < d2) Thread.sleep(50)
         Thread.sleep(500) // a wrong double delivery needs time to surface
-      } finally if (group.query.isActive) group.query.stop()
+      } finally group.stop()
       import s.implicits._
       (LateAttachCapture.a.asScala.toSeq.map(("sub-a", _)) ++
         LateAttachCapture.b.asScala.toSeq.map(("sub-b", _)))
@@ -1428,17 +1428,15 @@ object StreamQueries {
 
   /** ByTime attach on the REAL running shared group — the offset SEEK
     * semantics (block_seek.go:45-86) through
-    * [[graft.streaming.SubscriptionRunner.SharedGroup.attach]], r18's
-    * pending-first registration (ADVICE r17 medium: the r17 shape probed
-    * before registering and could silently lose a qualifying event
-    * appended in the gap). Two attachers:
-    *  - sub-b resets to a MID-BUS timestamp: catch-up serves everything
-    *    from the first offset with time >= T_mid (out-of-order times
-    *    after that offset included — a seek, not a time filter), then
-    *    live appends arrive via the guard;
+    * [[graft.streaming.SubscriptionRunner.SharedGroup.attach]]. Two
+    * attachers:
+    *  - sub-b resets to a MID-BUS timestamp: its stream starts at the
+    *    first offset with time >= T_mid (out-of-order times after that
+    *    offset included — a seek, not a time filter), and live appends
+    *    follow on the same stream;
     *  - sub-c resets to a FUTURE timestamp nothing on the bus satisfies:
-    *    the probe finds no offset, the member is positioned at the log
-    *    END, and it receives exactly the post-attach appends.
+    *    the probe finds no offset, the stream starts at the log END,
+    *    and it receives exactly the post-attach appends.
     * The oracle replays the seek (min event_id with ts >= ts(250) among
     * the pre-attach rows) and both filters over the full range.
     */
@@ -1522,7 +1520,7 @@ object StreamQueries {
           ByTimeAttachCapture.c.size < expectC) &&
           System.currentTimeMillis() < d2) Thread.sleep(50)
         Thread.sleep(500) // a wrong double delivery needs time to surface
-      } finally if (group.query.isActive) group.query.stop()
+      } finally group.stop()
       import s.implicits._
       (ByTimeAttachCapture.a.asScala.toSeq.map(("sub-a", _)) ++
         ByTimeAttachCapture.b.asScala.toSeq.map(("sub-b", _)) ++
@@ -1557,10 +1555,11 @@ object StreamQueries {
     * [[graft.streaming.SubscriptionRunner.resumeSharedGroup]] (the
     * reference persists subscription assignment in its controller,
     * server/controller/trigger/): run 1 founds the group with a roster
-    * file, drains the first half, attaches sub-b from Earliest (catch-up
-    * replays the half), and dies; run 2 rebuilds BOTH members from the
-    * roster alone — no specs re-supplied, no catch-up replayed — and
-    * drains the second half on the same checkpoint. The oracle replays
+    * file, drains the first half, attaches sub-b from Earliest (its
+    * catch-up replays the half), and dies; run 2 rebuilds BOTH members
+    * from the roster alone — no specs re-supplied, nothing replayed —
+    * and drains the second half, sub-a on the shared checkpoint and
+    * sub-b on its own. The oracle replays
     * both filters over the full range: a lost member, a replayed
     * catch-up, or a double delivery all break the hash.
     */
@@ -1594,11 +1593,11 @@ object StreamQueries {
         s, bus, Seq((specA, SubscriptionRunner.Delivery.PerEvent(sinkA))),
         None, None, ckpt, rosterPath = Some(roster))
       try {
-        if (!g1.query.awaitTermination(120000))
+        if (!g1.awaitTermination(120000))
           throw new RuntimeException("roster run 1 did not drain in 120 s")
         g1.attach(specB, SubscriptionRunner.Delivery.PerEvent(sinkB),
           SubscriptionRunner.OffsetReset.Earliest)
-      } finally if (g1.query.isActive) g1.query.stop()
+      } finally g1.stop()
       // the RESTART: second half lands first, then the group self-rebuilds
       // from the roster file — both members must see exactly the new rows
       bus.append(events.filter(col("sequence_number") >= 250))
@@ -1608,9 +1607,9 @@ object StreamQueries {
           if (id == "sub-a") sinkA else sinkB),
         None, None, ckpt)
       try {
-        if (!g2.query.awaitTermination(120000))
+        if (!g2.awaitTermination(120000))
           throw new RuntimeException("roster run 2 did not drain in 120 s")
-      } finally if (g2.query.isActive) g2.query.stop()
+      } finally g2.stop()
       import s.implicits._
       (RosterResumeCapture.a.asScala.toSeq.map(("sub-a", _)) ++
         RosterResumeCapture.b.asScala.toSeq.map(("sub-b", _)))

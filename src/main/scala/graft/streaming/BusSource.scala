@@ -24,7 +24,8 @@ final class BusSourceProvider extends StreamSourceProvider {
   override def createSource(sqlContext: SQLContext, metadataPath: String,
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): Source =
-    new BusSource(sqlContext.sparkSession, parameters("path"))
+    new BusSource(sqlContext.sparkSession, parameters("path"),
+      parameters.get("startAfter").map(_.toLong))
 }
 
 /** An [[EventBus]] as a Structured Streaming source whose offset is the
@@ -47,6 +48,11 @@ final class BusSourceProvider extends StreamSourceProvider {
   * Compaction keeps sequence numbers, so a rewritten file never puts a
   * row back into a later range: no compaction guard is needed.
   *
+  * `startAfter` (None = the bus's beginning) is `lo` of the first batch
+  * of a query with no checkpointed offset; later batches start at the
+  * offset the checkpoint holds, so a query restarted on its checkpoint
+  * neither replays nor skips.
+  *
   * Appends must be monotone ([[EventBus.append]]): a row committed at or
   * below an offset already handed out is in no later range. Each new
   * commit's record carries its min, and a commit at or below the last
@@ -55,15 +61,16 @@ final class BusSourceProvider extends StreamSourceProvider {
   * while it runs; a commit that lands out of order while no query runs,
   * or inside a manifest rebuild, goes unchecked.
   */
-private[streaming] final class BusSource(spark: SparkSession, path: String)
+private[streaming] final class BusSource(spark: SparkSession, path: String,
+    startAfter: Option[Long] = None)
     extends Source with SupportsTriggerAvailableNow {
   private val root = new Path(path)
   private def fs: FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
   // manifest commit id at the last getOffset (-1 = none yet), and the
-  // offset it handed out
+  // offset it handed out (a start offset counts as handed out)
   private var seenCommit = -1L
-  private var handedOut: Option[Long] = None
+  private var handedOut: Option[Long] = startAfter
   // the offset Trigger.AvailableNow fixed at start (None = another trigger)
   private var availableNowEnd: Option[Option[Offset]] = None
 
@@ -118,7 +125,8 @@ private[streaming] final class BusSource(spark: SparkSession, path: String)
       .map(_.longValue)
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val lo = start.map(BusSource.sequenceOf).getOrElse(Long.MinValue)
+    val lo = start.map(BusSource.sequenceOf).orElse(startAfter)
+      .getOrElse(Long.MinValue)
     val hi = BusSource.sequenceOf(end)
     // the commits above lo, less any whose min is above hi (committed
     // after this batch's offset: the next batch's)

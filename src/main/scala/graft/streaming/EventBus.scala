@@ -29,20 +29,22 @@ class EventBus(val path: String) extends Serializable {
     * files the manifest names for it — no directory listing per trigger.
     * Compaction keeps sequence numbers, so a rewritten file is never
     * served twice, whether the stream is running or resumed later.
+    * A query with no checkpointed offset starts above `startAfter`
+    * (None = the bus's beginning): a shared-group attacher's stream
+    * starts at its reset offset ([[SubscriptionRunner.SharedGroup.attach]]).
     */
-  def readStream(spark: SparkSession): DataFrame =
-    spark.readStream.format(classOf[BusSourceProvider].getName).load(path)
+  def readStream(spark: SparkSession,
+      startAfter: Option[Long] = None): DataFrame = {
+    val reader = spark.readStream.format(classOf[BusSourceProvider].getName)
+    startAfter.fold(reader)(reader.option("startAfter", _)).load(path)
+  }
 
   /** Append a frame to the bus.
     *
     * PRECONDITION — monotone sequence numbers: every appended row must
     * carry a `sequence_number` strictly greater than everything already on
     * the bus (the reference's log enforces this by construction — offsets
-    * are assigned at append, block/block.go). Consumers lean on it: a
-    * [[SubscriptionRunner.SharedGroup]] attach boundary assumes a row
-    * appended later never sorts at-or-below the on-disk high-water mark
-    * (a violating row would be excluded from both the catch-up read and
-    * the guarded stream view — silently lost for the attached member),
+    * are assigned at append, block/block.go). Consumers lean on it:
     * the stream source hands out the committed max as its offset (a
     * later row at or below it would never be in a range, so the source
     * fails the query instead, [[BusSource.NonMonotoneCommit]]), and
@@ -55,9 +57,9 @@ class EventBus(val path: String) extends Serializable {
     * FileOutputCommitter stages every in-flight write of a directory under
     * the SAME `_temporary` subdirectory, so two concurrent appends can
     * delete each other's staging on commit (lost files). One driver can
-    * legitimately race two appends here — a [[SubscriptionRunner]]
-    * shared-batch routing and a concurrent [[SubscriptionRunner.SharedGroup.attach]]
-    * catch-up both append to the same retry/DLQ bus — hence the per-path
+    * legitimately race two appends here — the concurrent member
+    * routings of a [[SubscriptionRunner.SharedGroup]], and its attachers'
+    * streams, all append to the same retry/DLQ bus — hence the per-path
     * lock. Cross-driver concurrency needs a unique-staging committer
     * (cloud committers do this); out of scope for the local stand-in.
     *
@@ -321,16 +323,17 @@ class EventBus(val path: String) extends Serializable {
     read(spark).filter(col("time") >= lit(ts))
       .agg(min(col("sequence_number")).as("first_offset"))
 
-  /** The on-disk high-water mark `max(sequence_number)` as a 1-row frame —
-    * the [[SubscriptionRunner.SharedGroup.attach]] boundary probe.
+  /** The committed high-water mark `max(sequence_number)` as a 1-row
+    * frame — the offset a stream would hand out now, and where a
+    * [[SubscriptionRunner.SharedGroup.attach]] with `Latest` (or a
+    * `ByTime` that finds nothing yet) starts its stream.
     *
     * EXACT for any partition scheme. The pre-r18 newest-date-partition
     * pruning was UNSOUND: the partition value is usually derived from
     * EVENT time, which is not append-monotone — an out-of-order event
-    * time puts a top-sequence row in an older date directory, the pruned
-    * probe undershoots the true high-water mark, and an attaching member
-    * permanently loses every already-stream-processed row above it
-    * (ADVICE r17 high).
+    * time puts a top-sequence row in an older date directory, and the
+    * pruned probe undershoots the true high-water mark (ADVICE r17
+    * high).
     *
     * A MANIFESTED bus ([[BusManifest]] — every bus written through
     * [[append]]/[[appendPartitioned]]) answers from the manifest's LATEST
@@ -352,9 +355,10 @@ class EventBus(val path: String) extends Serializable {
     }
 
   /** Read only the files that can hold rows with `sequence_number > lo` —
-    * the attach delta-round read ([[SubscriptionRunner.SharedGroup]]):
-    * a file whose manifested footer max is ≤ `lo` is pruned before any
-    * data IO (exact for any partition scheme, unlike date pruning — see
+    * a batch read of the range a stream would serve above offset `lo`
+    * (the file selection [[BusSource]] shares): a file whose manifested
+    * footer max is ≤ `lo` is pruned before any data IO (exact for any
+    * partition scheme, unlike date pruning — see
     * [[maxSequenceFrame]]). `basePath` keeps partition columns identical
     * to [[read]]. With no trusted manifest (or a gap in its record
     * chain) this is the whole bus: callers still apply the
@@ -366,9 +370,7 @@ class EventBus(val path: String) extends Serializable {
     // manifested bus: walk records BACKWARD from LATEST until one's max
     // falls at-or-under `lo` — sequence numbers are append-monotone, so
     // every earlier record is entirely ≤ that max (O(new commits) small
-    // reads, no directory listing). Covers every COMMITTED row > lo; an
-    // append in flight is above any boundary handed out under the append
-    // lock, so its rows are never this read's to serve.
+    // reads, no directory listing). Covers every COMMITTED row > lo.
     EventBus.manifestFilesAbove(spark, path, lo) match {
       case Some(files) if files.nonEmpty =>
         return spark.read.option("basePath", path).parquet(files: _*)
@@ -474,8 +476,8 @@ object EventBus {
     * mid-commit (or crashed) append's staged parts can neither poison
     * a backfilled manifest (garbled footers read as untrusted) nor
     * OVERSHOOT its high-water mark (complete-but-uncommitted parts read
-    * as trusted maxima — the attach guard would then exclude sequences
-    * that commit later, permanently); hidden files (_SUCCESS, .crc) are
+    * as trusted maxima — a stream offset would then sit above sequences
+    * that commit later, skipping them); hidden files (_SUCCESS, .crc) are
     * skipped the same way. Spark's own file index applies the same rule.
     *
     * Iterative with a cycle guard (ADVICE r18): the recursive form blew
@@ -614,14 +616,12 @@ object EventBus {
 
   /** The bus's manifest commit pointer, replaying a crashed append's
     * dangling record first (under the append lock — reentrant for
-    * callers already holding it, e.g. a boundary probe). None = no
+    * callers already holding it, e.g. a compaction). None = no
     * manifest / unreadable — callers answer from data.
     * The no-dangling-record fast path is LOCK-FREE: LATEST is replaced
     * atomically, and a record landing right after the existence check
-    * belongs to an append whose rows are above any boundary this probe
-    * could correctly hand out anyway (callers that need
-    * appends-frozen-now semantics hold the append lock around the call,
-    * as [[SubscriptionRunner.SharedGroup]]'s boundary() does).
+    * belongs to an append whose rows are above any offset this probe
+    * could correctly hand out anyway.
     */
   private[streaming] def manifestLatest(
       spark: SparkSession, path: String): Option[BusManifest.Latest] =
@@ -927,7 +927,7 @@ object EventBus {
 
   /** Record-chain checkpoint interval: every K-th append folds commits
     * 1..N into one `ckpt-N` record and deletes the folded commit files,
-    * so a backward walk (Earliest attach, donor-set build) reads ≤ K + 1
+    * so a backward walk (an Earliest stream's first batch, donor-set build) reads ≤ K + 1
     * record files and `_graft_manifest/` holds ≤ K + 2 files — instead
     * of both growing O(appends) under per-trigger commits (VERDICT r19
     * #1; the reference's committed-offset WAL compaction,

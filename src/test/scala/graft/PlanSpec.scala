@@ -380,12 +380,12 @@ class PlanSpec extends SparkSpec {
 
   test("attach boundary probe is footer-exact with no data scan — " +
       "out-of-order event-time partitions included") {
-    // SharedGroup.attach's boundary is EventBus.maxSequenceFrame. The
-    // r17 newest-date-partition pruning was UNSOUND (ADVICE r17 high):
-    // date partitions derive from EVENT time, which is not
-    // append-monotone — a later append carrying an OLDER date puts the
-    // top sequence in an old directory and the pruned probe undershoots,
-    // permanently losing rows for the attaching member. The r18 probe
+    // SharedGroup.attach starts a Latest (or nothing-found ByTime)
+    // attacher at EventBus.maxSequenceFrame. The r17
+    // newest-date-partition pruning was UNSOUND (ADVICE r17 high): date
+    // partitions derive from EVENT time, which is not append-monotone —
+    // a later append carrying an OLDER date puts the top sequence in an
+    // old directory and the pruned probe undershoots. The r18 probe
     // answers from parquet footer stats: exact for ANY partition scheme,
     // and metadata-only (no file scan of the bus in the returned plan).
     import graft.streaming.EventBus
@@ -423,8 +423,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("attach delta-round reads prune files below the served boundary") {
-    // SharedGroup.attach's delta rounds read (B_{i-1}, B_i]; a file whose
-    // footer max sequence is ≤ B_{i-1} cannot hold delta rows and must be
+    // a read above offset B (the range a stream batch serves); a file
+    // whose footer max sequence is ≤ B cannot hold those rows and must be
     // pruned before any data IO (VERDICT r17 #6 — footer-based, because
     // date-partition pruning is unsound for event-time partitions)
     import graft.streaming.EventBus

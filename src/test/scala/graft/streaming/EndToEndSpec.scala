@@ -495,8 +495,8 @@ class EndToEndSpec extends SparkSpec {
         System.currentTimeMillis() < d1) Thread.sleep(50)
       assert(LateAttachE2E.a.asScala.toSet == idsOf(batch1, "purchase"))
 
-      // EARLIEST attach mid-stream: the catch-up batch read must deliver
-      // every pre-attach signup exactly once, synchronously
+      // EARLIEST attach mid-stream: the attacher's own stream must catch
+      // up on every pre-attach signup exactly once before attach returns
       val specB = SubscriptionRunner.Spec(
         Seq(graft.model.FilterSpec.Exact(Seq("type" -> "signup"))), None,
         SubscriptionRunner.Config("sub-b"))
@@ -517,9 +517,10 @@ class EndToEndSpec extends SparkSpec {
         SubscriptionRunner.Delivery.PerEvent(sinkC),
         SubscriptionRunner.OffsetReset.Latest).delivered == 0L)
 
-      // BY-TIME attach: an offset SEEK — catch-up starts at the FIRST
-      // offset whose event time is >= ts and runs to the disk boundary;
-      // later out-of-order times are included (block_seek.go semantics)
+      // BY-TIME attach: an offset SEEK — the stream starts at the FIRST
+      // offset whose event time is >= ts and catches up to the committed
+      // max; later out-of-order times are included (block_seek.go
+      // semantics)
       val rows1 = batch1.select("sequence_number", "time", "type", "id")
         .collect().sortBy(_.getLong(0))
       val ts = rows1(rows1.length / 2).getTimestamp(1)
@@ -601,15 +602,13 @@ class EndToEndSpec extends SparkSpec {
       assert(group.attach(specC,
         SubscriptionRunner.Delivery.PerEvent(sinkC),
         SubscriptionRunner.OffsetReset.Latest).delivered == 0L)
-    } finally if (group.query.isActive) group.query.stop()
+    } finally group.stop()
   }
 
   test("SharedGroup restart: an Earliest attacher still sees checkpoint-covered history") {
-    // the r16 review gap: after a group RESTART (fresh driver memory,
-    // existing checkpoint) the watermark is unknown and the stream never
-    // re-emits processed data — the attach boundary must fall back to the
-    // bus's on-disk high-water mark so history reaches the attacher
-    // exactly once via the catch-up read
+    // after a group RESTART (fresh driver memory, existing checkpoint)
+    // the shared stream never re-emits processed data — the attacher's
+    // own stream must still deliver that history exactly once
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.streaming.Trigger
     val sourceBus = EventBus(tmp("rasrc"))
@@ -633,8 +632,8 @@ class EndToEndSpec extends SparkSpec {
     val g1 = SubscriptionRunner.startSharedGroup(
       spark, sourceBus, Seq((specA, SubscriptionRunner.Delivery.PerEvent(sinkA))),
       None, None, ckpt)
-    try { assert(g1.query.awaitTermination(60000)) }
-    finally if (g1.query.isActive) g1.query.stop()
+    try { assert(g1.awaitTermination(60000)) }
+    finally g1.stop()
     assert(RestartAttachE2E.a.asScala.toSet == idsOf(batch1, "purchase"))
 
     // run 2 (RESTART: same checkpoint, fresh group object): attach an
@@ -654,7 +653,7 @@ class EndToEndSpec extends SparkSpec {
         "catch-up must serve checkpoint-covered history on a restarted group")
       assert(RestartAttachE2E.b.asScala.toSet == idsOf(batch1, "signup"))
       // batch2 lands after the attach: both members see it exactly once,
-      // and NOTHING from batch1 is re-delivered (checkpoint + guard)
+      // and NOTHING from batch1 is re-delivered (each stream's checkpoint)
       sourceBus.append(batch2)
       val expectA = idsOf(batch1, "purchase") ++ idsOf(batch2, "purchase")
       val expectB = idsOf(batch1, "signup") ++ idsOf(batch2, "signup")
@@ -666,7 +665,7 @@ class EndToEndSpec extends SparkSpec {
       Thread.sleep(500)
       assert(RestartAttachE2E.a.asScala.toSeq.sorted == expectA.toSeq.sorted)
       assert(RestartAttachE2E.b.asScala.toSeq.sorted == expectB.toSeq.sorted)
-    } finally if (g2.query.isActive) g2.query.stop()
+    } finally g2.stop()
   }
 
   test("compactBelow under a LIVE shared group: zero re-deliveries, tail untouched, read-back equal") {
@@ -699,8 +698,8 @@ class EndToEndSpec extends SparkSpec {
       spark, sourceBus,
       Seq((specA, SubscriptionRunner.Delivery.PerEvent(sinkA))),
       None, None, ckpt)
-    try { assert(g1.query.awaitTermination(60000)) }
-    finally if (g1.query.isActive) g1.query.stop()
+    try { assert(g1.awaitTermination(60000)) }
+    finally g1.stop()
     assert(CompactBelowE2E.a.asScala.toSet == ids(0, 60))
 
     // compact BETWEEN runs: all 12 files are committed → all compact
@@ -730,8 +729,8 @@ class EndToEndSpec extends SparkSpec {
         s"run-2 founder must see the tail once and NOTHING re-delivered " +
           s"(got ${CompactBelowE2E.a.size} deliveries)")
 
-      // an Earliest attach serves full history from the COMPACTED files
-      // via catch-up
+      // an Earliest attach's own stream serves full history from the
+      // COMPACTED files
       val specB = SubscriptionRunner.Spec(Seq.empty, None,
         SubscriptionRunner.Config("sub-cb-b"))
       val sinkB: SubscriptionRunner.Sink =
@@ -741,8 +740,8 @@ class EndToEndSpec extends SparkSpec {
       assert(res.delivered == 70L)
       assert(CompactBelowE2E.b.asScala.toSet == ids(0, 70))
 
-      // compact MID-STREAM (live query, both members armed): wait until
-      // the tail commit is in the checkpoint's committed offset, then swap
+      // compact MID-STREAM (both streams live): wait until the tail commit
+      // is in every checkpoint's committed offset, then swap
       sourceBus.append(slice(70, 80).repartition(2))
       val d2 = System.currentTimeMillis() + 60000
       while (CompactBelowE2E.a.asScala.toSet != ids(0, 80) &&
@@ -750,7 +749,7 @@ class EndToEndSpec extends SparkSpec {
       var compacted = 0
       val d3 = System.currentTimeMillis() + 60000
       while (compacted == 0 && System.currentTimeMillis() < d3) {
-        compacted = sourceBus.compactBelow(spark, 2, Seq(ckpt))
+        compacted = sourceBus.compactBelow(spark, 2, g2.checkpoints)
         if (compacted == 0) Thread.sleep(200)
       }
       assert(compacted > 0, "live-stream compactBelow never found a " +
@@ -773,7 +772,7 @@ class EndToEndSpec extends SparkSpec {
       assert(sourceBus.read(spark).count() == 100L)
       assert(sourceBus.read(spark).select("sequence_number").distinct()
         .count() == 100L)
-    } finally if (g2.query.isActive) g2.query.stop()
+    } finally g2.stop()
   }
 
   test("a raw readStream query across compactBelow: zero re-deliveries without the runner") {
@@ -833,8 +832,8 @@ class EndToEndSpec extends SparkSpec {
     val g0 = SubscriptionRunner.startSharedGroup(spark, sourceBus,
       Seq((specTmp, SubscriptionRunner.Delivery.PerEvent(_ => Right(())))),
       None, None, ckTmp)
-    try { assert(g0.query.awaitTermination(60000)) }
-    finally if (g0.query.isActive) g0.query.stop()
+    try { assert(g0.awaitTermination(60000)) }
+    finally g0.stop()
     assert(sourceBus.compactBelow(spark, 1, Seq(ckTmp)) == 6)
     assert(sourceBus.read(spark).inputFiles.length == 1,
       "the whole bus is now compaction output")
@@ -847,8 +846,8 @@ class EndToEndSpec extends SparkSpec {
     val g1 = SubscriptionRunner.startSharedGroup(spark, sourceBus,
       Seq((spec, SubscriptionRunner.Delivery.PerEvent(sink))),
       None, None, tmp("cfck1"))
-    try { assert(g1.query.awaitTermination(60000)) }
-    finally if (g1.query.isActive) g1.query.stop()
+    try { assert(g1.awaitTermination(60000)) }
+    finally g1.stop()
     val expect = events.select("id").collect().map(_.getString(0)).toSet
     assert(CompactFreshE2E.a.size == 60 &&
       CompactFreshE2E.a.asScala.toSet == expect,
@@ -859,11 +858,11 @@ class EndToEndSpec extends SparkSpec {
   test("SharedGroup.attach is non-blocking: members proceed during a slow catch-up") {
     // VERDICT r16 #1: the r16 attach held the group lock through the
     // whole catch-up read, so an Earliest attach on a deep bus stalled
-    // every member's micro-batches. r17 registers the member PENDING
-    // under a short lock and runs the catch-up outside it — this case
-    // BLOCKS the catch-up mid-delivery on a latch and proves the
-    // founding member still drains fresh appends meanwhile, then checks
-    // the attacher's final delivery set is still exactly-once.
+    // every member's micro-batches. The attacher's catch-up is its own
+    // stream — this case BLOCKS the catch-up mid-delivery on a latch and
+    // proves the founding member still drains fresh appends meanwhile,
+    // then checks the attacher's final delivery set is still
+    // exactly-once.
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.streaming.Trigger
     val sourceBus = EventBus(tmp("nbsrc"))
@@ -924,8 +923,8 @@ class EndToEndSpec extends SparkSpec {
         60, java.util.concurrent.TimeUnit.SECONDS),
         "catch-up never reached the blocking sink")
 
-      // a detach of the mid-attach member must refuse (the cutover would
-      // otherwise arm nothing while attach still reported success)
+      // a detach of the mid-attach member must refuse (attach would
+      // otherwise report a member that no longer exists)
       intercept[IllegalStateException](group.detach("sub-b"))
 
       // fresh events land while the catch-up is frozen: the LIVENESS
@@ -941,16 +940,16 @@ class EndToEndSpec extends SparkSpec {
       assert(t.isAlive,
         "the catch-up must still be in flight when the founder finishes batch2")
 
-      // release the catch-up; attach completes and the attacher's
-      // delivery set is every signup exactly once (batch1 via chunk 1,
-      // batch2 via the delta chunk — appended before the re-probe)
+      // release the catch-up; attach completes having caught up on the
+      // history committed when it started (batch1), and batch2 arrives
+      // live: every signup exactly once
       NonBlockAttachE2E.gate.countDown()
       t.join(120000)
       assert(!t.isAlive, "attach must complete after the gate opens")
       assert(err.get() == null, s"attach failed: ${err.get()}")
+      assert(res.get().delivered == idsOf(batch1, "signup").size.toLong,
+        s"catch-up must cover the history committed at attach: ${res.get()}")
       val expectB = idsOf(batch1, "signup") ++ idsOf(batch2, "signup")
-      assert(res.get().delivered == expectB.size.toLong,
-        s"catch-up chunks must cover both batches: ${res.get()}")
       val d3 = System.currentTimeMillis() + 60000
       while (NonBlockAttachE2E.b.asScala.toSet != expectB &&
         System.currentTimeMillis() < d3) Thread.sleep(50)
@@ -959,20 +958,20 @@ class EndToEndSpec extends SparkSpec {
         "attacher must see every signup exactly once across the boundary")
     } finally {
       NonBlockAttachE2E.gate.countDown() // never leave a task latched
-      if (group.query.isActive) group.query.stop()
+      group.stop()
     }
   }
 
   test("epoch membership: attach/detach register while a latched batch is STILL in flight") {
     // VERDICT r18 #3: the r18 processShared held the group lock for the
-    // whole micro-batch, so attach phase-1 queued behind the longest
+    // whole micro-batch, so an attach queued behind the longest
     // in-flight batch — with a latched slow sink, a new member waited
-    // minutes just to register PENDING. The r19 epoch snapshot bounds
-    // registration at O(1): this case freezes the FOUNDER's sink
-    // mid-batch and proves a full Earliest attach (register + catch-up +
-    // cutover), a Latest attach, and a detach ALL complete while that
-    // batch is still latched — then releases the latch and checks
-    // exactly-once delivery on both sides.
+    // minutes just to register. The epoch snapshot bounds registration
+    // at O(1): this case freezes the FOUNDER's sink mid-batch and proves
+    // a full Earliest attach (register + catch-up), a Latest attach,
+    // and a detach ALL complete while that batch is still latched —
+    // then releases the latch and checks exactly-once delivery on both
+    // sides.
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.streaming.Trigger
     val sourceBus = EventBus(tmp("epsrc"))
@@ -1008,9 +1007,9 @@ class EndToEndSpec extends SparkSpec {
       assert(EpochAttachE2E.batchesDone.get() == 0,
         "the latched batch must still be in flight")
 
-      // full Earliest attach — register, catch-up, cutover — completes
-      // with the batch STILL latched (the r18 shape deadlocked here
-      // until the founder's sink returned)
+      // full Earliest attach — register and catch-up — completes with
+      // the batch STILL latched (the r18 shape deadlocked here until the
+      // founder's sink returned)
       val sinkB: SubscriptionRunner.Sink = { d =>
         EpochAttachE2E.b.add(d.id); Right(())
       }
@@ -1047,7 +1046,7 @@ class EndToEndSpec extends SparkSpec {
         "attacher must see its history exactly once — no stream replay")
     } finally {
       EpochAttachE2E.gate.countDown()
-      if (group.query.isActive) group.query.stop()
+      group.stop()
     }
   }
 
@@ -1055,8 +1054,9 @@ class EndToEndSpec extends SparkSpec {
     // VERDICT r16 #2: the roster was driver memory — a restarted group
     // had to be rebuilt by the caller, and a re-attached Earliest member
     // replayed its entire catch-up. With rosterPath set, attach/detach
-    // persist (subscriptionId, guard, spec, delivery kind) atomically
-    // and resumeSharedGroup rebuilds the group self-contained.
+    // persist (subscriptionId, spec, delivery kind, and an attacher's
+    // start offset and checkpoint) atomically and resumeSharedGroup
+    // rebuilds the group self-contained.
     import scala.jdk.CollectionConverters._
     val sourceBus = EventBus(tmp("rosrc"))
     val ckpt = tmp("rock")
@@ -1085,24 +1085,28 @@ class EndToEndSpec extends SparkSpec {
       spark, sourceBus, Seq((specA, SubscriptionRunner.Delivery.PerEvent(sinkA))),
       None, None, ckpt, rosterPath = Some(roster))
     try {
-      assert(g1.query.awaitTermination(60000))
+      assert(g1.awaitTermination(60000))
       val res = g1.attach(specB, SubscriptionRunner.Delivery.PerEvent(sinkB),
         SubscriptionRunner.OffsetReset.Earliest)
       assert(res.delivered == idsOf(batch1, "signup").size.toLong)
-    } finally if (g1.query.isActive) g1.query.stop()
+    } finally g1.stop()
     assert(RosterResumeE2E.b.asScala.toSet == idsOf(batch1, "signup"))
 
-    // the roster file now records both members, sub-b behind its guard
+    // the roster file now records both members, sub-b as an attacher
     val entries = SubscriptionRunner.loadRoster(roster)
     assert(entries.map(_.spec.config.subscriptionId).toSet == Set("sub-a", "sub-b"))
     assert(entries.forall(_.deliveryKind == "perEvent"))
     assert(entries.find(_.spec.config.subscriptionId == "sub-b")
       .exists(_.spec.config.maxRetryAttempts == 5),
       "config knobs must round-trip through the roster")
+    assert(entries.map(e => e.spec.config.subscriptionId ->
+      e.attached.map(a => (a.after, a.dir.isDefined))).toMap ==
+      Map("sub-a" -> None, "sub-b" -> Some((None, true))),
+      "sub-b is recorded as an Earliest attacher with its own checkpoint")
 
     // run 2 (RESTART, self-contained): resume from the roster — NO
-    // catch-up replays (sub-b's guard + the shared checkpoint cover all
-    // history); batch2 lands and every member sees exactly the new events
+    // replays (sub-b's checkpoint and the shared one cover all history);
+    // batch2 lands and every member sees exactly the new events
     sourceBus.append(batch2)
     val g2 = SubscriptionRunner.resumeSharedGroup(
       spark, sourceBus, roster,
@@ -1112,8 +1116,8 @@ class EndToEndSpec extends SparkSpec {
         case other => fail(s"unexpected subscription $other")
       },
       None, None, ckpt)
-    try { assert(g2.query.awaitTermination(60000)) }
-    finally if (g2.query.isActive) g2.query.stop()
+    try { assert(g2.awaitTermination(60000)) }
+    finally g2.stop()
     Thread.sleep(200)
     assert(RosterResumeE2E.a.asScala.toSeq.sorted ==
       (idsOf(batch1, "purchase") ++ idsOf(batch2, "purchase")).toSeq.sorted,
@@ -1141,9 +1145,9 @@ class EndToEndSpec extends SparkSpec {
       },
       None, None, ckpt)
     try {
-      assert(g4.query.awaitTermination(60000))
+      assert(g4.awaitTermination(60000))
       assert(g4.detach("sub-b"))
-    } finally if (g4.query.isActive) g4.query.stop()
+    } finally g4.stop()
     val afterDetach = SubscriptionRunner.loadRoster(roster)
     assert(afterDetach.map(_.spec.config.subscriptionId) == Seq("sub-a"),
       "detach must rewrite the roster without the member")
@@ -1158,8 +1162,8 @@ class EndToEndSpec extends SparkSpec {
         case other => fail(s"detached member resurrected: $other")
       },
       None, None, ckpt)
-    try { assert(g5.query.awaitTermination(60000)) }
-    finally if (g5.query.isActive) g5.query.stop()
+    try { assert(g5.awaitTermination(60000)) }
+    finally g5.stop()
     Thread.sleep(200)
     assert(RosterResumeE2E.b.asScala.toSet == bBefore,
       "a detached member must see nothing after a roster resume")
@@ -1181,7 +1185,7 @@ class EndToEndSpec extends SparkSpec {
           SubscriptionRunner.Delivery.PerEvent(sinkB),
           SubscriptionRunner.OffsetReset.Latest)
       }
-    } finally if (g3.query.isActive) g3.query.stop()
+    } finally g3.stop()
   }
 
   test("shared-group members keep rate-limit and ordered-mode semantics") {
@@ -1233,8 +1237,8 @@ class EndToEndSpec extends SparkSpec {
         (specPlain, SubscriptionRunner.Delivery.PerEvent(sinkPlain))),
       Some(retrySpool), Some(dlqBus), tmp("rlck"),
       onBatch = r => { results.add(r); () })
-    try { assert(group.query.awaitTermination(120000)) }
-    finally if (group.query.isActive) group.query.stop()
+    try { assert(group.awaitTermination(120000)) }
+    finally group.stop()
     val elapsedSec = (System.nanoTime() - t0) / 1e9
 
     // every member saw every event
@@ -1294,8 +1298,8 @@ class EndToEndSpec extends SparkSpec {
       Seq((specBat, SubscriptionRunner.Delivery.Batched(batchSink, 7)),
         (specPer, SubscriptionRunner.Delivery.PerEvent(perSink))),
       None, None, tmp("sbck"))
-    try { assert(group.query.awaitTermination(60000)) }
-    finally if (group.query.isActive) group.query.stop()
+    try { assert(group.awaitTermination(60000)) }
+    finally group.stop()
 
     val chunks = SharedBatchedE2E.calls.asScala.toSeq
     val inOrder = events.orderBy(col("sequence_number"))
@@ -1350,8 +1354,8 @@ class EndToEndSpec extends SparkSpec {
       Seq((specA, SubscriptionRunner.Delivery.PerEvent(sinkA)),
         (specB, SubscriptionRunner.Delivery.PerEvent(sinkB))),
       None, None, tmp("pmck"))
-    try { assert(group.query.awaitTermination(120000)) }
-    finally if (group.query.isActive) group.query.stop()
+    try { assert(group.awaitTermination(120000)) }
+    finally group.stop()
     assert(ParallelMembersE2E.a.asScala.toSet == allIds)
     assert(ParallelMembersE2E.b.asScala.toSet == allIds)
     assert(ParallelMembersE2E.aSawB.get && ParallelMembersE2E.bSawA.get,
@@ -1414,13 +1418,13 @@ class EndToEndSpec extends SparkSpec {
       assert(StopDrainE2E.bStarted.await(60,
         java.util.concurrent.TimeUnit.SECONDS), "member B never started")
       val t0 = System.nanoTime()
-      g1.query.stop()
+      g1.stop()
       val stopSec = (System.nanoTime() - t0) / 1e9
       assert(stopSec < 60.0,
         f"stop() must not wait out latched sinks (took $stopSec%.1f s)")
     } finally {
       StopDrainE2E.gate.countDown() // never leave executor tasks latched
-      if (g1.query.isActive) g1.query.stop()
+      g1.stop()
     }
     // restart on the same checkpoint: the interrupted batch replays
     // (its offsets never committed) and both members converge on the
@@ -1428,21 +1432,19 @@ class EndToEndSpec extends SparkSpec {
     // documented at-least-once surface, so the assert is set equality
     val g2 = SubscriptionRunner.startSharedGroup(
       spark, sourceBus, members, None, None, ckpt)
-    try { assert(g2.query.awaitTermination(120000)) }
-    finally if (g2.query.isActive) g2.query.stop()
+    try { assert(g2.awaitTermination(120000)) }
+    finally g2.stop()
     assert(StopDrainE2E.a.asScala.toSet == allIds,
       "member A must converge to the full event set across the restart")
     assert(StopDrainE2E.b.asScala.toSet == allIds,
       "member B must converge to the full event set across the restart")
   }
 
-  test("attach: locked cutover delta stays bounded; a non-converging catch-up FAILS instead of stalling") {
-    // VERDICT r17 #4 / ADVICE r17: the r17 catch-up capped its delta loop
-    // at 3 fixed rounds, then served whatever remained UNDER the group
-    // lock — unbounded when the bus append rate outpaces catch-up
-    // throughput. r18 loops until a round's delta lands below the row
-    // threshold (the locked phase then serves at most ~one sub-threshold
-    // round's appends) and FAILS the attach at the round cap.
+  test("attach under a racing appender: every appended row reaches the attacher exactly once") {
+    // the attacher's catch-up covers the history committed when attach
+    // starts, and its stream then continues on the same checkpoint, so
+    // rows appended during and after the catch-up arrive live — no
+    // convergence loop, no row threshold, nothing served twice
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.streaming.Trigger
     val sourceBus = EventBus(tmp("cvsrc"))
@@ -1465,10 +1467,7 @@ class EndToEndSpec extends SparkSpec {
         Thread.sleep(50)
       assert(ConvergenceE2E.a.size == 64)
 
-      // an appender races the attach: continuous single-row appends keep
-      // every delta round non-empty, so with threshold=1 and a 2-round
-      // cap the attach must FAIL (and clean up its pending member)
-      // rather than take an ever-growing delta under the lock
+      // continuous single-row appends race the whole attach
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
       val appended = new java.util.concurrent.atomic.AtomicLong(64)
       val appender = new Thread(() => {
@@ -1478,55 +1477,272 @@ class EndToEndSpec extends SparkSpec {
         }
       })
       appender.start()
-      try {
-        val specB = SubscriptionRunner.Spec(Seq.empty, None,
-          SubscriptionRunner.Config("sub-b"))
-        val slowSink: SubscriptionRunner.Sink = { d =>
-          Thread.sleep(20); ConvergenceE2E.b1.add(d.id); Right(())
-        }
-        val ex = intercept[IllegalStateException] {
+      val res =
+        try {
+          Thread.sleep(500) // the race is on before the attach starts
+          val specB = SubscriptionRunner.Spec(Seq.empty, None,
+            SubscriptionRunner.Config("sub-b"))
+          val slowSink: SubscriptionRunner.Sink = { d =>
+            Thread.sleep(20); ConvergenceE2E.b1.add(d.id); Right(())
+          }
           group.attach(specB, SubscriptionRunner.Delivery.PerEvent(slowSink),
-            SubscriptionRunner.OffsetReset.Earliest,
-            deltaRowThreshold = 1L, maxCatchupRounds = 2)
-        }
-        assert(ex.getMessage.contains("did not converge"))
-      } finally { stop.set(true); appender.join(60000) }
-      // the failed attach leaves no member behind — the id is free again
-      assert(!group.detach("sub-b"))
-
-      // with the appends quiet, the same attach converges; the locked
-      // phase handled at most ~one sub-threshold round's appends
-      val specB2 = SubscriptionRunner.Spec(Seq.empty, None,
-        SubscriptionRunner.Config("sub-b2"))
-      val sinkB2: SubscriptionRunner.Sink = { d =>
-        ConvergenceE2E.b2.add(d.id); Right(())
-      }
+            SubscriptionRunner.OffsetReset.Earliest)
+        } finally { stop.set(true); appender.join(60000) }
       val total = appended.get()
-      val res = group.attach(specB2,
-        SubscriptionRunner.Delivery.PerEvent(sinkB2),
+      assert(res.delivered >= 64L && res.delivered <= total,
+        s"catch-up serves the history committed at attach: $res of $total")
+      val expect = events.filter(col("sequence_number") < total).select("id")
+        .collect().map(_.getString(0)).toSet
+      val d2 = System.currentTimeMillis() + 90000
+      while (ConvergenceE2E.b1.asScala.toSet != expect &&
+        System.currentTimeMillis() < d2) Thread.sleep(100)
+      Thread.sleep(500) // a double delivery needs time to surface
+      assert(ConvergenceE2E.b1.asScala.toSeq.sorted == expect.toSeq.sorted,
+        s"every appended row exactly once: ${ConvergenceE2E.b1.size} " +
+          s"deliveries of $total rows")
+    } finally group.stop()
+  }
+
+  test("detach of a live attacher returns while its sink is latched; its in-flight batch finishes whole") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.Trigger
+    val sourceBus = EventBus(tmp("dlsrc"))
+    val ckpt = tmp("dlck")
+    DetachLatchE2E.reset()
+    val events = EventView.fromEventsTable(Tables.events(spark, sf))
+      .filter(col("type").isin("purchase", "signup"))
+    def slice(lo: Long, hi: Long) = events
+      .filter(col("sequence_number") >= lo && col("sequence_number") < hi)
+    def idsOf(df: org.apache.spark.sql.DataFrame, t: String): Set[String] =
+      df.filter(col("type") === t).select("id").collect()
+        .map(_.getString(0)).toSet
+    val (batch1, batch2, batch3) = (slice(0, 60), slice(60, 120), slice(120, 160))
+    assert(idsOf(batch2, "signup").nonEmpty && idsOf(batch3, "signup").nonEmpty)
+    sourceBus.append(batch1)
+    val specA = SubscriptionRunner.Spec(
+      Seq(graft.model.FilterSpec.Exact(Seq("type" -> "purchase"))), None,
+      SubscriptionRunner.Config("sub-a"))
+    val sinkA: SubscriptionRunner.Sink = { d =>
+      DetachLatchE2E.a.add(d.id); Right(())
+    }
+    val group = SubscriptionRunner.startSharedGroup(
+      spark, sourceBus,
+      Seq((specA, SubscriptionRunner.Delivery.PerEvent(sinkA))),
+      None, None, ckpt, trigger = Trigger.ProcessingTime("200 milliseconds"))
+    try {
+      val specB = SubscriptionRunner.Spec(
+        Seq(graft.model.FilterSpec.Exact(Seq("type" -> "signup"))), None,
+        SubscriptionRunner.Config("sub-b"))
+      // the first LIVE delivery (batch2) latches
+      val sinkB: SubscriptionRunner.Sink = { d =>
+        if (d.sequenceNumber >= 60 &&
+          DetachLatchE2E.claimed.compareAndSet(false, true)) {
+          DetachLatchE2E.entered.countDown()
+          DetachLatchE2E.gate.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          ()
+        }
+        DetachLatchE2E.b.add(d.id); Right(())
+      }
+      val res = group.attach(specB, SubscriptionRunner.Delivery.PerEvent(sinkB),
         SubscriptionRunner.OffsetReset.Earliest)
-      assert(res.delivered == total,
-        s"catch-up must serve the full history: ${res.delivered} != $total")
-      assert(group.lastLockedDeltaRows >= 0 &&
-        group.lastLockedDeltaRows < 4096L,
-        s"locked delta must stay under the threshold: ${group.lastLockedDeltaRows}")
-      assert(ConvergenceE2E.b2.asScala.toSet ==
-        events.filter(col("sequence_number") < total).select("id")
-          .collect().map(_.getString(0)).toSet)
-      assert(ConvergenceE2E.b2.size == total,
-        "exactly-once across the catch-up chunks")
-    } finally if (group.query.isActive) group.query.stop()
+      assert(res.delivered == idsOf(batch1, "signup").size.toLong)
+      sourceBus.append(batch2)
+      assert(DetachLatchE2E.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the attacher's live batch never reached its sink")
+
+      // detach returns with the sink still latched
+      val t0 = System.nanoTime()
+      assert(group.detach("sub-b"))
+      assert((System.nanoTime() - t0) / 1e9 < 10.0, "detach waited on the sink")
+      assert(DetachLatchE2E.gate.getCount == 1L)
+      assert(group.checkpoints == Seq(ckpt), "the detached stream left the group")
+
+      // released, the in-flight batch finishes WHOLE; then the stream
+      // stops and its checkpoint is deleted
+      DetachLatchE2E.gate.countDown()
+      val expectB = idsOf(batch1, "signup") ++ idsOf(batch2, "signup")
+      val attachedDir = new java.io.File(s"$ckpt/attached")
+      val d1 = System.currentTimeMillis() + 60000
+      while ((DetachLatchE2E.b.asScala.toSet != expectB ||
+          Option(attachedDir.list()).exists(_.nonEmpty)) &&
+        System.currentTimeMillis() < d1) Thread.sleep(50)
+      assert(DetachLatchE2E.b.asScala.toSeq.sorted == expectB.toSeq.sorted,
+        "the in-flight batch must finish whole, and exactly once")
+      assert(Option(attachedDir.list()).forall(_.isEmpty),
+        "the detached stream's checkpoint must be deleted")
+
+      // no later append reaches the detached attacher
+      sourceBus.append(batch3)
+      val expectA = idsOf(batch1, "purchase") ++ idsOf(batch2, "purchase") ++
+        idsOf(batch3, "purchase")
+      val d2 = System.currentTimeMillis() + 60000
+      while (DetachLatchE2E.a.asScala.toSet != expectA &&
+        System.currentTimeMillis() < d2) Thread.sleep(50)
+      Thread.sleep(500)
+      assert(DetachLatchE2E.a.asScala.toSet == expectA)
+      assert(DetachLatchE2E.b.asScala.toSet == expectB,
+        "a detached attacher must see nothing after detach")
+
+      // a re-attach of the id starts from its own policy on a fresh stream
+      val sinkB2: SubscriptionRunner.Sink = { d =>
+        DetachLatchE2E.b2.add(d.id); Right(())
+      }
+      val expectAll = expectB ++ idsOf(batch3, "signup")
+      val res2 = group.attach(specB, SubscriptionRunner.Delivery.PerEvent(sinkB2),
+        SubscriptionRunner.OffsetReset.Earliest)
+      assert(res2.delivered == expectAll.size.toLong)
+      assert(DetachLatchE2E.b2.asScala.toSeq.sorted == expectAll.toSeq.sorted)
+    } finally {
+      DetachLatchE2E.gate.countDown()
+      group.stop()
+    }
+  }
+
+  test("an old-format roster (member guards) resumes its attachers with no replay and no loss") {
+    // a roster written before attachers had streams of their own records
+    // each member's guard: every row at or below it was delivered to the
+    // member, and so was every row the shared checkpoint committed after
+    // the member joined. Migration starts each attacher above the larger
+    // of the two — the guard alone replays (guard, committed], the
+    // committed offset alone replays (committed, guard].
+    import scala.jdk.CollectionConverters._
+    val sourceBus = EventBus(tmp("mgsrc"))
+    val ckpt = tmp("mgck")
+    val roster = tmp("mgroster") + "/group.json"
+    MigrateE2E.reset()
+    val events = EventView.fromEventsTable(Tables.events(spark, sf))
+      .filter(col("type").isin("purchase", "signup"))
+    def slice(lo: Long, hi: Long) = events
+      .filter(col("sequence_number") >= lo && col("sequence_number") < hi)
+    def seqs(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("sequence_number").collect().map(_.getLong(0)).toSeq.sorted
+    sourceBus.append(slice(0, 60))
+    val specA = SubscriptionRunner.Spec(
+      Seq(graft.model.FilterSpec.Exact(Seq("type" -> "purchase"))), None,
+      SubscriptionRunner.Config("sub-a"))
+    val sinkA: SubscriptionRunner.Sink = { d =>
+      MigrateE2E.a.add(d.sequenceNumber); Right(())
+    }
+    val g1 = SubscriptionRunner.startSharedGroup(spark, sourceBus,
+      Seq((specA, SubscriptionRunner.Delivery.PerEvent(sinkA))), None, None, ckpt)
+    try assert(g1.awaitTermination(60000)) finally g1.stop()
+    val committed = BusSource.committedOffset(
+      new org.apache.hadoop.fs.Path(ckpt).getFileSystem(
+        spark.sparkContext.hadoopConfiguration), ckpt).get
+    sourceBus.append(slice(60, 120))
+    // sub-b joined below the committed offset, sub-c above it
+    val (guardB, guardC) = (30L, 89L)
+    assert(guardB < committed && guardC > committed)
+    def member(id: String, guard: Long, filters: Seq[graft.model.FilterSpec]) =
+      s"""{"guard":$guard,"delivery":{"kind":"perEvent"},"spec":{""" +
+        s""""subscriptionId":"$id","filters":""" +
+        graft.model.FilterSpec.listToJson(filters).render +
+        s""","transformer":null,"config":{"maxRetryAttempts":32,""" +
+        s""""disableDeadLetter":false,"orderedEvent":false,"rateLimitPerSec":0}}}"""
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(roster).getParent)
+    java.nio.file.Files.write(java.nio.file.Paths.get(roster),
+      Seq(member("sub-a", Long.MinValue, specA.filters),
+        member("sub-b", guardB, Seq.empty),
+        member("sub-c", guardC, Seq.empty))
+        .mkString("""{"members":[""", ",", "]}").getBytes("UTF-8"))
+    assert(SubscriptionRunner.loadRoster(roster).map(_.attached) == Seq(
+      None, Some(SubscriptionRunner.Attached(Some(guardB), None)),
+      Some(SubscriptionRunner.Attached(Some(guardC), None))))
+
+    val sinkB: SubscriptionRunner.Sink = { d =>
+      MigrateE2E.b.add(d.sequenceNumber); Right(())
+    }
+    val sinkC: SubscriptionRunner.Sink = { d =>
+      MigrateE2E.c.add(d.sequenceNumber); Right(())
+    }
+    val g2 = SubscriptionRunner.resumeSharedGroup(spark, sourceBus, roster,
+      {
+        case "sub-a" => SubscriptionRunner.Delivery.PerEvent(sinkA)
+        case "sub-b" => SubscriptionRunner.Delivery.PerEvent(sinkB)
+        case "sub-c" => SubscriptionRunner.Delivery.PerEvent(sinkC)
+        case other => fail(s"unexpected subscription $other")
+      },
+      None, None, ckpt)
+    try assert(g2.awaitTermination(60000)) finally g2.stop()
+    assert(MigrateE2E.a.asScala.toSeq.sorted ==
+      seqs(slice(0, 120).filter(col("type") === "purchase")))
+    assert(MigrateE2E.b.asScala.toSeq.sorted == seqs(slice(committed + 1, 120)),
+      "sub-b resumes above the shared committed offset")
+    assert(MigrateE2E.c.asScala.toSeq.sorted == seqs(slice(guardC + 1, 120)),
+      "sub-c resumes above its guard")
+    // the resume rewrote the roster in the attacher form
+    val migrated = SubscriptionRunner.loadRoster(roster)
+    assert(migrated.map(_.attached.map(_.after)) ==
+      Seq(None, Some(Some(committed)), Some(Some(guardC))))
+    assert(migrated.flatMap(_.attached).forall(_.dir.isDefined))
+  }
+
+  test("each shared group routes on its own member pool: a saturated group cannot queue another's") {
+    // group 1's pool-width members all fail to a DLQ whose append lock
+    // this thread holds, so every routing thread of group 1 blocks in
+    // its DLQ append (a latch on the routing thread, not on an executor
+    // task, so no core is held). Group 2's members must still route.
+    import scala.jdk.CollectionConverters._
+    PoolE2E.reset()
+    val dlq = EventBus(tmp("pooldlq"))
+    val bus1 = EventBus(tmp("poolsrc1"))
+    val bus2 = EventBus(tmp("poolsrc2"))
+    val events = EventView.fromEventsTable(Tables.events(spark, sf))
+      .filter(col("sequence_number") < 8)
+    bus1.append(events)
+    bus2.append(events)
+    val ids = events.select("id").collect().map(_.getString(0)).toSet
+    val width = SubscriptionRunner.MemberPoolWidth
+    val g1Members = (0 until width).map { i =>
+      (SubscriptionRunner.Spec(Seq.empty, None,
+        SubscriptionRunner.Config(s"g1-$i")),
+        SubscriptionRunner.Delivery.PerEvent { _ =>
+          PoolE2E.entered.add(i); Left(400)
+        }: SubscriptionRunner.Delivery)
+    }
+    def g2Member(id: String) =
+      (SubscriptionRunner.Spec(Seq.empty, None, SubscriptionRunner.Config(id)),
+        SubscriptionRunner.Delivery.PerEvent { d =>
+          (if (id == "g2-a") PoolE2E.a else PoolE2E.b).add(d.id); Right(())
+        }: SubscriptionRunner.Delivery)
+    var g1: SubscriptionRunner.SharedGroup = null
+    var g2: SubscriptionRunner.SharedGroup = null
+    try {
+      EventBus.appendLock(dlq.path).synchronized {
+        g1 = SubscriptionRunner.startSharedGroup(spark, bus1, g1Members,
+          None, Some(dlq), tmp("poolck1"))
+        val d1 = System.currentTimeMillis() + 60000
+        while (PoolE2E.entered.asScala.toSet.size < width &&
+          System.currentTimeMillis() < d1) Thread.sleep(50)
+        assert(PoolE2E.entered.asScala.toSet.size == width,
+          "every group-1 member must be routing")
+        g2 = SubscriptionRunner.startSharedGroup(spark, bus2,
+          Seq(g2Member("g2-a"), g2Member("g2-b")),
+          None, None, tmp("poolck2"))
+        val d2 = System.currentTimeMillis() + 30000
+        while ((PoolE2E.a.asScala.toSet != ids || PoolE2E.b.asScala.toSet != ids) &&
+          System.currentTimeMillis() < d2) Thread.sleep(50)
+        assert(PoolE2E.a.asScala.toSet == ids && PoolE2E.b.asScala.toSet == ids,
+          "group 2 must route while group 1's pool is saturated")
+        assert(g2.awaitTermination(30000))
+      }
+      // released, group 1 finishes its DLQ appends
+      assert(g1.awaitTermination(60000))
+      assert(dlq.read(spark).count() == width.toLong * ids.size)
+    } finally {
+      if (g1 != null) g1.stop()
+      if (g2 != null) g2.stop()
+    }
   }
 
   test("ByTime attach never loses a qualifying event appended around the probe") {
-    // ADVICE r17 medium: the r17 attach probed offsetByTime BEFORE
-    // registering the member, so an event with time >= ts appended AND
-    // batch-processed between the probe and the locked registration was
-    // silently lost (guard sat at-or-above its sequence, no catch-up
-    // ran). r18 registers PENDING first and re-probes under the cutover
-    // lock. This case races a qualifying append against the attach: under
-    // EVERY interleaving the event must reach the member exactly once —
-    // via the locked re-probe chunk or via the guarded stream.
+    // ADVICE r17 medium: an attach that positions the member AFTER an
+    // event with time >= ts was appended, while its probe ran before, loses
+    // that event. Attach reads the committed max before the probe: a
+    // qualifying row committed before the probe is found by it, one
+    // committed later sorts above that max. This case races a qualifying
+    // append against the attach: under EVERY interleaving the event must
+    // reach the member exactly once — in its catch-up or live.
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.streaming.Trigger
     val sourceBus = EventBus(tmp("btsrc"))
@@ -1555,7 +1771,7 @@ class EndToEndSpec extends SparkSpec {
         ByTimeRaceE2E.b.add(d.id); Right(())
       }
       val appender = new Thread(() => sourceBus.append(qualifying))
-      appender.start() // race the append against the probe/cutover
+      appender.start() // race the append against the max read and probe
       group.attach(specB, SubscriptionRunner.Delivery.PerEvent(sinkB),
         SubscriptionRunner.OffsetReset.ByTime(ts))
       appender.join(60000)
@@ -1568,7 +1784,7 @@ class EndToEndSpec extends SparkSpec {
           s"whatever the interleaving: ${ByTimeRaceE2E.b.asScala.toSeq}")
       // nothing from the pre-ts history leaked through the reset point
       assert(!ByTimeRaceE2E.b.asScala.exists(_ != "40"))
-    } finally if (group.query.isActive) group.query.stop()
+    } finally group.stop()
   }
 
   test("drain() quiesces a dedup-horizon subscription without hand-rolled polling") {
@@ -1698,8 +1914,36 @@ object ParallelMembersE2E {
 object ConvergenceE2E {
   val a = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val b1 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def reset(): Unit = { a.clear(); b1.clear() }
+}
+
+object DetachLatchE2E {
+  val a = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val b = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val b2 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def reset(): Unit = { a.clear(); b1.clear(); b2.clear() }
+  @volatile var claimed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var gate = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    a.clear(); b.clear(); b2.clear()
+    claimed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    entered = new java.util.concurrent.CountDownLatch(1)
+    gate = new java.util.concurrent.CountDownLatch(1)
+  }
+}
+
+object MigrateE2E {
+  val a = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+  val b = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+  val c = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+  def reset(): Unit = { a.clear(); b.clear(); c.clear() }
+}
+
+object PoolE2E {
+  val entered = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+  val a = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val b = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def reset(): Unit = { entered.clear(); a.clear(); b.clear() }
 }
 
 object StopDrainE2E {

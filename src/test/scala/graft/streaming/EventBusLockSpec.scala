@@ -49,8 +49,8 @@ class EventBusLockSpec extends SparkSpec {
   test("footer probe ignores files staged under a hidden directory") {
     // a mid-commit (or crashed) append leaves parts under the
     // committer's `_temporary`: complete-but-uncommitted files must not
-    // OVERSHOOT the backfilled high-water mark (the attach guard would
-    // then exclude sequences that commit later, permanently), and a
+    // OVERSHOOT the backfilled high-water mark (a stream offset would
+    // then sit above sequences that commit later, skipping them), and a
     // garbled staged footer must not poison the manifest
     val dir = Files.createTempDirectory("busstg").toString
     val bus = EventBus(dir)

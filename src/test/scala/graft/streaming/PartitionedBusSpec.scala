@@ -9,7 +9,7 @@ import java.nio.file.Files
   * transparent to every reader: the streaming source reads through the
   * fixed CE schema (the date partition column is extra metadata, not
   * payload), batch readers see the partition column as an ordinary
-  * column, and the attach boundary probe prunes to the newest day
+  * column, and the high-water-mark probe is exact whatever the day
   * (PlanSpec pins that plan). This spec pins the delivery path.
   */
 class PartitionedBusSpec extends SparkSpec {

@@ -54,9 +54,7 @@ class SubscriptionRunnerSpec extends SparkSpec {
 
   test("closed books: routeless failures land in undeliverable, sums equal the input") {
     // no retry bus, no DLQ (the bus-less caller shape): failures were
-    // counted NOWHERE pre-r18, so the audit under-read the input and the
-    // attach convergence accounting with a failing sink read near-zero
-    // rows for rounds that handled thousands
+    // counted NOWHERE pre-r18, so the audit under-read the input
     val sink: SubscriptionRunner.Sink = { d =>
       if (d.sequenceNumber % 3 == 0) Left(503) else Right(())
     }
